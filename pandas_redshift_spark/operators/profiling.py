@@ -51,12 +51,12 @@ def _profile_oracle() -> str:
 def profile_table_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-column table profile (rows / nulls / distinct / min / max)
     — the first query any pipeline runs against an unfamiliar 100 TB
-    table.  ONE scan computes every column's aggregates side by side
-    (all mergeable, so partial aggregation collapses them map-side);
-    the per-column report rows then unpivot from the single 1-row
-    frame with one stack() generator, not per-column rescans or a
-    union chain.  min/max cast to string so one frame profiles
-    heterogeneous column types.
+    table.  A union of two branches over disjoint column subsets:
+    the numeric columns and the string columns each get their own
+    scan (pruned to that subset), one ``inline`` Expand to (column,
+    value) pairs, a hash aggregate that dedupes the values, and a
+    per-column finishing aggregate that emits one report row per
+    column.  min/max cast to string so both branches share one schema.
 
     Plan note (round-5 rewrite): the r4 shape — N ``countDistinct``
     columns plus ``min/max(string)`` in ONE agg — planned as an

@@ -5,7 +5,7 @@ Where the reference moves data pandas -> CSV-in-memory -> single S3
 object -> Redshift COPY over one socket (reference
 ``pandas_redshift/core.py:120-144,220-304``), the bridge moves it as a
 distributed write: Arrow-ingest to a Spark DataFrame, task-parallel
-columnar output, atomic overwrite via Spark's commit protocol.  No
+columnar output through Spark's commit protocol.  No
 module globals (reference core.py:52-63) — all state lives on one
 :class:`SparkRedshiftBridge` object.
 
@@ -23,9 +23,15 @@ from dataclasses import dataclass, field
 from typing import Any
 
 import pandas as pd
+from pandas.api.types import is_float_dtype, is_integer_dtype
 from pyspark.sql import DataFrame, SparkSession
 
-from pandas_redshift_spark.plans.layout import apply_layout
+from pandas_redshift_spark.plans.layout import (
+    ZORDER_COL,
+    apply_layout,
+    sortkey_columns,
+    zorder_codes,
+)
 from pandas_redshift_spark.sources.schema import (
     apply_validated_names,
     build_create_table_ddl,
@@ -254,17 +260,34 @@ class SparkRedshiftBridge:
         verbose: bool = True,
         **kwargs: Any,
     ) -> None:
-        """Load pipeline: validate names -> (infer types) -> single
-        atomic distributed write.  Replaces the reference's 4-step
-        staged load (CSV -> S3 put_object -> DROP/CREATE -> COPY,
-        core.py:289-304) and its non-atomicity hazard: Spark's
-        mode('overwrite') commits or leaves the old table, never an
-        empty shell."""
+        """Load pipeline: validate names -> (infer types) -> one
+        distributed write, in place of the reference's 4-step staged
+        load (CSV -> S3 put_object -> DROP/CREATE -> COPY,
+        core.py:289-304).
+
+        The overwrite is not atomic.  In local-catalog mode it is v1
+        ``saveAsTable(mode="overwrite")``, which drops the existing
+        table before the job writes: a load that fails mid-job leaves
+        no table at all, like the reference's DROP-then-COPY (see
+        ROADMAP.md, "Make failed loads safe").
+
+        An interleaved ``sortkey`` over two or more integer/float
+        columns of a pandas frame gets its Morton key from
+        :func:`zorder_codes` on the driver, shipped as one extra int64
+        column through the Arrow ingest and dropped before the save;
+        any other interleaved load builds it with ``zorder_key``."""
         self._check_open()
+        zorder = False
         if isinstance(data_frame, pd.DataFrame):
             if index:
                 data_frame = data_frame.reset_index()
-            validate_column_names(data_frame.columns)
+            names = validate_column_names(data_frame.columns)
+            if sort_interleaved and not self.jdbc_options:
+                zcols = _numeric_zorder_columns(data_frame, names, sortkey)
+                if zcols:
+                    data_frame = data_frame.copy(deep=False)
+                    data_frame[ZORDER_COL] = zorder_codes(data_frame, zcols)
+                    zorder = True
             sdf = self.spark.createDataFrame(data_frame)
             sdf = apply_validated_names(sdf)
         else:
@@ -295,6 +318,11 @@ class SparkRedshiftBridge:
                 if layout:
                     writer = writer.option("createTableOptions", layout)
             writer.mode(mode).save()
+        elif zorder:
+            out = apply_layout(
+                sdf, diststyle=diststyle, distkey=distkey, sortkey=ZORDER_COL
+            )
+            out.drop(ZORDER_COL).write.mode(mode).saveAsTable(_catalog_name(table_name))
         else:
             out = apply_layout(
                 sdf,
@@ -537,6 +565,27 @@ def _catalog_name(table_name: str) -> str:
     # 'schema.table' strings are kept; Spark catalogs accept the same
     # two-part shape once the database exists.
     return table_name
+
+
+def _numeric_zorder_columns(
+    frame: pd.DataFrame, names: list[str], sortkey: str
+) -> list | None:
+    """The ``frame`` columns behind an interleaved ``sortkey`` when the
+    driver can build its Morton key: two or more keys, each matching a
+    validated column name case-insensitively (as Spark resolves them)
+    with an integer or float dtype, nullable ones included and bool
+    excluded.  None sends the load down the ``zorder_key`` path."""
+    by_name = {n.lower(): c for n, c in zip(names, frame.columns)}
+    keys = sortkey_columns(sortkey)
+    if len(keys) < 2 or len(by_name) < len(names) or ZORDER_COL in by_name:
+        return None
+    cols = [by_name.get(k.lower()) for k in keys]
+    if all(
+        c is not None and (is_integer_dtype(frame[c]) or is_float_dtype(frame[c]))
+        for c in cols
+    ):
+        return cols
+    return None
 
 
 def _layout_create_options(

@@ -329,9 +329,13 @@ class _scoped_state_confs:
       per side); format v3 (Spark 4, RocksDB-only) folds them into
       ONE store with virtual column families — 4x fewer store
       opens/commits/changelog uploads per batch, same join state
-      machine.  Safe to opt in per drain because every drain starts
-      from a fresh uuid checkpoint (the version is baked into a
-      checkpoint at first batch; there is no cross-run state here).
+      machine.  Safe to set per drain even when a drain resumes an
+      existing checkpoint (``run_to_files`` takes a caller's
+      ``checkpoint_dir`` or reuses ``out_dir + "_ckpt"``): the join
+      state format is one of the confs Spark records in the
+      checkpoint's offset-log metadata (``OffsetSeqMetadata``) and
+      restores from there on restart, so a checkpoint written with
+      another version keeps it.
     (``sessionWindow.merge.sessions.in.local.partition`` was A/B'd
     for the session drain and NOT adopted: interleaved min-of-5 at
     10x data measured the map-side pre-merge pass costing slightly

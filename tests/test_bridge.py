@@ -5,9 +5,15 @@ README.md:99-110), CSV staging round-trip, close semantics."""
 
 from __future__ import annotations
 
-import pandas as pd
-import pytest
+import uuid
 
+import numpy as np
+import pandas as pd
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql.readwriter import DataFrameWriter
+
+from pandas_redshift_spark.plans.layout import ZORDER_COL, zorder_codes
 from pandas_redshift_spark.sources.bridge import connect
 from pandas_redshift_spark.sources.schema import ReservedWordError
 
@@ -16,7 +22,7 @@ from pandas_redshift_spark.sources.schema import ReservedWordError
 def bridge(spark):
     b = connect(spark)
     yield b
-    for t in ("nba_shots", "t_ctas", "t_roundtrip", "t_layout", "t_zorder"):
+    for t in ("nba_shots", "t_ctas", "t_roundtrip", "t_layout", "t_zorder", "t_zorder_spark"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
@@ -214,6 +220,101 @@ def test_interleaved_sortkey_zorders(bridge):
     pdf = pd.DataFrame({"a": list(range(20)), "b": list(range(19, -1, -1))})
     bridge.write_table(pdf, "t_zorder", sortkey="a,b", sort_interleaved=True)
     assert bridge.sql("SELECT count(*) AS n FROM t_zorder").first()["n"] == 20
+
+
+def _jobs_before_save(spark, monkeypatch, load) -> tuple[int, int]:
+    """Run ``load`` under a fresh job group; return the number of Spark
+    jobs it had started when it called ``saveAsTable``, and in total."""
+    sc = spark.sparkContext
+    group = f"zorder-load-{uuid.uuid4().hex}"
+    at_save = []
+    save = DataFrameWriter.saveAsTable
+
+    def spy(self, *args, **kwargs):
+        at_save.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        return save(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "saveAsTable", spy)
+    sc.setJobGroup(group, "interleaved load")
+    try:
+        load()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    (jobs,) = at_save
+    return jobs, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _zorder_frame(rows: int = 2000) -> pd.DataFrame:
+    rng = np.random.default_rng(7)
+    clock = np.round(rng.uniform(0, 24, rows), 1)
+    clock[::17] = np.nan
+    return pd.DataFrame(
+        {
+            "Id": np.arange(rows, dtype=np.int64),
+            "Qty": rng.integers(-500, 500, rows).astype(np.int32),
+            "Shot Clock": clock,
+            "city": rng.choice(["Austin", "Boston"], rows),
+        }
+    )
+
+
+def test_interleaved_pandas_load_builds_key_on_driver(bridge, spark, monkeypatch):
+    """A numeric interleaved sortkey on a pandas frame: mixed-case and
+    whitespace names resolve against the validated names, no Spark job
+    runs before the save (no min/max job), every written file is in
+    Morton order of the frame's key, and the key column is not kept."""
+    pdf = _zorder_frame()
+    jobs, total = _jobs_before_save(
+        spark,
+        monkeypatch,
+        lambda: bridge.write_table(
+            pdf, "t_zorder", sortkey='Qty, "Shot Clock"', sort_interleaved=True
+        ),
+    )
+    assert jobs == 0 and total > 0
+
+    table = spark.table("t_zorder")
+    assert ZORDER_COL not in table.columns
+    assert sorted(table.columns) == ['"shot clock"', "city", "id", "qty"]
+    key_of = dict(zip(pdf["Id"], zorder_codes(pdf, ["Qty", "Shot Clock"])))
+    rows = 0
+    for path in table.inputFiles():
+        part = pq.read_table(path.removeprefix("file:"))
+        assert ZORDER_COL not in part.column_names
+        keys = [key_of[i] for i in part.column("id").to_pylist()]
+        assert keys == sorted(keys), path
+        rows += part.num_rows
+    assert rows == len(pdf)
+    back = bridge.read_sql('SELECT id, qty, `"shot clock"` AS clock FROM t_zorder').sort_values("id")
+    assert back["qty"].tolist() == pdf["Qty"].tolist()
+    assert back["clock"].isna().tolist() == pdf["Shot Clock"].isna().tolist()
+
+
+@pytest.mark.parametrize("sortkey", ["ts,qty", "qty,code"])
+def test_interleaved_non_numeric_key_takes_spark_path(bridge, spark, monkeypatch, sortkey):
+    """A timestamp or string sortkey column keeps the zorder_key path
+    (its eager min/max jobs run before the save) and round-trips."""
+    rng = np.random.default_rng(3)
+    pdf = pd.DataFrame(
+        {
+            "qty": rng.integers(0, 100, 300),
+            "ts": np.datetime64("2024-01-01", "us")
+            + rng.integers(0, 10**12, 300).astype("timedelta64[us]"),
+            "code": rng.integers(0, 1000, 300).astype(str),
+        }
+    )
+    jobs, _ = _jobs_before_save(
+        spark,
+        monkeypatch,
+        lambda: bridge.write_table(pdf, "t_zorder_spark", sortkey=sortkey, sort_interleaved=True),
+    )
+    assert jobs > 0
+    back = bridge.read_sql("SELECT * FROM t_zorder_spark").sort_values(["qty", "ts", "code"])
+    want = pdf.sort_values(["qty", "ts", "code"])
+    assert back["qty"].tolist() == want["qty"].tolist()
+    assert back["ts"].tolist() == want["ts"].tolist()
+    assert back["code"].tolist() == want["code"].tolist()
 
 
 def test_close_blocks_use(spark):

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import importlib.util
 import os
+import sys
 
 import duckdb
 import pandas as pd
@@ -107,3 +108,24 @@ def test_nullable_int_chunk_dtype_invariance() -> None:
     xb, yb = ds.row_hash_sum(as_float_with_null.copy())
     xc, yc = ds.row_hash_sum(one_chunk_nullable.copy())
     assert (xa + xb) == xc and (ya + yb) % (1 << 128) != yc
+
+
+def test_digest_pool_prewarm_starts_every_worker(monkeypatch) -> None:
+    """start_digest_pool must hand back a pool whose ``procs`` workers
+    are all live before the first digest chunk is submitted — no-op
+    warm-up tasks let one idle worker absorb every submit."""
+    import multiprocessing
+
+    # spawned workers unpickle the warm-up task by module name
+    monkeypatch.syspath_prepend(os.path.join(REPO, "tools"))
+    import driver_sim
+
+    before = {p.pid for p in multiprocessing.active_children()}
+    ex = driver_sim.start_digest_pool(3)
+    try:
+        workers = {p.pid for p in multiprocessing.active_children()} - before
+        assert len(workers) == 3
+        assert workers == {p.pid for p in ex._processes.values()}
+    finally:
+        ex.shutdown(wait=True)
+        sys.modules.pop("driver_sim", None)

@@ -5,7 +5,11 @@ and the multimodal UDF's byte_mean (excluded from the SQL oracle)."""
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 import pyspark.sql.functions as F
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
 from pandas_redshift_spark.operators.aggregation import agg_approx_count_distinct
 from pandas_redshift_spark.operators.dedup import (
@@ -534,6 +538,78 @@ def test_zorder_key_matches_pure_python_interleave(spark):
 
     for (x, y), z in got.items():
         assert z == py_z(x, y), f"({x},{y}): {z} != {py_z(x, y)}"
+
+
+_ZORDER_DTYPES = ("int32", "int64", "float64", "Int64", "Float64")
+_INT_RANGE = {"int32": (-(2**31), 2**31 - 1)}
+
+
+@st.composite
+def _zorder_key_column(draw, rows: int) -> pd.Series:
+    """One numeric key column: plain or nullable ints, floats with
+    NaN/None/±inf, negatives; sometimes constant or all-null.  In a
+    nullable ``Float64`` column NaN stays a value next to the nulls."""
+    dtype = draw(st.sampled_from(_ZORDER_DTYPES))
+    nullable = dtype in ("float64", "Int64", "Float64")
+    lo, hi = _INT_RANGE.get(dtype, (-(2**63), 2**63 - 1))
+    if dtype in ("float64", "Float64"):
+        value = st.one_of(
+            st.floats(allow_nan=True, allow_infinity=True),
+            st.sampled_from([np.nan, np.inf, -np.inf, -0.0, -1.5]),
+        )
+    else:
+        value = st.integers(lo, hi)
+    if nullable:
+        value = st.one_of(st.none(), value)
+    shape = draw(st.sampled_from(["mixed", "constant", "all_null"]))
+    if shape == "all_null" and nullable:
+        values = [None] * rows
+    elif shape == "constant":
+        values = [draw(value)] * rows
+    else:
+        values = draw(st.lists(value, min_size=rows, max_size=rows))
+    if dtype == "Float64":
+        null = np.array([v is None for v in values])
+        data = np.array([0.0 if v is None else v for v in values])
+        return pd.Series(pd.arrays.FloatingArray(data, null))
+    return pd.Series(values, dtype=dtype)
+
+
+@st.composite
+def _zorder_frames(draw) -> pd.DataFrame:
+    rows = draw(st.integers(1, 12))
+    ncols = draw(st.integers(2, 3))
+    return pd.DataFrame(
+        {f"k{i}": draw(_zorder_key_column(rows)) for i in range(ncols)}
+    )
+
+
+@given(frame=_zorder_frames())
+@example(
+    frame=pd.DataFrame(
+        {
+            "k0": pd.arrays.FloatingArray(
+                np.array([1.0, np.nan, 3.0, 0.0, -2.5]),
+                np.array([False, False, False, True, False]),
+            ),
+            "k1": [np.inf, 1.0, -4.0, np.nan, 2.0],
+            "k2": pd.array([None, 7, -3, 7, 2**62], dtype="Int64"),
+        }
+    )
+)
+@settings(max_examples=40, deadline=None)
+def test_zorder_codes_equal_zorder_key(spark, frame):
+    """The driver-side numpy Morton key must equal the Spark Column key
+    bit for bit on the same frame after Arrow ingest, across nulls,
+    NaN, infinities, negatives, constant and all-null columns."""
+    from pandas_redshift_spark.plans.layout import zorder_codes, zorder_key
+
+    cols = list(frame.columns)
+    sdf = spark.createDataFrame(frame)
+    want = [r[0] for r in sdf.select(zorder_key(sdf, cols)).collect()]
+    got = zorder_codes(frame, cols)
+    assert got.dtype == np.int64
+    assert got.tolist() == want
 
 
 def test_results_invariant_under_partition_count(spark, sf_dir):

@@ -177,6 +177,55 @@ def spark_chunk_digest(sdf) -> tuple[int, int]:
 DIGEST_PROCS = int(os.environ.get("SIM_DIGEST_PROCS", "1"))
 
 
+#: set in each digest-pool worker by its initializer
+_POOL_BARRIER = None
+
+
+def _set_pool_barrier(barrier) -> None:
+    global _POOL_BARRIER
+    _POOL_BARRIER = barrier
+
+
+def _pool_ready() -> int:
+    _POOL_BARRIER.wait(timeout=300)
+    return os.getpid()
+
+
+def start_digest_pool(procs: int):
+    """A ProcessPoolExecutor with all ``procs`` workers (and the
+    executor's management thread) already started.
+
+    Spawn, not fork: the parent holds live py4j/JVM client threads and
+    a DuckDB connection; forking a multithreaded process can inherit
+    held locks mid-acquire and hang workers intermittently.
+    row_hash_sum's inputs (a pandas chunk + a frozenset) pickle fine,
+    so spawn costs only interpreter startup per worker — amortized
+    over the sweep.
+
+    The pool must be full BEFORE the first fetch: the executor spawns
+    workers lazily per submit, and the first real submit only happens
+    after fetch_df_chunk has EXECUTED the oracle query — at which
+    point a big DuckDB replay (e.g. the sf30 phash grid) holds tens of
+    GB across enough mmaps that pthread_create/fork fail with ENOMEM
+    ("can't start new thread"; two sf30 legs died exactly there).  A
+    submit starts a new worker only while no started worker is idle,
+    so the warm-up tasks wait on one barrier of ``procs`` parties:
+    none returns until ``procs`` workers run one each."""
+    import multiprocessing
+    from concurrent.futures import ProcessPoolExecutor
+
+    ctx = multiprocessing.get_context("spawn")
+    ex = ProcessPoolExecutor(
+        procs,
+        mp_context=ctx,
+        initializer=_set_pool_barrier,
+        initargs=(ctx.Barrier(procs),),
+    )
+    for f in [ex.submit(_pool_ready) for _ in range(procs)]:
+        f.result()
+    return ex
+
+
 def duck_chunk_digest(con, sql: str) -> tuple[int, int]:
     """Streaming multiset digest of a DuckDB result (fetch_df_chunk —
     never materializes the frame).  Integer columns come from the
@@ -194,31 +243,9 @@ def duck_chunk_digest(con, sql: str) -> tuple[int, int]:
     n_tot, h_tot = 0, 0
     if DIGEST_PROCS > 1:
         import collections
-        import multiprocessing
-        from concurrent.futures import ProcessPoolExecutor
 
         futs = collections.deque()
-        # spawn, not fork (ADVICE r13): the parent holds live py4j/JVM
-        # client threads and a DuckDB connection; forking a
-        # multithreaded process can inherit held locks mid-acquire and
-        # hang workers intermittently.  row_hash_sum's inputs (a
-        # pandas chunk + a frozenset) pickle fine, so spawn costs only
-        # interpreter startup per worker — amortized over the sweep.
-        ex = ProcessPoolExecutor(
-            DIGEST_PROCS, mp_context=multiprocessing.get_context("spawn")
-        )
-        # Pre-warm the FULL pool (workers + the executor's management
-        # thread) BEFORE the first fetch: the executor spawns both
-        # lazily per submit, and the first submit only happens after
-        # fetch_df_chunk has EXECUTED the oracle query — at which
-        # point a big DuckDB replay (e.g. the sf30 phash grid) holds
-        # tens of GB across enough mmaps that pthread_create/fork
-        # fail with ENOMEM ("can't start new thread"; two sf30 legs
-        # died exactly there).  Each submit grows the pool by at most
-        # one worker, so DIGEST_PROCS no-op submits spawn everything
-        # while the process is still small.
-        for f in [ex.submit(int, 0) for _ in range(DIGEST_PROCS)]:
-            f.result()
+        ex = start_digest_pool(DIGEST_PROCS)
         try:
             def drain_one():
                 nonlocal n_tot, h_tot
