@@ -35,6 +35,7 @@ from pandas_redshift_spark.sources.bridge import (
     S3_ACCEPTED_KWARGS,
     SparkRedshiftBridge,
     connect,
+    ingest,
     logger,
     logging_config,
     mask_aws_credentials,
@@ -213,11 +214,7 @@ def create_redshift_table(
         # local catalog: Spark SQL doesn't parse diststyle/sortkey —
         # create the empty table from the frame's schema; layout hints
         # apply at write time (plans/layout.apply_layout)
-        empty = (
-            b.spark.createDataFrame(pdf).limit(0)
-            if isinstance(pdf, pd.DataFrame)
-            else pdf.limit(0)
-        )
+        empty = ingest(b.spark, pdf).limit(0)
         apply_validated_names(empty).write.mode("overwrite").saveAsTable(
             redshift_table_name
         )
@@ -269,9 +266,12 @@ def pandas_to_redshift(
     verbose: bool = True,
     **kwargs: Any,
 ) -> None:
-    """core.py:269-304, as ONE atomic distributed write (the reference
-    drops+commits the table before COPY, so a failed COPY leaves an
-    empty shell; Spark's overwrite commits or leaves the old data)."""
+    """core.py:269-304, as one distributed write
+    (:meth:`SparkRedshiftBridge.write_table`) instead of CSV -> S3 ->
+    DROP/CREATE -> COPY.  Not atomic: like the reference, whose failed
+    COPY leaves an empty table, an overwrite drops the old table
+    first (v1 ``saveAsTable(mode="overwrite")``), so a load that fails
+    mid-job leaves no table (ROADMAP.md item 1)."""
     _require_bridge().write_table(
         data_frame,
         redshift_table_name,

@@ -69,7 +69,9 @@ def zorder_key(
     Bounds: ``bounds`` as ``{col: (min, max)}`` doubles when given
     (``sink_zorder_layout`` passes ``stats.column_minmax``'s
     session-memoized catalog-stats lookup); otherwise one eager 1-row
-    min/max aggregate over ``df`` runs here, before the key exists.
+    min/max aggregate over ``df`` runs here, before the key exists, and
+    raises ``ValueError`` naming a column with a non-null value that
+    does not cast to double (a string such as ``'Austin'``).
     Key: a Spark Column of ``bits*len(cols)`` shiftright/shiftleft/
     bitwise-OR built-ins, evaluated by the executors (pure JVM bit
     arithmetic, whole-stage-codegen friendly); ``bits*len(cols)`` must
@@ -80,10 +82,22 @@ def zorder_key(
     without a job or a Column tree."""
     _check_zorder_width(cols, bits)
     if bounds is None:
+        as_double = {c: F.col(c).try_cast("double") for c in cols}
         row = df.agg(
-            *[F.min(F.col(c).cast("double")).alias(f"mn_{c}") for c in cols],
-            *[F.max(F.col(c).cast("double")).alias(f"mx_{c}") for c in cols],
+            *[F.min(as_double[c]).alias(f"mn_{c}") for c in cols],
+            *[F.max(as_double[c]).alias(f"mx_{c}") for c in cols],
+            *[
+                F.min(F.when(as_double[c].isNull(), F.col(c))).alias(f"bad_{c}")
+                for c in cols
+            ],
         ).first()
+        for c in cols:
+            if row[f"bad_{c}"] is not None:
+                raise ValueError(
+                    f"interleaved sortkey column {c!r} holds values that are "
+                    f"not numbers (such as {row[f'bad_{c}']!r}): the Z-order "
+                    "key normalizes each column as a double"
+                )
         bounds = {c: (row[f"mn_{c}"], row[f"mx_{c}"]) for c in cols}
     top = (1 << bits) - 1
     norms = []

@@ -9,6 +9,12 @@ columnar output through Spark's commit protocol.  No
 module globals (reference core.py:52-63) — all state lives on one
 :class:`SparkRedshiftBridge` object.
 
+Every pandas frame reaches Spark through :func:`ingest`: it is split
+into Arrow batches of ``arrowMaxRecordsPerBatch`` rows, which Spark
+tasks decode (no row conversion on the driver), one partition per
+batch and at most ``defaultParallelism`` partitions, so a load writes
+at most that many files.
+
 The JDBC path (live Redshift/Postgres) is built but exercised only
 behind configuration — there is no warehouse in CI; the local catalog
 / parquet path is the tested default.
@@ -18,6 +24,7 @@ from __future__ import annotations
 
 import logging
 import re
+import threading
 import uuid
 from dataclasses import dataclass, field
 from typing import Any
@@ -68,6 +75,11 @@ _S3_KWARG_TO_HADOOP_CONF = {
     "StorageClass": "fs.s3a.create.storage.class",
     "ACL": "fs.s3a.acl.default",
 }
+
+#: Spark's size below which an Arrow ingest becomes a driver-side
+#: ``LocalRelation``; :func:`ingest` sets it to 0 for its one call
+_LOCAL_RELATION_THRESHOLD = "spark.sql.execution.arrow.localRelationThreshold"
+_INGEST_LOCK = threading.Lock()
 
 _LEVELS = {
     "debug": logging.DEBUG,
@@ -265,6 +277,12 @@ class SparkRedshiftBridge:
         load (CSV -> S3 put_object -> DROP/CREATE -> COPY,
         core.py:289-304).
 
+        A pandas frame is ingested by :func:`ingest`: Arrow batches of
+        ``arrowMaxRecordsPerBatch`` rows decoded by tasks, at most
+        ``defaultParallelism`` partitions, so a load without a
+        ``distkey`` writes at most that many files.  A Spark frame keeps
+        its own partitioning.
+
         The overwrite is not atomic.  In local-catalog mode it is v1
         ``saveAsTable(mode="overwrite")``, which drops the existing
         table before the job writes: a load that fails mid-job leaves
@@ -288,10 +306,7 @@ class SparkRedshiftBridge:
                     data_frame = data_frame.copy(deep=False)
                     data_frame[ZORDER_COL] = zorder_codes(data_frame, zcols)
                     zorder = True
-            sdf = self.spark.createDataFrame(data_frame)
-            sdf = apply_validated_names(sdf)
-        else:
-            sdf = apply_validated_names(data_frame)
+        sdf = apply_validated_names(ingest(self.spark, data_frame))
 
         if column_data_types is None:
             column_data_types = get_column_data_types(sdf)
@@ -371,12 +386,9 @@ class SparkRedshiftBridge:
                 hconf.set(conf, str(v))
             else:
                 logger.info("accepted S3 kwarg %s has no distributed-write analogue; skipped", k)
-        if isinstance(data_frame, pd.DataFrame):
-            if index:
-                data_frame = data_frame.reset_index()
-            sdf = self.spark.createDataFrame(data_frame)
-        else:
-            sdf = data_frame
+        if index and isinstance(data_frame, pd.DataFrame):
+            data_frame = data_frame.reset_index()
+        sdf = ingest(self.spark, data_frame)
         csv_name = csv_name or f"staged-{uuid.uuid4()}"
         if save_local:
             # reference core.py:132-135: one local CSV named csv_name.
@@ -450,6 +462,37 @@ class SparkRedshiftBridge:
 
     def __exit__(self, *exc: Any) -> None:
         self.close()
+
+
+def ingest(spark: SparkSession, frame: "pd.DataFrame | DataFrame") -> DataFrame:
+    """The bridge's one pandas -> Spark path; a Spark frame is returned
+    as is, with its own partitioning.
+
+    ``createDataFrame`` splits the frame into Arrow batches of
+    ``arrowMaxRecordsPerBatch`` rows.  Below Spark's
+    ``arrow.localRelationThreshold`` the driver would then turn every
+    row into a ``LocalRelation``, Java-serialized into
+    ``defaultParallelism`` tasks.  With the threshold at 0 for this one
+    call, each batch becomes one RDD partition that a task decodes.
+    More batches than ``defaultParallelism`` are coalesced to that many
+    partitions, without a shuffle.  The threshold is restored under a
+    module lock, so concurrent loads cannot leave it changed."""
+    if not isinstance(frame, pd.DataFrame):
+        return frame
+    with _INGEST_LOCK:
+        prev = spark.conf.get(_LOCAL_RELATION_THRESHOLD, None)
+        spark.conf.set(_LOCAL_RELATION_THRESHOLD, "0")
+        try:
+            sdf = spark.createDataFrame(frame)
+        finally:
+            if prev is None:
+                spark.conf.unset(_LOCAL_RELATION_THRESHOLD)
+            else:
+                spark.conf.set(_LOCAL_RELATION_THRESHOLD, prev)
+    step = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    batches = -(-len(frame) // step) if step > 0 else 1
+    slots = spark.sparkContext.defaultParallelism
+    return sdf.coalesce(slots) if batches > slots else sdf
 
 
 def connect(

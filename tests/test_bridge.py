@@ -5,16 +5,19 @@ README.md:99-110), CSV staging round-trip, close semantics."""
 
 from __future__ import annotations
 
+import threading
+import time
 import uuid
 
 import numpy as np
 import pandas as pd
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import SparkSession
 from pyspark.sql.readwriter import DataFrameWriter
 
 from pandas_redshift_spark.plans.layout import ZORDER_COL, zorder_codes
-from pandas_redshift_spark.sources.bridge import connect
+from pandas_redshift_spark.sources.bridge import connect, ingest
 from pandas_redshift_spark.sources.schema import ReservedWordError
 
 
@@ -22,7 +25,10 @@ from pandas_redshift_spark.sources.schema import ReservedWordError
 def bridge(spark):
     b = connect(spark)
     yield b
-    for t in ("nba_shots", "t_ctas", "t_roundtrip", "t_layout", "t_zorder", "t_zorder_spark"):
+    for t in (
+        "nba_shots", "t_ctas", "t_roundtrip", "t_layout", "t_zorder", "t_zorder_spark",
+        "t_ingest_a", "t_ingest_b",
+    ):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
@@ -315,6 +321,176 @@ def test_interleaved_non_numeric_key_takes_spark_path(bridge, spark, monkeypatch
     assert back["qty"].tolist() == want["qty"].tolist()
     assert back["ts"].tolist() == want["ts"].tolist()
     assert back["code"].tolist() == want["code"].tolist()
+
+
+_THRESHOLD = "spark.sql.execution.arrow.localRelationThreshold"
+
+
+def _batch_rows(spark) -> int:
+    return int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+
+
+def _mixed_frame(rows: int) -> pd.DataFrame:
+    """Every dtype family a load carries: ints, floats with NaN and
+    None, tz-aware timestamps, bools, strings with None, and a column
+    name with whitespace."""
+    rng = np.random.default_rng(rows)
+    price = rng.uniform(0, 100, rows)
+    price[::7] = np.nan
+    clock = [None if i % 5 == 0 else float(i % 24) for i in range(rows)]
+    ts = pd.Timestamp("2024-03-10", tz="America/New_York") + pd.to_timedelta(
+        rng.integers(0, 10**12, rows), unit="us"
+    )
+    return pd.DataFrame(
+        {
+            "id": np.arange(rows, dtype=np.int64),
+            "qty": rng.integers(-1000, 1000, rows).astype(np.int32),
+            "price": price,
+            "Shot Clock": clock,
+            "ts": ts,
+            "won": rng.integers(0, 2, rows).astype(bool),
+            "city": [None if i % 11 == 0 else f"c{i % 97}" for i in range(rows)],
+        }
+    )
+
+
+def _assert_round_trip(bridge, pdf: pd.DataFrame, table: str) -> None:
+    back = bridge.read_sql(f"SELECT * FROM {table}").sort_values("id").reset_index(drop=True)
+    assert list(back.columns) == ["id", "qty", "price", '"shot clock"', "ts", "won", "city"]
+    assert back["id"].tolist() == pdf["id"].tolist()
+    assert back["qty"].tolist() == pdf["qty"].tolist()
+    for got, want in (("price", "price"), ('"shot clock"', "Shot Clock")):
+        assert np.array_equal(
+            back[got].to_numpy(dtype=float), pdf[want].to_numpy(dtype=float), equal_nan=True
+        )
+    utc = pdf["ts"].dt.tz_convert("UTC").dt.tz_localize(None)
+    assert back["ts"].tolist() == utc.tolist()
+    assert back["won"].tolist() == pdf["won"].tolist()
+    assert back["city"].tolist() == pdf["city"].tolist()
+
+
+def test_one_batch_load_writes_one_file(bridge, spark, tmp_path):
+    """A frame of one Arrow batch is one partition: one parquet file,
+    and one staged CSV file."""
+    pdf = _mixed_frame(_batch_rows(spark))
+    bridge.write_table(pdf, "t_ingest_a")
+    assert len(spark.table("t_ingest_a").inputFiles()) == 1
+    _assert_round_trip(bridge, pdf, "t_ingest_a")
+    staged = bridge.stage_csv(pdf, "one_batch", path_prefix=str(tmp_path))
+    assert len(list(tmp_path.joinpath("one_batch").glob("part-*.csv"))) == 1
+    assert staged.endswith("one_batch")
+
+
+def test_many_batch_load_writes_at_most_parallelism_files(bridge, spark):
+    """More Arrow batches than task slots are coalesced to
+    ``defaultParallelism`` partitions, so at most that many files."""
+    slots = spark.sparkContext.defaultParallelism
+    pdf = _mixed_frame(_batch_rows(spark) * (slots + 1) + 1)
+    bridge.write_table(pdf, "t_ingest_b")
+    assert 1 <= len(spark.table("t_ingest_b").inputFiles()) <= slots
+    _assert_round_trip(bridge, pdf, "t_ingest_b")
+
+
+def test_ingest_plan_has_no_local_relation(spark):
+    """The Arrow batches become an RDD that tasks decode, not a
+    driver-built LocalRelation, at one batch and at many."""
+    slots = spark.sparkContext.defaultParallelism
+    for rows in (100, _batch_rows(spark) * (slots + 1) + 1):
+        sdf = ingest(spark, _mixed_frame(rows))
+        plan = sdf._jdf.queryExecution().analyzed().toString()
+        assert "LocalRelation" not in plan, plan
+        assert sdf.count() == rows
+
+
+def test_ingest_restores_local_relation_threshold(bridge, spark, monkeypatch):
+    """The session's threshold reads the same after a load, after a load
+    whose createDataFrame raises, and after two concurrent loads."""
+    before = spark.conf.get(_THRESHOLD)
+    bridge.write_table(_mixed_frame(50), "t_ingest_a")
+    assert spark.conf.get(_THRESHOLD) == before
+
+    create = SparkSession.createDataFrame
+
+    def fail(self, *args, **kwargs):
+        raise RuntimeError("ingest failed")
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", fail)
+    with pytest.raises(RuntimeError, match="ingest failed"):
+        bridge.write_table(_mixed_frame(50), "t_ingest_a")
+    assert spark.conf.get(_THRESHOLD) == before
+
+    inside = threading.Event()
+
+    def slow(self, *args, **kwargs):
+        # hold the first load inside createDataFrame while the second
+        # one starts
+        inside.set()
+        time.sleep(0.3)
+        return create(self, *args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", slow)
+    errors = []
+
+    def load(table: str, after: threading.Event | None) -> None:
+        try:
+            if after is not None:
+                after.wait(timeout=30)
+            bridge.write_table(_mixed_frame(50), table)
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    threads = [
+        threading.Thread(target=load, args=("t_ingest_a", None)),
+        threading.Thread(target=load, args=("t_ingest_b", inside)),
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+        assert not t.is_alive()
+    assert errors == []
+    assert spark.conf.get(_THRESHOLD) == before
+    for t in ("t_ingest_a", "t_ingest_b"):
+        assert bridge.sql(f"SELECT count(*) AS n FROM {t}").first()["n"] == 50
+
+
+def _tasks_of(spark, action) -> int:
+    """Run ``action`` under a fresh job group; return how many Spark
+    tasks its jobs ran."""
+    sc = spark.sparkContext
+    group = f"task-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "task count")
+    try:
+        action()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    return sum(
+        tracker.getStageInfo(stage).numTasks
+        for job in tracker.getJobIdsForGroup(group)
+        for stage in tracker.getJobInfo(job).stageIds
+    )
+
+
+def test_small_load_and_read_run_one_task_each(bridge, spark):
+    """A 5k-row load is one write task and its read-back one scan task.
+    Fails if a Spark upgrade changes how Arrow batches partition."""
+    pdf = _mixed_frame(5000)
+    assert _tasks_of(spark, lambda: bridge.write_table(pdf, "t_ingest_a")) == 1
+    assert _tasks_of(spark, lambda: bridge.read_sql("SELECT * FROM t_ingest_a")) == 1
+
+
+def test_interleaved_string_key_rejected_before_save(bridge):
+    """A non-numeric string in an interleaved sortkey column raises a
+    ValueError naming the column, before the overwrite drops the old
+    table, which still reads."""
+    bridge.write_table(_mixed_frame(40), "t_zorder_spark")
+    bad = pd.DataFrame({"qty": [3, 1, 2], "city": ["12", "Austin", None]})
+    with pytest.raises(ValueError, match=r"'city'.*not numbers.*'Austin'"):
+        bridge.write_table(bad, "t_zorder_spark", sortkey="qty,city", sort_interleaved=True)
+    assert bridge.sql("SELECT count(*) AS n FROM t_zorder_spark").first()["n"] == 40
 
 
 def test_close_blocks_use(spark):
