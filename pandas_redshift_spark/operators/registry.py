@@ -52,18 +52,18 @@ class QuerySpec:
     #: independent replay.  tests/test_cert_oracles.py pins
     #: cert-oracle == primary-oracle result at a small SF.
     cert_oracle: Callable | None = None
-    #: r15: True routes repeat invocations through
-    #: ``session.memoized_frame`` — the BUILT logical plan (an
-    #: immutable, unexecuted DataFrame) is shared per (session,
-    #: sf_dir), the same object class the endorsed ``_TABLE_MEMO`` /
-    #: ``_PQ_EXPR_MEMO`` memos already share.  Nothing executed is
-    #: cached; every run still computes from the parquet inputs.  Set
-    #: only on queries whose MEASURED per-invocation Python build cost
-    #: is >= ~0.1 s (py4j round-trips re-assembling the identical
-    #: expression trees; table in OPTIMIZATION_r15.md), and never on
-    #: operators whose fn() performs per-invocation side effects
-    #: (streaming drains, sinks, DML) — those must re-execute their
-    #: build.  Visible per query in bench.py's ``memo_hits`` field.
+    #: r15: True routes repeat invocations through the session memo
+    #: (``session.memo``, family ``frame``): the BUILT logical plan
+    #: (an immutable, unexecuted DataFrame) is shared per (session,
+    #: sf_dir), the same object class the ``table`` and ``pq_exprs``
+    #: families already share.  Nothing executed is cached; every run
+    #: still computes from the parquet inputs.  Set only on queries
+    #: whose MEASURED per-invocation Python build cost is >= ~0.1 s
+    #: (py4j round-trips re-assembling the identical expression trees;
+    #: table in OPTIMIZATION_r15.md), and never on operators whose
+    #: fn() performs per-invocation side effects (streaming drains,
+    #: sinks, DML) — those must re-execute their build.  Visible per
+    #: query in ``session.MEMO_HITS["frame"]``.
     memo_plan: bool = False
 
 
@@ -92,11 +92,14 @@ def query(
             raise ValueError(f"duplicate query name {name!r}")
         run = fn
         if memo_plan:
-            from pandas_redshift_spark.session import memoized_frame
+            from pandas_redshift_spark.session import memo
 
             def run(spark: SparkSession, sf_dir: str) -> DataFrame:  # noqa: F811
-                return memoized_frame(
-                    spark, ("plan", name, sf_dir), lambda: fn(spark, sf_dir)
+                # e.g. sim_pq_adc_topk spends ~0.55 s per call in ~1200
+                # py4j round-trips re-assembling the same codebook-literal
+                # expression trees (measured r15, warm memos)
+                return memo(
+                    spark, "frame", ("plan", name, sf_dir), lambda: fn(spark, sf_dir)
                 )
 
             run.__doc__ = fn.__doc__

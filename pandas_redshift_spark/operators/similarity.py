@@ -20,8 +20,8 @@ from pandas_redshift_spark.operators.registry import query
 from pandas_redshift_spark.session import (
     Tables,
     ensure_parallelism,
+    memo,
     memoized_persist,
-    note_memo_hit,
 )
 from pandas_redshift_spark.stats import table_rows
 
@@ -380,7 +380,7 @@ def hyperplane_buckets(
         # ulp-scale near-zero projection, so both engines pin the raw
         # form and stay bit-identical.  ONE F.lit per plane: the
         # per-element form is ~1 ms of py4j round-trip per float
-        # (see _cand_struct / _PQ_EXPR_MEMO), which at 4w planes x 64
+        # (see _cand_struct / _pq_exprs), which at 4w planes x 64
         # dims was over a second of pure driver time per call.
         h_p = F.lit([float(v) for v in planes[p]])
         return F.when(dot(F.col("emb"), h_p) > 0, F.lit(1)).otherwise(F.lit(0))
@@ -669,12 +669,6 @@ SUPER_TRAIN_MAX_K = 16384
 #: (not env-frozen) so the forced-path test can monkeypatch it.
 KMEANS_FLAT_TRAIN_MAX_K = int(os.environ.get("PRS_KMEANS_FLAT_MAX_K", "16384"))
 
-#: trained-centroid memo keyed (applicationId, *caller key): training
-#: runs a couple of tiny sample jobs; bench best-of-3 and the probe +
-#: assign stages of one query should reuse one training run.
-_KMEANS_MEMO: dict[tuple, list] = {}
-
-
 def _seed_frame(samp: DataFrame, k_cells: int) -> DataFrame:
     """The K smallest-id sample vectors — k-means seeds.  ``orderBy +
     limit`` plans as TakeOrderedAndProject (per-partition top-K, tiny
@@ -752,12 +746,8 @@ def train_kmeans_centroid_values(
     """The memoized ``[(cell, [centroid floats])]`` literals behind
     :func:`train_kmeans_centroids` (see there for the algorithm and
     the oracle-replay pins), in seed order (cell id ascending)."""
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _KMEANS_MEMO if k[0] != app_id]:
-        del _KMEANS_MEMO[k]
-    key = (app_id, *cache_key, k_cells, iters, sample_mod)
-    cents = _KMEANS_MEMO.get(key)
-    if cents is None:
+
+    def build() -> list:
         samp = emb.filter(F.col("vec_id") % sample_mod == 0).select(
             "vec_id", "emb_n"
         )
@@ -821,8 +811,11 @@ def train_kmeans_centroid_values(
                 # the oracle replay's CASE guard (ADVICE r8)
                 nxt.append((cell, prev if nrm == 0.0 else [v / nrm for v in raw]))
             cents = nxt
-        _KMEANS_MEMO[key] = cents
-    return cents
+        return cents
+
+    # training runs a couple of tiny sample jobs; repeat calls and the
+    # probe + assign stages of one query reuse one training run
+    return memo(spark, "kmeans", (*cache_key, k_cells, iters, sample_mod), build)
 
 
 def _kmeans_ctes(
@@ -1151,12 +1144,6 @@ def _assign_two_level_broadcast(
     )
 
 
-#: hierarchical-trainer memo: (applicationId, *key) -> checkpointed
-#: child-codebook DataFrame (sup, cell, c_en).  Same lifecycle rules
-#: as _KMEANS_MEMO (stale-app eviction on access).
-_HIER_MEMO: dict[tuple, tuple] = {}
-
-
 def train_kmeans_hierarchical(
     spark: SparkSession,
     emb: DataFrame,
@@ -1193,123 +1180,125 @@ def train_kmeans_hierarchical(
     hash gate always exercises the flat trainer); its correctness
     contract is the forced-threshold structural test in
     tests/test_extensions.py."""
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _HIER_MEMO if k[0] != app_id]:
-        del _HIER_MEMO[k]
-    key = (app_id, "hier", *cache_key, k_cells, iters, sample_mod)
-    hit = _HIER_MEMO.get(key)
-    if hit is not None:
-        return hit
 
-    s_cells = math.ceil(math.sqrt(k_cells))
-    k_child = math.ceil(k_cells / s_cells)
-    sups = train_kmeans_centroid_values(
-        spark, emb, s_cells, ("hier_super", *cache_key)
-    )
-    sup_df = broadcast(
-        spark.createDataFrame(
-            [(int(s), [float(x) for x in v]) for s, v in sups],
-            schema="sup long, s_en array<double>",
+    def build() -> tuple[list, DataFrame]:
+        s_cells = math.ceil(math.sqrt(k_cells))
+        k_child = math.ceil(k_cells / s_cells)
+        sups = train_kmeans_centroid_values(
+            spark, emb, s_cells, ("hier_super", *cache_key)
         )
-    )
-
-    def neg(col: str) -> Column:
-        return (-F.col(col)).cast("long")
-
-    samp_sup = (
-        emb.filter(F.col("vec_id") % sample_mod == 0)
-        .select("vec_id", "emb_n")
-        .join(sup_df, how="cross")
-        .withColumn("s_sim", dot(F.col("emb_n"), F.col("s_en")))
-        .groupBy("vec_id")
-        .agg(
-            F.first("emb_n").alias("emb_n"),
-            F.max(
-                F.struct(F.col("s_sim").alias("sim"), neg("sup").alias("nid"))
-            ).alias("m"),
+        sup_df = broadcast(
+            spark.createDataFrame(
+                [(int(s), [float(x) for x in v]) for s, v in sups],
+                schema="sup long, s_en array<double>",
+            )
         )
-        .select("vec_id", "emb_n", (-F.col("m.nid")).cast("long").alias("sup"))
-        .localCheckpoint(eager=True)
-    )
 
-    w_seed = Window.partitionBy("sup").orderBy("vec_id")
-    child = (
-        samp_sup.withColumn("rn", F.row_number().over(w_seed))
-        .filter(F.col("rn") <= k_child)
-        .select("sup", F.col("vec_id").alias("cell"), F.col("emb_n").alias("c_en"))
-        .localCheckpoint(eager=True)
-    )
+        def neg(col: str) -> Column:
+            return (-F.col(col)).cast("long")
 
-    for _ in range(iters):
-        asg = (
-            samp_sup.join(child, "sup")
-            .withColumn("c_sim", dot(F.col("emb_n"), F.col("c_en")))
+        samp_sup = (
+            emb.filter(F.col("vec_id") % sample_mod == 0)
+            .select("vec_id", "emb_n")
+            .join(sup_df, how="cross")
+            .withColumn("s_sim", dot(F.col("emb_n"), F.col("s_en")))
             .groupBy("vec_id")
             .agg(
-                F.first("sup").alias("sup"),
                 F.first("emb_n").alias("emb_n"),
                 F.max(
-                    F.struct(F.col("c_sim").alias("sim"), neg("cell").alias("nid"))
+                    F.struct(F.col("s_sim").alias("sim"), neg("sup").alias("nid"))
                 ).alias("m"),
             )
-            .select(
-                "sup", "vec_id", "emb_n", (-F.col("m.nid")).cast("long").alias("cell")
-            )
-        )
-        means = (
-            asg.select("sup", "cell", "vec_id", F.posexplode("emb_n").alias("dim", "val"))
-            .groupBy("sup", "cell", "dim")
-            .agg(
-                F.aggregate(
-                    F.array_sort(F.collect_list(F.struct("vec_id", "val"))),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x["val"],
-                ).alias("sv"),
-                F.count(F.lit(1)).alias("cnt"),
-            )
-            .select("sup", "cell", "dim", (F.col("sv") / F.col("cnt")).alias("cv"))
-        )
-        newc = (
-            means.groupBy("sup", "cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "cv"))),
-                    lambda s: s["cv"],
-                ).alias("raw")
-            )
-            .withColumn(
-                "nrm",
-                F.sqrt(F.aggregate("raw", F.lit(0.0), lambda a, v: a + v * v)),
-            )
-            .select(
-                "sup",
-                "cell",
-                F.when(F.col("nrm") == 0.0, F.lit(None))
-                .otherwise(F.transform("raw", lambda v: v / F.col("nrm")))
-                .alias("new_en"),
-            )
-        )
-        # keep-prev: empty cells and zero-norm means keep the old
-        # centroid, same rule as the flat trainer's Python branch
-        child = (
-            child.join(newc, ["sup", "cell"], "left")
-            .select("sup", "cell", F.coalesce("new_en", "c_en").alias("c_en"))
+            .select("vec_id", "emb_n", (-F.col("m.nid")).cast("long").alias("sup"))
             .localCheckpoint(eager=True)
         )
 
-    # only supers that won at least one child are scoreable: the
-    # level-2 join in :func:`_assign_two_level_join` is INNER on
-    # ``sup``, so a corpus vector whose nearest super had no sample
-    # members (hence no children) would silently vanish from the
-    # assignment, breaking the every-vector-covered contract (ADVICE
-    # r10).  Mirrors the flat path's ``live`` filter at the call
-    # site; the distinct-sup collect is O(S) = O(sqrt(K)) driver
-    # rows, the same order as the ``sups`` literal itself.
-    live = {r[0] for r in child.select("sup").distinct().collect()}
-    sups = [(s, v) for s, v in sups if s in live]
+        w_seed = Window.partitionBy("sup").orderBy("vec_id")
+        child = (
+            samp_sup.withColumn("rn", F.row_number().over(w_seed))
+            .filter(F.col("rn") <= k_child)
+            .select("sup", F.col("vec_id").alias("cell"), F.col("emb_n").alias("c_en"))
+            .localCheckpoint(eager=True)
+        )
 
-    _HIER_MEMO[key] = (sups, child)
-    return sups, child
+        for _ in range(iters):
+            asg = (
+                samp_sup.join(child, "sup")
+                .withColumn("c_sim", dot(F.col("emb_n"), F.col("c_en")))
+                .groupBy("vec_id")
+                .agg(
+                    F.first("sup").alias("sup"),
+                    F.first("emb_n").alias("emb_n"),
+                    F.max(
+                        F.struct(F.col("c_sim").alias("sim"), neg("cell").alias("nid"))
+                    ).alias("m"),
+                )
+                .select(
+                    "sup", "vec_id", "emb_n", (-F.col("m.nid")).cast("long").alias("cell")
+                )
+            )
+            means = (
+                asg.select("sup", "cell", "vec_id", F.posexplode("emb_n").alias("dim", "val"))
+                .groupBy("sup", "cell", "dim")
+                .agg(
+                    F.aggregate(
+                        F.array_sort(F.collect_list(F.struct("vec_id", "val"))),
+                        F.lit(0.0),
+                        lambda acc, x: acc + x["val"],
+                    ).alias("sv"),
+                    F.count(F.lit(1)).alias("cnt"),
+                )
+                .select("sup", "cell", "dim", (F.col("sv") / F.col("cnt")).alias("cv"))
+            )
+            newc = (
+                means.groupBy("sup", "cell")
+                .agg(
+                    F.transform(
+                        F.array_sort(F.collect_list(F.struct("dim", "cv"))),
+                        lambda s: s["cv"],
+                    ).alias("raw")
+                )
+                .withColumn(
+                    "nrm",
+                    F.sqrt(F.aggregate("raw", F.lit(0.0), lambda a, v: a + v * v)),
+                )
+                .select(
+                    "sup",
+                    "cell",
+                    F.when(F.col("nrm") == 0.0, F.lit(None))
+                    .otherwise(F.transform("raw", lambda v: v / F.col("nrm")))
+                    .alias("new_en"),
+                )
+            )
+            # keep-prev: empty cells and zero-norm means keep the old
+            # centroid, same rule as the flat trainer's Python branch
+            child = (
+                child.join(newc, ["sup", "cell"], "left")
+                .select("sup", "cell", F.coalesce("new_en", "c_en").alias("c_en"))
+                .localCheckpoint(eager=True)
+            )
+
+        # only supers that won at least one child are scoreable: the
+        # level-2 join in :func:`_assign_two_level_join` is INNER on
+        # ``sup``, so a corpus vector whose nearest super had no sample
+        # members (hence no children) would silently vanish from the
+        # assignment, breaking the every-vector-covered contract (ADVICE
+        # r10).  Mirrors the flat path's ``live`` filter at the call
+        # site; the distinct-sup collect is O(S) = O(sqrt(K)) driver
+        # rows, the same order as the ``sups`` literal itself.
+        live = {r[0] for r in child.select("sup").distinct().collect()}
+        sups = [(s, v) for s, v in sups if s in live]
+
+        return sups, child
+
+    # the memoized child codebook is checkpointed, so repeat calls
+    # reuse it without re-running the Lloyd iterations
+    return memo(
+        spark,
+        "kmeans_hier",
+        ("hier", *cache_key, k_cells, iters, sample_mod),
+        build,
+    )
 
 
 def _assign_two_level_join(
@@ -1756,99 +1745,94 @@ def train_pq_books(
 
     Returns ``books`` — for each ``m``, the ``[(cell, [floats])]``
     list in seed order, exactly what the sequential calls return."""
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _KMEANS_MEMO if k[0] != app_id]:
-        del _KMEANS_MEMO[k]
-    key = (app_id, "pq_batch", *cache_key, n_sub, sub_dims, k_codes, iters, sample_mod)
-    books = _KMEANS_MEMO.get(key)
-    if books is not None:
-        return books
 
-    # the sample, exploded once per subspace: (vec_id, m, sub_en)
-    samp = emb.filter(F.col("vec_id") % sample_mod == 0).select("vec_id", "emb_n")
-    exploded = samp.select(
-        "vec_id",
-        "emb_n",
-        F.explode(F.sequence(F.lit(0), F.lit(n_sub - 1))).alias("m"),
-    ).select(
-        "vec_id",
-        "m",
-        F.slice(
-            F.col("emb_n"), F.col("m") * sub_dims + 1, F.lit(sub_dims)
-        ).alias("sub_en"),
-    )
-    # seeds: the K smallest-id sample vectors (same ids for every m) —
-    # TakeOrdered shape, one collect of K x n_sub x sub_dims doubles
-    seed_rows = (
-        exploded.orderBy("vec_id", "m")
-        .limit(k_codes * n_sub)
-        .collect()
-    )
-    cents = {
-        (r["m"], r["vec_id"]): list(r["sub_en"]) for r in seed_rows
-    }  # (m, cell) -> centroid
-    for _ in range(iters):
-        cents_df = broadcast(
-            spark.createDataFrame(
-                [(m, c, v) for (m, c), v in sorted(cents.items())],
-                schema="m int, cell long, c_en array<double>",
-            )
+    def build() -> list[list]:
+        # the sample, exploded once per subspace: (vec_id, m, sub_en)
+        samp = emb.filter(F.col("vec_id") % sample_mod == 0).select("vec_id", "emb_n")
+        exploded = samp.select(
+            "vec_id",
+            "emb_n",
+            F.explode(F.sequence(F.lit(0), F.lit(n_sub - 1))).alias("m"),
+        ).select(
+            "vec_id",
+            "m",
+            F.slice(
+                F.col("emb_n"), F.col("m") * sub_dims + 1, F.lit(sub_dims)
+            ).alias("sub_en"),
         )
-        w_asg = Window.partitionBy("vec_id", "m").orderBy(
-            F.col("c_sim").desc(), F.col("cell")
-        )
-        assigned = (
-            exploded.join(cents_df, "m")
-            .withColumn("c_sim", dot(F.col("sub_en"), F.col("c_en")))
-            .withColumn("c_rn", F.row_number().over(w_asg))
-            .filter(F.col("c_rn") == 1)
-            .select("vec_id", "m", "cell", "sub_en")
-        )
-        # order-pinned mean per (m, cell, dim): members folded
-        # left-to-right in vec_id-asc order — bit-identical to the
-        # sequential trainer's fold and the DuckDB replay
-        avg_rows = (
-            assigned.select(
-                "vec_id", "m", "cell", F.posexplode("sub_en").alias("dim", "val")
-            )
-            .groupBy("m", "cell", "dim")
-            .agg(
-                F.aggregate(
-                    F.array_sort(F.collect_list(F.struct("vec_id", "val"))),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x["val"],
-                ).alias("sv"),
-                F.count(F.lit(1)).alias("cnt"),
-            )
-            .select("m", "cell", "dim", (F.col("sv") / F.col("cnt")).alias("cv"))
+        # seeds: the K smallest-id sample vectors (same ids for every m) —
+        # TakeOrdered shape, one collect of K x n_sub x sub_dims doubles
+        seed_rows = (
+            exploded.orderBy("vec_id", "m")
+            .limit(k_codes * n_sub)
             .collect()
         )
-        by_cell: dict[tuple, dict[int, float]] = {}
-        for r in avg_rows:
-            by_cell.setdefault((r["m"], r["cell"]), {})[r["dim"]] = r["cv"]
-        nxt = {}
-        for mc, prev in cents.items():
-            vals = by_cell.get(mc)
-            if vals is None:
-                nxt[mc] = prev
-                continue
-            raw = [vals[i] for i in range(sub_dims)]
-            acc = 0.0
-            for v in raw:  # left-to-right fold == both engines' fold
-                acc = acc + v * v
-            nrm = math.sqrt(acc)
-            # an all-zero SUB-SLICE mean is reachable on sparse real
-            # embeddings even though whole-vector zero norms are
-            # filtered (ADVICE r8): keep the previous centroid, the
-            # same rule the oracle replay's CASE guard applies
-            nxt[mc] = prev if nrm == 0.0 else [v / nrm for v in raw]
-        cents = nxt
-    books = [
-        sorted((c, v) for (m, c), v in cents.items() if m == mm)
-        for mm in range(n_sub)
-    ]
-    _KMEANS_MEMO[key] = books
-    return books
+        cents = {
+            (r["m"], r["vec_id"]): list(r["sub_en"]) for r in seed_rows
+        }  # (m, cell) -> centroid
+        for _ in range(iters):
+            cents_df = broadcast(
+                spark.createDataFrame(
+                    [(m, c, v) for (m, c), v in sorted(cents.items())],
+                    schema="m int, cell long, c_en array<double>",
+                )
+            )
+            w_asg = Window.partitionBy("vec_id", "m").orderBy(
+                F.col("c_sim").desc(), F.col("cell")
+            )
+            assigned = (
+                exploded.join(cents_df, "m")
+                .withColumn("c_sim", dot(F.col("sub_en"), F.col("c_en")))
+                .withColumn("c_rn", F.row_number().over(w_asg))
+                .filter(F.col("c_rn") == 1)
+                .select("vec_id", "m", "cell", "sub_en")
+            )
+            # order-pinned mean per (m, cell, dim): members folded
+            # left-to-right in vec_id-asc order — bit-identical to the
+            # sequential trainer's fold and the DuckDB replay
+            avg_rows = (
+                assigned.select(
+                    "vec_id", "m", "cell", F.posexplode("sub_en").alias("dim", "val")
+                )
+                .groupBy("m", "cell", "dim")
+                .agg(
+                    F.aggregate(
+                        F.array_sort(F.collect_list(F.struct("vec_id", "val"))),
+                        F.lit(0.0),
+                        lambda acc, x: acc + x["val"],
+                    ).alias("sv"),
+                    F.count(F.lit(1)).alias("cnt"),
+                )
+                .select("m", "cell", "dim", (F.col("sv") / F.col("cnt")).alias("cv"))
+                .collect()
+            )
+            by_cell: dict[tuple, dict[int, float]] = {}
+            for r in avg_rows:
+                by_cell.setdefault((r["m"], r["cell"]), {})[r["dim"]] = r["cv"]
+            nxt = {}
+            for mc, prev in cents.items():
+                vals = by_cell.get(mc)
+                if vals is None:
+                    nxt[mc] = prev
+                    continue
+                raw = [vals[i] for i in range(sub_dims)]
+                acc = 0.0
+                for v in raw:  # left-to-right fold == both engines' fold
+                    acc = acc + v * v
+                nrm = math.sqrt(acc)
+                # an all-zero SUB-SLICE mean is reachable on sparse real
+                # embeddings even though whole-vector zero norms are
+                # filtered (ADVICE r8): keep the previous centroid, the
+                # same rule the oracle replay's CASE guard applies
+                nxt[mc] = prev if nrm == 0.0 else [v / nrm for v in raw]
+            cents = nxt
+        return [
+            sorted((c, v) for (m, c), v in cents.items() if m == mm)
+            for mm in range(n_sub)
+        ]
+
+    key = ("pq_batch", *cache_key, n_sub, sub_dims, k_codes, iters, sample_mod)
+    return memo(spark, "kmeans", key, build)
 
 
 def _pq_lut(cen_lits: list, sub, m: int) -> Column:
@@ -1861,73 +1845,58 @@ def _pq_lut(cen_lits: list, sub, m: int) -> Column:
     return F.transform(cen_lits[m], lambda cen: dot(sub(F.col("emb_n"), m), cen))
 
 
-#: (app_id, sf_dir, geometry) -> (codes Column, luts Column): the PQ
-#: expression trees are pure functions of the trained books, and
-#: BUILDING them is the warm-path bottleneck — the 8 nested-array
-#: F.lit py4j conversions alone measured 1.4 s and the argmax fold
-#: trees another 0.6 s per call at sf0.1 (vs ~1.3 s of actual
-#: cluster work).  Columns are immutable unresolved expressions, so
-#: reuse across calls in one session is safe.
-_PQ_EXPR_MEMO: dict[tuple, tuple] = {}
-
-
 def _pq_exprs(spark: SparkSession, books: list, memo_key: tuple) -> tuple:
     """Build (or fetch) the corpus ``codes`` array column and the
-    per-query ``luts`` array column for the given trained books."""
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _PQ_EXPR_MEMO if k[0] != app_id]:
-        del _PQ_EXPR_MEMO[k]
-    key = (app_id, *memo_key)
-    hit = _PQ_EXPR_MEMO.get(key)
-    if hit is not None:
-        note_memo_hit("pq_exprs")
-        return hit
+    per-query ``luts`` array column for the given trained books
+    (memoized per ``memo_key``, family ``pq_exprs``)."""
 
-    def sub(col: Column, m: int) -> Column:
-        return F.slice(col, m * PQ_SUB + 1, PQ_SUB)
+    def build() -> tuple:
+        def sub(col: Column, m: int) -> Column:
+            return F.slice(col, m * PQ_SUB + 1, PQ_SUB)
 
-    # RANK-COMPRESS cell ids to 1-based POSITIONS (id-ascending, so
-    # position order == cell-id order and every tie-break stays
-    # aligned with the oracle's ORDER BY ..., cell).  Positions buy
-    # the one-py4j-call literal form: each sub-codebook ships as a
-    # single nested-array F.lit — the per-struct literal form burned
-    # ~8 s PER CALL of driver py4j round-trips (measured r8).
-    cen_lits = [
-        F.lit([[float(v) for v in cen] for _, cen in sorted(books[m])])
-        for m in range(PQ_M)
-    ]
-
-    def cands(m: int) -> Column:
-        # arrays_zip names struct fields from the input aliases, so
-        # the argmax_dot fold sees the same (id, cen) shape as the
-        # per-struct literal form
-        return F.arrays_zip(
-            F.sequence(F.lit(1), F.lit(PQ_CODES)).cast("array<bigint>").alias("id"),
-            cen_lits[m].alias("cen"),
-        )
-
-    # corpus encode reads PRE-SLICED subvectors (``subs_col`` below,
-    # materialized in its own projection by the caller): with
-    # ``slice(emb_n, ...)`` as the fold's query vector, the
-    # interpreted per-candidate lambda re-allocates the 8-double slice
-    # for every one of the 32 candidates x 8 subspaces = 2048 array
-    # copies per row (r14); ``element_at`` on a materialized
-    # array<array<double>> attribute is a reference read.  Same dot
-    # folds over the same doubles — arithmetic unchanged.
-    subs_col = F.array(*[sub(F.col("emb_n"), m) for m in range(PQ_M)]).alias(
-        "__subs__"
-    )
-    codes_col = F.array(
-        *[
-            argmax_dot(F.element_at(F.col("__subs__"), m + 1), cands(m))
+        # RANK-COMPRESS cell ids to 1-based POSITIONS (id-ascending, so
+        # position order == cell-id order and every tie-break stays
+        # aligned with the oracle's ORDER BY ..., cell).  Positions buy
+        # the one-py4j-call literal form: each sub-codebook ships as a
+        # single nested-array F.lit — the per-struct literal form burned
+        # ~8 s PER CALL of driver py4j round-trips (measured r8).
+        cen_lits = [
+            F.lit([[float(v) for v in cen] for _, cen in sorted(books[m])])
             for m in range(PQ_M)
         ]
-    ).alias("codes")
-    luts_col = F.array(*[_pq_lut(cen_lits, sub, m) for m in range(PQ_M)]).alias(
-        "luts"
-    )
-    _PQ_EXPR_MEMO[key] = (subs_col, codes_col, luts_col)
-    return subs_col, codes_col, luts_col
+
+        def cands(m: int) -> Column:
+            # arrays_zip names struct fields from the input aliases, so
+            # the argmax_dot fold sees the same (id, cen) shape as the
+            # per-struct literal form
+            return F.arrays_zip(
+                F.sequence(F.lit(1), F.lit(PQ_CODES)).cast("array<bigint>").alias("id"),
+                cen_lits[m].alias("cen"),
+            )
+
+        # corpus encode reads PRE-SLICED subvectors (``subs_col`` below,
+        # materialized in its own projection by the caller): with
+        # ``slice(emb_n, ...)`` as the fold's query vector, the
+        # interpreted per-candidate lambda re-allocates the 8-double slice
+        # for every one of the 32 candidates x 8 subspaces = 2048 array
+        # copies per row (r14); ``element_at`` on a materialized
+        # array<array<double>> attribute is a reference read.  Same dot
+        # folds over the same doubles — arithmetic unchanged.
+        subs_col = F.array(*[sub(F.col("emb_n"), m) for m in range(PQ_M)]).alias(
+            "__subs__"
+        )
+        codes_col = F.array(
+            *[
+                argmax_dot(F.element_at(F.col("__subs__"), m + 1), cands(m))
+                for m in range(PQ_M)
+            ]
+        ).alias("codes")
+        luts_col = F.array(*[_pq_lut(cen_lits, sub, m) for m in range(PQ_M)]).alias(
+            "luts"
+        )
+        return subs_col, codes_col, luts_col
+
+    return memo(spark, "pq_exprs", memo_key, build)
 
 
 @query("sim_pq_adc_topk", oracle=_pq_adc_oracle(), memo_plan=True)
@@ -1996,8 +1965,13 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     books = train_pq_books(
         spark, emb, PQ_M, PQ_SUB, PQ_CODES, cache_key=(sf_dir,)
     )
-    # memoized expression trees (see _PQ_EXPR_MEMO: building them is
-    # the warm-path bottleneck, ~2 s/call)
+    # memoized expression trees: the PQ trees are pure functions of
+    # the trained books, and BUILDING them is the warm-path bottleneck
+    # — the 8 nested-array F.lit py4j conversions alone measured 1.4 s
+    # and the argmax fold trees another 0.6 s per call at sf0.1 (vs
+    # ~1.3 s of actual cluster work).  Columns are immutable
+    # unresolved expressions, so reuse across calls in one session is
+    # safe.
     subs_col, codes_col, luts_col = _pq_exprs(
         spark, books, (sf_dir, PQ_M, PQ_SUB, PQ_CODES)
     )

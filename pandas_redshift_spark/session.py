@@ -3,9 +3,10 @@
 The reference holds a psycopg2 connection + boto3 client in module
 globals (``pandas_redshift/core.py:52-59,63``).  Here the session object
 is the :class:`pyspark.sql.SparkSession` itself; this module only adds
-(a) the runtime confs the engine relies on and (b) a lazy, cached
+(a) the runtime confs the engine relies on, (b) a lazy, cached
 registry over the driver-provided parquet corpus
-(``/root/testdata/sf*/``, tables listed in ``TABLE_NAMES``).
+(``/root/testdata/sf*/``, tables listed in ``TABLE_NAMES``) and (c)
+the one session memo (:func:`memo`) every memoized call site shares.
 
 Scale notes (100 TB design):
 
@@ -20,6 +21,8 @@ Scale notes (100 TB design):
 from __future__ import annotations
 
 import os
+from types import MappingProxyType
+from typing import Callable, TypeVar
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -128,93 +131,54 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     return df
 
 
-#: shared persisted-DataFrame memo, keyed (applicationId, *caller key).
-#: Operators that ``.persist()`` an intermediate consumed lazily by the
-#: returned plan cannot unpersist before the caller executes — so a
-#: bare per-call persist piles up MEMORY_AND_DISK blocks across
-#: repeated invocations (bench best-of-3, a 200-query sweep).  Routing
-#: through this memo makes each such frame persist ONCE per session
-#: and keeps repeated invocations plan-stable ("Asked to cache already
-#: cached data" warnings come from re-persisting identical plans).
-_PERSIST_MEMO: dict[tuple, DataFrame] = {}
+#: The one session memo: ``(family, *key) -> value`` for the live
+#: application only.  What may go in is what the EDBT 2020 incremental
+#: top-k session work reuses across queries in one session: plans,
+#: schemas, trained codebooks and statistics.  Results never do.
+_MEMO: dict[tuple, object] = {}
+#: the applicationId ``_MEMO`` belongs to.  Only one SparkContext is
+#: live per process, so clearing on a change evicts exactly the
+#: entries of stopped sessions (their dead JVM plan references).
+_memo_app: str | None = None
+_HITS: dict[str, int] = {}
+
+#: memo hits per family, read-only.  perfbench (``session.memo_hits.*``)
+#: and bench.py (``memo_hits``) read it around each timed region, so
+#: the warmed share of each timing is auditable.
+MEMO_HITS = MappingProxyType(_HITS)
+
+_MISSING = object()
+_T = TypeVar("_T")
 
 
-def evict_stale(memo: dict, app_id: str) -> None:
-    """Drop memo entries keyed to a stopped session (``key[0]`` is the
-    owning applicationId by convention).  Shared by every app-scoped
-    memo in the package — _PERSIST_MEMO, _TABLE_MEMO, stats._COUNT_MEMO
-    — so eviction semantics can't drift between copies."""
-    for k in [k for k in memo if k[0] != app_id]:
-        del memo[k]
+def memo(spark: SparkSession, family: str, key: tuple, build: Callable[[], _T]) -> _T:
+    """Return the value of ``build()`` for ``(family, *key)`` in the
+    live session, calling ``build`` only on the first use.  A build
+    that raises stores nothing.  Repeat calls return the same object
+    and count a hit in :data:`MEMO_HITS`."""
+    global _memo_app
+    app_id = spark.sparkContext.applicationId
+    if app_id != _memo_app:
+        _MEMO.clear()
+        _memo_app = app_id
+    k = (family, *key)
+    value = _MEMO.get(k, _MISSING)
+    if value is _MISSING:
+        value = _MEMO[k] = build()
+    else:
+        _HITS[family] = _HITS.get(family, 0) + 1
+    return value
 
 
 def memoized_persist(spark: SparkSession, cache_key: tuple, build) -> DataFrame:
-    """Return the one persisted DataFrame for ``cache_key`` in the live
-    session, building + persisting it on first use.  Entries from
-    stopped sessions (stale applicationId) are evicted on access, so
-    dead JVM plan references can't accumulate for the process
-    lifetime."""
-    app_id = spark.sparkContext.applicationId
-    evict_stale(_PERSIST_MEMO, app_id)
-    key = (app_id, *cache_key)
-    df = _PERSIST_MEMO.get(key)
-    if df is None:
-        df = build().persist()
-        _PERSIST_MEMO[key] = df
-    else:
-        note_memo_hit("persist")
-    return df
-
-
-#: session-scoped memo of fully-built QUERY PLANS keyed
-#: (applicationId, *caller key).  A DataFrame is an immutable
-#: UNEXECUTED logical plan — the same object class _TABLE_MEMO shares
-#: per table and similarity._PQ_EXPR_MEMO shares per expression tree
-#: (the r8 optimization the r14 audit verified REAL) — so handing the
-#: same plan back per session caches ZERO data or results: every
-#: execution still computes from the parquet inputs.  What it removes
-#: is the per-invocation PYTHON build cost: sim_pq_adc_topk spends
-#: ~0.55 s per call in ~1200 py4j round-trips re-assembling the same
-#: codebook-literal expression trees into the same plan (measured
-#: r15, warm memos, quiet machine — ~40% of the query's bench time).
-_FRAME_MEMO: dict[tuple, DataFrame] = {}
-
-#: memo-hit counters keyed by memo family name — bench.py reads these
-#: around each timed region and reports per-query hits in its JSON
-#: (`memo_hits`), making the warmed-metadata share of each timing
-#: auditable (r14 verdict watch item).
-MEMO_HITS: dict[str, int] = {}
-
-
-def note_memo_hit(family: str) -> None:
-    MEMO_HITS[family] = MEMO_HITS.get(family, 0) + 1
-
-
-def memoized_frame(spark: SparkSession, cache_key: tuple, build) -> DataFrame:
-    """Return the one BUILT DataFrame (logical plan) for ``cache_key``
-    in the live session, building it on first use.  Stale-app entries
-    evicted on access like every other app-scoped memo."""
-    app_id = spark.sparkContext.applicationId
-    evict_stale(_FRAME_MEMO, app_id)
-    key = (app_id, *cache_key)
-    df = _FRAME_MEMO.get(key)
-    if df is None:
-        df = build()
-        _FRAME_MEMO[key] = df
-    else:
-        note_memo_hit("frame")
-    return df
-
-
-#: module-level DataFrame memo keyed (applicationId, sf_dir, table):
-#: every operator call builds a fresh ``Tables``, and without this each
-#: one re-reads the parquet footer for schema inference (~30-80 ms per
-#: table — seconds across a 200-query sweep).  A DataFrame is an
-#: immutable logical plan, so sharing one per (session, dir, table) is
-#: free.  ``Tables.load`` evicts entries whose applicationId differs
-#: from the live session's, so plans (and their JVM references) from
-#: stopped sessions can't accumulate for the life of the process.
-_TABLE_MEMO: dict[tuple[str, str, str], DataFrame] = {}
+    """The one persisted DataFrame for ``cache_key`` in the live
+    session.  Operators that ``.persist()`` an intermediate consumed
+    lazily by the returned plan cannot unpersist before the caller
+    executes, so a bare per-call persist piles up MEMORY_AND_DISK
+    blocks across repeated invocations; routing through the memo
+    persists each such frame once per session and keeps repeat calls
+    plan-stable."""
+    return memo(spark, "persist", cache_key, lambda: build().persist())
 
 
 class Tables:
@@ -229,7 +193,6 @@ class Tables:
     def __init__(self, spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR):
         self._spark = configure_session(spark)
         self._sf_dir = sf_dir
-        self._cache = _TABLE_MEMO
 
     @property
     def spark(self) -> SparkSession:
@@ -242,28 +205,29 @@ class Tables:
     def load(self, name: str) -> DataFrame:
         if name not in TABLE_NAMES:
             raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-        app_id = self._spark.sparkContext.applicationId
-        evict_stale(self._cache, app_id)
-        key = (app_id, self._sf_dir, name)
-        if key in self._cache:
-            note_memo_hit("table")
-        else:
-            df = self._spark.read.parquet(f"{self._sf_dir}/{name}.parquet")
-            if name == "events" and isinstance(
-                df.schema["ts"].dataType, LongType
-            ):
-                # Spark 3.x + nanosAsLong: ts arrives as a nanos long.
-                # `DIV 1000` is exact integer division (a double divide
-                # would lose precision at ~1.7e18), then cast through
-                # LTZ micros to NTZ under the UTC session tz — matching
-                # DuckDB's naive reading.  Spark 4 reads TIMESTAMP(NANOS)
-                # as TIMESTAMP_NTZ(micros) directly, so no rewrite.
-                df = df.withColumn(
-                    "ts",
-                    F.expr("CAST(timestamp_micros(ts DIV 1000) AS TIMESTAMP_NTZ)"),
-                )
-            self._cache[key] = df
-        return self._cache[key]
+        # every operator call builds a fresh ``Tables``; without the
+        # memo each one re-reads the parquet footer for schema
+        # inference (~30-80 ms per table).  A DataFrame is an
+        # immutable logical plan, so sharing one per (dir, table) is
+        # free.
+        return memo(
+            self._spark, "table", (self._sf_dir, name), lambda: self._read(name)
+        )
+
+    def _read(self, name: str) -> DataFrame:
+        df = self._spark.read.parquet(f"{self._sf_dir}/{name}.parquet")
+        if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
+            # Spark 3.x + nanosAsLong: ts arrives as a nanos long.
+            # `DIV 1000` is exact integer division (a double divide
+            # would lose precision at ~1.7e18), then cast through
+            # LTZ micros to NTZ under the UTC session tz — matching
+            # DuckDB's naive reading.  Spark 4 reads TIMESTAMP(NANOS)
+            # as TIMESTAMP_NTZ(micros) directly, so no rewrite.
+            df = df.withColumn(
+                "ts",
+                F.expr("CAST(timestamp_micros(ts DIV 1000) AS TIMESTAMP_NTZ)"),
+            )
+        return df
 
     def __getattr__(self, name: str) -> DataFrame:
         if name.startswith("_"):

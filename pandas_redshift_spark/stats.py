@@ -12,7 +12,8 @@ table (ADVICE r8).
 :func:`table_rows` consolidates them: one count job per
 ``(application, sf_dir, table)`` for the whole session, always against
 the RAW parquet scan (pure row-count, no compute pulled in), cached in
-the same app-scoped memo pattern as ``session._PERSIST_MEMO``.
+the session memo (``session.memo``, families ``table_rows`` and
+``column_minmax``).
 
 100 TB note: even a raw-scan count is a job; on a real cluster this
 lookup belongs to the catalog (``ANALYZE TABLE``-maintained stats, or
@@ -30,25 +31,15 @@ no current hash.
 
 from __future__ import annotations
 
-from pandas_redshift_spark.session import Tables, evict_stale, note_memo_hit
-
-_COUNT_MEMO: dict[tuple, int] = {}
+from pandas_redshift_spark.session import Tables, memo
 
 
 def table_rows(t: Tables, name: str) -> int:
     """Raw row count of ``{sf_dir}/{name}.parquet``, one count job per
-    session per table (app-scoped memo, stale apps evicted)."""
-    app_id = t.spark.sparkContext.applicationId
-    evict_stale(_COUNT_MEMO, app_id)
-    key = (app_id, t.sf_dir, name)
-    if key not in _COUNT_MEMO:
-        _COUNT_MEMO[key] = t.load(name).count()
-    else:
-        note_memo_hit("table_rows")
-    return _COUNT_MEMO[key]
-
-
-_MINMAX_MEMO: dict[tuple, dict] = {}
+    session per table."""
+    return memo(
+        t.spark, "table_rows", (t.sf_dir, name), lambda: t.load(name).count()
+    )
 
 
 def column_minmax(t: Tables, name: str, cols: tuple[str, ...]) -> dict:
@@ -62,15 +53,11 @@ def column_minmax(t: Tables, name: str, cols: tuple[str, ...]) -> dict:
     bit-identical."""
     import pyspark.sql.functions as F
 
-    app_id = t.spark.sparkContext.applicationId
-    evict_stale(_MINMAX_MEMO, app_id)
-    key = (app_id, t.sf_dir, name, tuple(cols))
-    if key not in _MINMAX_MEMO:
+    def build() -> dict:
         row = t.load(name).agg(
             *[F.min(F.col(c).cast("double")).alias(f"mn_{c}") for c in cols],
             *[F.max(F.col(c).cast("double")).alias(f"mx_{c}") for c in cols],
         ).first()
-        _MINMAX_MEMO[key] = {c: (row[f"mn_{c}"], row[f"mx_{c}"]) for c in cols}
-    else:
-        note_memo_hit("column_minmax")
-    return _MINMAX_MEMO[key]
+        return {c: (row[f"mn_{c}"], row[f"mx_{c}"]) for c in cols}
+
+    return memo(t.spark, "column_minmax", (t.sf_dir, name, tuple(cols)), build)

@@ -16,23 +16,13 @@ dropped deterministically rather than growing state forever.
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from pandas_redshift_spark.session import (
-    configure_session,
-    evict_stale,
-    note_memo_hit,
-)
-
-#: (applicationId, parquet path) -> StructType: the file-stream
-#: source needs an explicit schema, and the batch probe that infers
-#: it re-reads the parquet footer on every streaming invocation
-#: (~85 ms measured, r14).  A schema is immutable metadata — same
-#: memo class as session._TABLE_MEMO, stale apps evicted on access.
-_SCHEMA_MEMO: dict[tuple, object] = {}
+from pandas_redshift_spark.session import configure_session, memo
 
 
 def event_time_ltz(df: DataFrame) -> DataFrame:
@@ -58,25 +48,25 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     on TimestampType."""
     configure_session(spark)
     path = f"{sf_dir}/events.parquet"
-    app_id = spark.sparkContext.applicationId
-    evict_stale(_SCHEMA_MEMO, app_id)
-    key = (app_id, path)
-    if key not in _SCHEMA_MEMO:
-        _SCHEMA_MEMO[key] = spark.read.parquet(path).schema  # footer probe
-    else:
-        note_memo_hit("stream_schema")
-    schema = _SCHEMA_MEMO[key]
+    # the file-stream source needs an explicit schema, and the batch
+    # probe that infers it re-reads the parquet footer on every
+    # streaming invocation (~85 ms measured, r14).  A schema is
+    # immutable metadata, so it is shared per session.
+    schema = memo(
+        spark, "stream_schema", (path,), lambda: spark.read.parquet(path).schema
+    )
     # the file stream source requires a *directory*; stage a symlink
     # dir (the corpus ships single-file tables; a production lake
-    # would already be a directory of parquet parts)
-    import hashlib
-    import os
-
+    # would already be a directory of parquet parts).  Processes that
+    # share an sf_dir share the stage, so a link another one just made
+    # is not an error.
     stage = f"/tmp/prs_stream_{hashlib.sha1(sf_dir.encode()).hexdigest()[:10]}"
     os.makedirs(stage, exist_ok=True)
     link = f"{stage}/events.parquet"
-    if not os.path.exists(link):
+    try:
         os.symlink(os.path.abspath(path), link)
+    except FileExistsError:
+        pass
     raw = spark.readStream.schema(schema).parquet(stage)
     return event_time_ltz(raw)
 
@@ -255,8 +245,18 @@ def adaptive_state_width(
     bytes picks the measured-best width at BOTH rungs and keeps
     growing to the cap at 100 TB; a real deployment sizes the same
     knob from key cardinality x throughput."""
+    path = os.path.join(sf_dir, "events.parquet")
     try:
-        nbytes = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
+        if os.path.isdir(path):
+            # a directory-shaped table: its own size is the ~4 KB
+            # directory entry, so sum its part files
+            nbytes = sum(
+                os.path.getsize(os.path.join(root, f))
+                for root, _, files in os.walk(path)
+                for f in files
+            )
+        else:
+            nbytes = os.path.getsize(path)
     except OSError:
         return cap
     width = max(-(-int(nbytes) // int(bytes_per_partition)), floor)  # ceil

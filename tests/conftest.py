@@ -22,3 +22,13 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+def drop_memo(*families: str) -> None:
+    """Drop the session-memo entries of the named families (e.g.
+    ``"persist"``, ``"frame"``) so their next use rebuilds them cold.
+    Every other family (tables, trained codebooks) stays warm."""
+    from pandas_redshift_spark import session
+
+    for key in [k for k in session._MEMO if k[0] in families]:
+        del session._MEMO[key]

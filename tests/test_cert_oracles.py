@@ -99,11 +99,10 @@ def test_semdedup_cert_oracle_hierarchical_regime(spark, sf_dir, monkeypatch):
     contract the flat regime holds (no primary-oracle leg here: the
     static primary replays the flat schedule by construction)."""
     import pandas_redshift_spark.operators.similarity as sim
-    from pandas_redshift_spark.session import _FRAME_MEMO, _PERSIST_MEMO
+    from tests.conftest import drop_memo
 
     monkeypatch.setattr(sim, "KMEANS_FLAT_TRAIN_MAX_K", 8)
-    _PERSIST_MEMO.clear()
-    _FRAME_MEMO.clear()
+    drop_memo("persist", "frame")
 
     spec = all_queries()["dedup_semantic_ivf"]
     con = duckdb.connect()
@@ -120,8 +119,7 @@ def test_semdedup_cert_oracle_hierarchical_regime(spark, sf_dir, monkeypatch):
     assert canon_hash(sdf.copy()) == canon_hash(cert.copy()), (
         "hierarchical-regime Spark result != hierarchical SQL replay"
     )
-    _PERSIST_MEMO.clear()
-    _FRAME_MEMO.clear()
+    drop_memo("persist", "frame")
 
 
 def test_trainer_drift_check_grounds_the_pinned_codebook(spark, monkeypatch):

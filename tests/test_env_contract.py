@@ -13,6 +13,7 @@ suite.  These tests would have caught that as a single failure here.
 from __future__ import annotations
 
 import datetime
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql.types import LongType, TimestampNTZType
@@ -103,27 +104,87 @@ def test_core_ops_survive_both_ansi_modes(spark, sf_dir):
         spark.conf.set("spark.sql.ansi.enabled", orig)
 
 
-def test_memoized_persist_shares_and_evicts(spark):
-    """One persisted frame per (session, key); same key returns the
-    SAME DataFrame object (plan-stable repeat calls), and entries from
-    other/stopped applicationIds are evicted on access so dead-session
-    plans can't accumulate."""
-    from pandas_redshift_spark.session import _PERSIST_MEMO, memoized_persist
+def _stub_spark(app_id: str):
+    return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+
+@pytest.fixture
+def empty_memo(monkeypatch):
+    """A private, empty session memo for the test, so stub
+    applicationIds cannot evict the live session's entries."""
+    from pandas_redshift_spark import session
+
+    monkeypatch.setattr(session, "_MEMO", {})
+    monkeypatch.setattr(session, "_memo_app", None)
+
+
+def test_memo_shares_and_evicts(empty_memo):
+    """One value per (session, family, key): the same key returns the
+    SAME object (plan-stable repeat calls), the build runs once, and
+    another application never receives this one's entries."""
+    from pandas_redshift_spark.session import memo
 
     calls = []
 
     def build():
         calls.append(1)
-        return spark.range(3)
+        return object()
 
-    a = memoized_persist(spark, ("t_memo_unit",), build)
-    b = memoized_persist(spark, ("t_memo_unit",), build)
-    assert a is b and len(calls) == 1
-    # plant a stale entry from a "dead" session; next access evicts it
-    _PERSIST_MEMO[("app-does-not-exist", "stale")] = a
-    memoized_persist(spark, ("t_memo_unit",), build)
-    assert ("app-does-not-exist", "stale") not in _PERSIST_MEMO
-    app_id = spark.sparkContext.applicationId
-    assert (app_id, "t_memo_unit") in _PERSIST_MEMO
-    del _PERSIST_MEMO[(app_id, "t_memo_unit")]
-    a.unpersist()
+    app_a, app_b = _stub_spark("app-a"), _stub_spark("app-b")
+    a = memo(app_a, "t_family", ("k",), build)
+    assert memo(app_a, "t_family", ("k",), build) is a and len(calls) == 1
+    b = memo(app_b, "t_family", ("k",), build)
+    assert b is not a and len(calls) == 2
+    # back on app-a: its entry went with the application change
+    assert memo(app_a, "t_family", ("k",), build) not in (a, b)
+
+
+def test_memo_failed_build_stores_nothing(empty_memo):
+    from pandas_redshift_spark.session import memo
+
+    spark = _stub_spark("app-a")
+
+    def fail():
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError):
+        memo(spark, "t_family", ("k",), fail)
+    value = object()
+    assert memo(spark, "t_family", ("k",), lambda: value) is value
+
+
+def test_memo_hits_counted_per_family(spark, sf_dir):
+    """A repeat call counts one hit in MEMO_HITS under its family, for
+    every memo site perfbench reports plus the statistics and k-means
+    families; MEMO_HITS itself is read-only."""
+    from pandas_redshift_spark import session, stats
+    from pandas_redshift_spark.operators import all_queries
+    from pandas_redshift_spark.operators.similarity import (
+        train_kmeans_centroid_values,
+    )
+    from pandas_redshift_spark.streaming.windows import read_events_stream
+
+    t = Tables(spark, sf_dir)
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(4)], "vec_id long, emb_n array<double>"
+    )
+    calls = {
+        "table": lambda: t.load("region"),
+        "frame": lambda: all_queries()["profile_table_summary"].fn(spark, sf_dir),
+        "persist": lambda: session.memoized_persist(
+            spark, ("t_memo_hits",), lambda: spark.range(2)
+        ),
+        "stream_schema": lambda: read_events_stream(spark, sf_dir),
+        "table_rows": lambda: stats.table_rows(t, "region"),
+        "column_minmax": lambda: stats.column_minmax(t, "region", ("r_regionkey",)),
+        "kmeans": lambda: train_kmeans_centroid_values(
+            spark, emb, 2, ("t_memo_hits",), iters=1, sample_mod=1
+        ),
+    }
+    for family, call in calls.items():
+        call()
+        before = session.MEMO_HITS.get(family, 0)
+        call()
+        assert session.MEMO_HITS[family] == before + 1, family
+    with pytest.raises(TypeError):
+        session.MEMO_HITS["table"] = 0

@@ -672,10 +672,9 @@ def test_results_invariant_under_partition_count(spark, sf_dir):
         # without clearing, the second partition-count run would read
         # the FIRST run's materialized frames and the comparison is
         # vacuous for any memoized query
-        from pandas_redshift_spark.session import _FRAME_MEMO, _PERSIST_MEMO
+        from tests.conftest import drop_memo
 
-        _PERSIST_MEMO.clear()
-        _FRAME_MEMO.clear()
+        drop_memo("persist", "frame")
         spark.catalog.clearCache()
 
     old = spark.conf.get("spark.sql.shuffle.partitions")

@@ -345,7 +345,7 @@ def test_kmeans_seed_selection_has_no_single_partition_sort(spark, sf_dir):
 def test_every_registered_plan_passes_audit(spark, sf_dir):
     from pandas_redshift_spark.operators import all_queries
     from pandas_redshift_spark.plans.audit import audit_plan
-    from pandas_redshift_spark.session import _FRAME_MEMO, _PERSIST_MEMO
+    from tests.conftest import drop_memo
 
     # Audit COLD plans: a memoized frame already materialized by an
     # earlier test shows AQE-finalized cached partitioning (with
@@ -353,8 +353,7 @@ def test_every_registered_plan_passes_audit(spark, sf_dir):
     # exchanges and makes findings depend on test order.  Dropping the
     # memo + cache gives every query the same unmaterialized plan no
     # matter what ran before (consumers rebuild the memo lazily).
-    _PERSIST_MEMO.clear()
-    _FRAME_MEMO.clear()
+    drop_memo("persist", "frame")
     spark.catalog.clearCache()
 
     unwaived, fired = [], set()

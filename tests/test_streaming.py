@@ -448,3 +448,47 @@ def test_append_immediate_emit_plans_skip_no_data_batches(spark, sf_dir, events_
 
     assert not _append_needs_no_data_batches(attribution_join(events_stream))
     assert not _append_needs_no_data_batches(stream_dedup(events_stream))
+
+
+def test_adaptive_state_width_sums_directory_tables(spark, tmp_path):
+    """A directory-shaped events table is sized by its part files, not
+    by the ~4 KB directory entry: it gets the same width as one file
+    of the same total size."""
+    from pandas_redshift_spark.streaming.windows import adaptive_state_width
+
+    parts = tmp_path / "dir_sf" / "events.parquet"
+    parts.mkdir(parents=True)
+    for i in range(3):
+        (parts / f"part-{i:05d}.parquet").write_bytes(b"x" * 1000)
+    single = tmp_path / "file_sf"
+    single.mkdir()
+    (single / "events.parquet").write_bytes(b"x" * 3000)
+
+    def width(sf):
+        return adaptive_state_width(spark, str(sf), bytes_per_partition=500, cap=16)
+
+    assert width(single) == 6
+    assert width(tmp_path / "dir_sf") == 6
+
+
+def test_read_events_stream_tolerates_a_link_made_concurrently(
+    spark, sf_dir, events_stream, monkeypatch
+):
+    """Two processes on one sf_dir share the stream stage: when the
+    other one creates the symlink between this one's check and its
+    own symlink call, the stream still opens."""
+    import os
+
+    from pandas_redshift_spark.streaming import windows
+
+    exists = os.path.exists
+
+    def link_not_seen(path):
+        # the link exists (the fixture made it), but the check races
+        # with its creation and does not see it
+        if str(path).startswith("/tmp/prs_stream_"):
+            return False
+        return exists(path)
+
+    monkeypatch.setattr(windows.os.path, "exists", link_not_seen)
+    assert read_events_stream(spark, sf_dir).isStreaming
