@@ -29,7 +29,7 @@ def write_bucketed(
     of the caller's cwd."""
     spark = df.sparkSession
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    path = _stage_dir(f"bucketed_{table}")
+    path = _stage_dir(spark, f"bucketed_{table}")
     (
         df.write.bucketBy(n_buckets, key)
         .sortBy(key)

@@ -454,7 +454,7 @@ def pipe_shard_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pandas_redshift_spark.operators.sourcesinks import _stage_dir
 
     d = Tables(spark, sf_dir).documents
-    path = _stage_dir("train_shards")
+    path = _stage_dir(spark, "train_shards")
     (
         d.repartition(8)
         .write.mode("overwrite")

@@ -16,10 +16,8 @@ so CSV type inference can't drift.
 
 from __future__ import annotations
 
-import atexit
 import os
 import shutil
-import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -30,44 +28,16 @@ from pandas_redshift_spark.operators.exactsum import (
     revenue_sum_exact_sql,
 )
 from pandas_redshift_spark.operators.registry import query
-from pandas_redshift_spark.session import Tables
-
-_STAGE_ROOT = os.path.join(tempfile.gettempdir(), "pandas_redshift_spark_stage")
-
-#: pid-scoped batch staging root, following the shared stage parent's
-#: naming contract (<prefix>_<owning-pid>, see streaming_exec's
-#: dead-pid sweep, which knows this prefix): r8's sf1 certification
-#: ran concurrently with a pytest sweep and the old FIXED per-name
-#: dirs let one process rmtree a directory the other was mid-read
-#: (three spurious UNABLE_TO_INFER_SCHEMA/IO errors).  Scoping by pid
-#: makes concurrent sessions on one machine independent; the sweeper
-#: reaps dirs whose owner died, and atexit reaps our own.
-_BATCH_STAGE = os.path.join(_STAGE_ROOT, f"batch_stage_{os.getpid()}")
-atexit.register(shutil.rmtree, _BATCH_STAGE, ignore_errors=True)
+from pandas_redshift_spark.session import Tables, scratch_root
 
 
-def _stage_dir(name: str) -> str:
-    """Fresh staging directory per operator run (the reference used a
-    uuid4-suffixed CSV name per load, core.py:291; a cleaned fixed dir
-    — per process — keeps reruns deterministic)."""
-    path = os.path.join(_BATCH_STAGE, name)
+def _stage_dir(spark: SparkSession, name: str) -> str:
+    """Fresh staging directory per operator run under the
+    application's :func:`scratch_root` (the reference used a
+    uuid4-suffixed CSV name per load, core.py:291; a fixed name,
+    emptied before use, keeps reruns deterministic)."""
+    path = os.path.join(scratch_root(spark), name)
     shutil.rmtree(path, ignore_errors=True)
-    return path
-
-
-#: one Derby staging dir per process (pid-keyed so a fork never reuses
-#: the parent's entry): embedded Derby keeps every database it has
-#: booted open until JVM shutdown, so a fresh dir per CALL would leak
-#: a staging dir + a permanently-cached Derby instance per invocation.
-_DERBY_STAGE: dict[int, str] = {}
-
-
-def _derby_stage_dir() -> str:
-    pid = os.getpid()
-    path = _DERBY_STAGE.get(pid)
-    if path is None or not os.path.isdir(path):
-        path = tempfile.mkdtemp(prefix="prs_jdbc_stage_")
-        _DERBY_STAGE[pid] = path
     return path
 
 
@@ -86,7 +56,7 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit schema (no inference drift).  Distributed: one CSV file
     per task vs the reference's single in-memory StringIO object."""
     c = Tables(spark, sf_dir).customer
-    path = _stage_dir("csv_roundtrip")
+    path = _stage_dir(spark, "csv_roundtrip")
     (
         c.write.mode("overwrite")
         .option("header", True)
@@ -129,10 +99,12 @@ def sink_overwrite_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Table sink with overwrite-then-append semantics (the reference's
     drop/create vs ``append=True`` branch, core.py:297-300): write
     nation with mode=overwrite, append it again, read back and count
-    copies per key.  Spark's commit protocol makes the overwrite atomic
-    — the reference's drop+commit-then-COPY was not (SURVEY.md §3)."""
+    copies per key.  The overwrite is not atomic: a path
+    ``mode("overwrite")`` deletes the old files before its job runs, so
+    a job that fails leaves an empty dir, like the reference's
+    drop+commit-then-COPY (ROADMAP.md item 1)."""
     n = Tables(spark, sf_dir).nation
-    path = _stage_dir("sink_overwrite_append")
+    path = _stage_dir(spark, "sink_overwrite_append")
     n.write.mode("overwrite").parquet(path)
     n.write.mode("append").parquet(path)
     back = spark.read.parquet(path)
@@ -161,7 +133,7 @@ def ctas_union_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     location, then scanned back."""
     t = Tables(spark, sf_dir)
     t.register_views()
-    path = _stage_dir("ctas_union_segments")
+    path = _stage_dir(spark, "ctas_union_segments")
     spark.sql("DROP TABLE IF EXISTS prs_ctas_union_segments")
     spark.sql(
         f"""
@@ -196,7 +168,7 @@ def ddl_create_insert_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     remote engine to delegate DDL to (SURVEY.md §0)."""
     t = Tables(spark, sf_dir)
     t.register_views()
-    path = _stage_dir("ddl_create_insert")
+    path = _stage_dir(spark, "ddl_create_insert")
     spark.sql("DROP TABLE IF EXISTS prs_region_stats")
     spark.sql(
         f"CREATE TABLE prs_region_stats (r_name STRING, n_nations BIGINT) "
@@ -233,7 +205,7 @@ def sink_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     analogue of the reference's sortkey zone maps (core.py:208-211),
     and the core trick that turns a 100 TB scan into a 100 GB one."""
     ev = Tables(spark, sf_dir).events
-    path = _stage_dir("partitioned_events")
+    path = _stage_dir(spark, "partitioned_events")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(path)
     back = spark.read.parquet(path)
     return (
@@ -272,7 +244,7 @@ def join_dynamic_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     join-time equivalent of static pruning, essential when the
     partition predicate can't be written literally."""
     ev = Tables(spark, sf_dir).events
-    path = _stage_dir("dpp_events")
+    path = _stage_dir(spark, "dpp_events")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(path)
     fact = spark.read.parquet(path)
     hot = (
@@ -311,12 +283,13 @@ def dml_update_delete_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DML on an immutable lake: DELETE (:38) and UPDATE (:143 in the
     reference's reserved list; both reach Redshift via exec_commit,
     core.py:307-309) expressed as partition rewrites — filter-out for
-    DELETE, conditional recompute for UPDATE, one atomic overwrite.
+    DELETE, conditional recompute for UPDATE, one overwrite (not
+    atomic: the old files are deleted first, ROADMAP.md item 1).
     This is the parquet-lake pattern under Delta/Iceberg's MERGE; at
     100 TB you'd partition first and rewrite only affected partitions
     (see sink_partitioned_prune)."""
     p = Tables(spark, sf_dir).part
-    staged = _stage_dir("dml_rewrite")
+    staged = _stage_dir(spark, "dml_rewrite")
     # DELETE FROM part WHERE p_size < 5
     after_delete = p.filter(~(F.col("p_size") < 5))
     # UPDATE part SET p_retailprice = p_retailprice * 1.1 WHERE p_brand = 'Brand#1'
@@ -354,7 +327,8 @@ def dml_update_delete_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dml_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE/upsert on an immutable lake (matched -> update, not
     matched -> insert): changes win over base via anti-join + union,
-    one atomic overwrite — the parquet equivalent of Delta/Iceberg
+    one overwrite that deletes the old files first (not atomic,
+    ROADMAP.md item 1) — the parquet equivalent of Delta/Iceberg
     MERGE INTO and of a Redshift staging-table merge (the reference's
     append-vs-overwrite flag, core.py:297-300, cannot express this).
     At 100 TB: partition both sides on the key and rewrite only
@@ -373,7 +347,7 @@ def dml_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         broadcast(changes.select("n_nationkey")), "n_nationkey", "left_anti"
     ).select("n_nationkey", "n_name", "n_regionkey")
     merged = changes.unionByName(keep)
-    staged = _stage_dir("merge_upsert")
+    staged = _stage_dir(spark, "merge_upsert")
     merged.write.mode("overwrite").parquet(staged)
     return spark.read.parquet(staged)
 
@@ -409,7 +383,8 @@ def dml_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse consecutive duplicates per user (only real changes cut a
     version), then derive valid_from/valid_to/is_current with
     lead() over the change rows, and land the dimension with one
-    atomic overwrite like the other dml_ ops.
+    overwrite like the other dml_ ops (it deletes the old files first,
+    so it is not atomic, ROADMAP.md item 1).
 
     Scale design: both windows (the dedupe lag and the interval
     lead) share the user_id partitioning, so the whole build is ONE
@@ -433,7 +408,7 @@ def dml_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format(F.lead("ts").over(w), "yyyy-MM-dd HH:mm:ss").alias("valid_to"),
         F.lead("ts").over(w).isNull().alias("is_current"),
     )
-    staged = _stage_dir("scd2_dimension")
+    staged = _stage_dir(spark, "scd2_dimension")
     scd.write.mode("overwrite").parquet(staged)
     return spark.read.parquet(staged)
 
@@ -456,7 +431,7 @@ def source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     write, schema-explicit read (no sampling-inference pass, which at
     100 TB would cost a full extra scan)."""
     e = Tables(spark, sf_dir).events.select("event_id", "event_type", "value", "props")
-    path = _stage_dir("json_roundtrip")
+    path = _stage_dir(spark, "json_roundtrip")
     e.write.mode("overwrite").json(path)
     back = spark.read.schema(
         "event_id BIGINT, event_type STRING, value DOUBLE, props STRING"
@@ -486,7 +461,7 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale the same PushedFilters row-group skipping applies as with
     parquet, so format choice doesn't change the plan shape."""
     li = Tables(spark, sf_dir).lineitem
-    path = _stage_dir("orc_roundtrip")
+    path = _stage_dir(spark, "orc_roundtrip")
     li.filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp_ntz"))
         & (F.col("l_shipdate") < F.lit("1997-02-01 00:00:00").cast("timestamp_ntz"))
@@ -520,7 +495,7 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     task; the reader splits by rowTag, so a directory of parts scans
     in parallel exactly like the other text sources."""
     s = Tables(spark, sf_dir).supplier
-    path = _stage_dir("xml_roundtrip")
+    path = _stage_dir(spark, "xml_roundtrip")
     s.write.mode("overwrite").option("rowTag", "row").format("xml").save(path)
     back = (
         spark.read.option("rowTag", "row")
@@ -563,7 +538,7 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB you'd pin the merged schema in a metastore instead, but
     the read semantics are identical."""
     o = Tables(spark, sf_dir).orders
-    path = _stage_dir("schema_evolution")
+    path = _stage_dir(spark, "schema_evolution")
     o.filter(F.col("o_orderkey") < 1000).select("o_orderkey", "o_totalprice").write.mode(
         "overwrite"
     ).parquet(f"{path}/batch=1")
@@ -608,7 +583,7 @@ def sink_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = Tables(spark, sf_dir)
     li = t.lineitem
-    path = _stage_dir("zorder_lineitem")
+    path = _stage_dir(spark, "zorder_lineitem")
     # sortkey bounds via the session-memoized catalog-stats lookup
     # (stats.column_minmax, same class as table_rows): the inline agg
     # re-ran a full min/max scan per invocation — ~0.33 s of the 1.5 s
@@ -663,15 +638,12 @@ def source_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Identifiers in the pushdown SQL are double-quoted: Spark's JDBC
     writer quotes names on CREATE and unquoted identifiers fold in
     engine-specific directions (Derby upper, Redshift lower).  The
-    Derby db dir is one ``mkdtemp`` per PROCESS, reused across calls
-    (:func:`_derby_stage_dir`): mkdtemp can never collide with a stale
-    ``db.lck`` from a crashed run (unlike a name keyed on a recyclable
-    pid), while reusing it keeps a driver sweep / bench best-of-3 from
-    leaking a staging dir and a permanently-booted embedded Derby
-    instance per invocation — embedded Derby holds every database it
-    has opened until JVM shutdown, so one DB per process is the cap.
-    Repeat calls overwrite the same table (write_table's default is
-    the atomic overwrite mode).  ``derby.stream.error.file`` is
+    Derby database is ``derby/`` under the application's
+    :func:`scratch_root`, reused across calls: embedded Derby holds
+    every database it has opened until JVM shutdown, so one database
+    per application is the cap.  Repeat calls overwrite the same table
+    (write_table's default overwrite drops the old table first, so it
+    is not atomic, ROADMAP.md item 1).  ``derby.stream.error.file`` is
     pointed into the staging dir so ``derby.log`` never lands in
     whatever cwd the driver happens to run from (the property is read
     at Derby engine boot; setting it later in the same JVM is a
@@ -696,16 +668,15 @@ def source_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     live multi-partition + pushdown evidence is test_jdbc_integration
     (single-JVM local mode, numPartitions=4, PushedFilters
     asserted)."""
-    import os as _os
-
     from pandas_redshift_spark.sources.bridge import SparkRedshiftBridge
 
     t = Tables(spark, sf_dir)
-    stage = _derby_stage_dir()
-    dbdir = _os.path.join(stage, "db")
+    stage = os.path.join(scratch_root(spark), "derby")
+    os.makedirs(stage, exist_ok=True)
+    dbdir = os.path.join(stage, "db")
     try:
         spark._jvm.java.lang.System.setProperty(
-            "derby.stream.error.file", _os.path.join(stage, "derby.log")
+            "derby.stream.error.file", os.path.join(stage, "derby.log")
         )
     except Exception:
         pass  # non-JVM test doubles; Derby then uses its default

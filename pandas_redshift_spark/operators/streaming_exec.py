@@ -25,17 +25,14 @@ only, core.py:82-87).
 
 from __future__ import annotations
 
-import atexit as _atexit
-import glob as _glob
-import os as _os
-import shutil as _shutil
-import tempfile as _tempfile
+import os
 import uuid
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from pandas_redshift_spark.operators.registry import query
+from pandas_redshift_spark.session import scratch_root
 from pandas_redshift_spark.streaming.windows import (
     read_events_stream,
     run_to_files,
@@ -43,42 +40,6 @@ from pandas_redshift_spark.streaming.windows import (
     stream_dedup,
     tumbling_counts,
 )
-
-#: pid-scoped root for streaming parquet sink + checkpoint dirs: uuid
-#: dirs per call.  At import, reap dirs left by DEAD prior sessions
-#: (a pid-scoped rmtree of our own — nonexistent — dir would reclaim
-#: nothing, ADVICE r5); live processes' dirs are left alone by
-#: checking /proc, and our own dir is registered for atexit cleanup
-#: (never removed mid-session — returned frames read their snapshot
-#: lazily).
-_SNAP_PARENT = _os.path.join(
-    _tempfile.gettempdir(), "pandas_redshift_spark_stage"
-)
-_SNAP_ROOT = _os.path.join(_SNAP_PARENT, f"stream_snaps_{_os.getpid()}")
-# the sweep covers BOTH pid-suffixed dir families under the stage
-# parent: stream_snaps_<pid> (ours) and fb_upsert_<pid>
-# (run_foreachbatch_upsert's staging dirs, streaming/windows.py),
-# which would otherwise accumulate from dead sessions (ADVICE r6).
-# The glob names the known prefixes EXPLICITLY (ADVICE r7): a
-# bare *_* would rmtree any future stage dir whose trailing token
-# happens to be a dead pid's integer (e.g. part_0).  Any new writer
-# under _SNAP_PARENT must use a <prefix>_<owning-pid> name and add
-# its prefix here.  batch_stage_<pid> is sourcesinks' pid-scoped
-# batch staging root (r8 — fixed per-name dirs let concurrent
-# sessions clobber each other mid-read).
-_SWEEP_PREFIXES = ("stream_snaps_", "fb_upsert_", "batch_stage_")
-for _old in (
-    p
-    for pre in _SWEEP_PREFIXES
-    for p in _glob.glob(_os.path.join(_SNAP_PARENT, pre + "*"))
-):
-    try:
-        _old_pid = int(_old.rsplit("_", 1)[-1])
-    except ValueError:
-        continue
-    if _old_pid != _os.getpid() and not _os.path.exists(f"/proc/{_old_pid}"):
-        _shutil.rmtree(_old, ignore_errors=True)
-_atexit.register(_shutil.rmtree, _SNAP_ROOT, ignore_errors=True)
 
 
 def _run(
@@ -101,19 +62,15 @@ def _run(
     shape the drain is the same cost as the old snapshot (the write
     happened either way); at sf30 it is the difference between
     finishing and hanging.  Snapshot + checkpoint dirs are uuid-named
-    under a pid-scoped root (reaped at import; same /tmp lifecycle as
-    the Derby staging note in operators/sourcesinks.py)."""
-    import os
-
-    name = f"prs_stream_{uuid.uuid4().hex[:12]}"
+    under the application's :func:`scratch_root`."""
     spark = stream_df.sparkSession
-    snap = os.path.join(_SNAP_ROOT, name)
+    snap = os.path.join(scratch_root(spark), f"stream_{uuid.uuid4().hex[:12]}")
     q = run_to_files(
         stream_df,
         snap,
         output_mode=mode,
         state_partitions=state_partitions,
-        checkpoint_dir=os.path.join(_SNAP_ROOT, name + "_ckpt"),
+        checkpoint_dir=snap + "_ckpt",
     )
     # the query has terminated (AvailableNow) — stop() releases the
     # listener bookkeeping

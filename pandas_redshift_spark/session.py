@@ -5,8 +5,10 @@ globals (``pandas_redshift/core.py:52-59,63``).  Here the session object
 is the :class:`pyspark.sql.SparkSession` itself; this module only adds
 (a) the runtime confs the engine relies on, (b) a lazy, cached
 registry over the driver-provided parquet corpus
-(``/root/testdata/sf*/``, tables listed in ``TABLE_NAMES``) and (c)
-the one session memo (:func:`memo`) every memoized call site shares.
+(``/root/testdata/sf*/``, tables listed in ``TABLE_NAMES``), (c)
+the one session memo (:func:`memo`) every memoized call site shares
+and (d) the one scratch directory (:func:`scratch_root`) every staged
+file goes under.
 
 Scale notes (100 TB design):
 
@@ -25,6 +27,7 @@ from types import MappingProxyType
 from typing import Callable, TypeVar
 
 import pyspark.sql.functions as F
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType
 
@@ -179,6 +182,21 @@ def memoized_persist(spark: SparkSession, cache_key: tuple, build) -> DataFrame:
     persists each such frame once per session and keeps repeat calls
     plan-stable."""
     return memo(spark, "persist", cache_key, lambda: build().persist())
+
+
+def scratch_root(spark: SparkSession) -> str:
+    """The application's scratch directory: ``prs`` under Spark's own
+    per-application driver temp dir (``SparkFiles.getRootDirectory()``,
+    inside ``spark.local.dir``).  Spark deletes that dir when the
+    context stops and when the JVM exits, so staged files never
+    outlive their application and two applications never share one."""
+
+    def build() -> str:
+        root = os.path.join(SparkFiles.getRootDirectory(), "prs")
+        os.makedirs(root, exist_ok=True)
+        return root
+
+    return memo(spark, "scratch", (), build)
 
 
 class Tables:

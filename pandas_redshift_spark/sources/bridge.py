@@ -39,6 +39,7 @@ from pandas_redshift_spark.plans.layout import (
     sortkey_columns,
     zorder_codes,
 )
+from pandas_redshift_spark.session import scratch_root
 from pandas_redshift_spark.sources.schema import (
     apply_validated_names,
     build_create_table_ddl,
@@ -229,7 +230,7 @@ class SparkRedshiftBridge:
         column's MIN/MAX probed with one tiny bounds query."""
         self._check_open()
         if not self.jdbc_options:
-            return self.spark.table(_catalog_name(table_name))
+            return self.spark.table(table_name)
         reader = self.spark.read.format("jdbc").options(**self.jdbc_options)
         if partition_column:
             if lower_bound is None or upper_bound is None:
@@ -337,7 +338,7 @@ class SparkRedshiftBridge:
             out = apply_layout(
                 sdf, diststyle=diststyle, distkey=distkey, sortkey=ZORDER_COL
             )
-            out.drop(ZORDER_COL).write.mode(mode).saveAsTable(_catalog_name(table_name))
+            out.drop(ZORDER_COL).write.mode(mode).saveAsTable(table_name)
         else:
             out = apply_layout(
                 sdf,
@@ -346,7 +347,7 @@ class SparkRedshiftBridge:
                 sortkey=sortkey,
                 sort_interleaved=sort_interleaved,
             )
-            out.write.mode(mode).saveAsTable(_catalog_name(table_name))
+            out.write.mode(mode).saveAsTable(table_name)
         if verbose:
             logger.info("wrote table %s (mode=%s)", table_name, mode)
 
@@ -364,7 +365,9 @@ class SparkRedshiftBridge:
     ) -> str:
         """Stage a DataFrame as CSV files — the distributed analogue of
         df_to_s3's single put_object (one file per task instead of one
-        object total).  Returns the staged directory path.
+        object total).  Returns the staged directory path: under
+        ``path_prefix``, else the S3 bucket and subdirectory, else the
+        application's :func:`~pandas_redshift_spark.session.scratch_root`.
 
         Reference parity (core.py:120-144): ``save_local`` writes a
         local CSV copy named ``csv_name`` first; extra ``kwargs`` are
@@ -406,7 +409,7 @@ class SparkRedshiftBridge:
         base = path_prefix or (
             f"s3a://{self.s3_options['bucket']}/{self.s3_options.get('subdirectory','')}"
             if self.s3_options.get("bucket")
-            else "/tmp/pandas_redshift_spark_stage/"
+            else scratch_root(self.spark)
         )
         path = f"{base.rstrip('/')}/{csv_name}"
         (
@@ -439,7 +442,7 @@ class SparkRedshiftBridge:
             .csv(staged_path)
         )
         mode = "append" if append else "overwrite"
-        sdf.write.mode(mode).saveAsTable(_catalog_name(table_name))
+        sdf.write.mode(mode).saveAsTable(table_name)
 
     # -- exec_commit (core.py:307-309) -----------------------------------
     def exec_sql(self, sql_query: str) -> None:
@@ -602,12 +605,6 @@ def _bind_literals(sql_query: str, params) -> str:
         out.append(_sql_literal(v))
         out.append(tail)
     return "".join(out)
-
-
-def _catalog_name(table_name: str) -> str:
-    # 'schema.table' strings are kept; Spark catalogs accept the same
-    # two-part shape once the database exists.
-    return table_name
 
 
 def _numeric_zorder_columns(

@@ -22,7 +22,7 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from pandas_redshift_spark.session import configure_session, memo
+from pandas_redshift_spark.session import configure_session, memo, scratch_root
 
 
 def event_time_ltz(df: DataFrame) -> DataFrame:
@@ -57,10 +57,11 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the file stream source requires a *directory*; stage a symlink
     # dir (the corpus ships single-file tables; a production lake
-    # would already be a directory of parquet parts).  Processes that
-    # share an sf_dir share the stage, so a link another one just made
-    # is not an error.
-    stage = f"/tmp/prs_stream_{hashlib.sha1(sf_dir.encode()).hexdigest()[:10]}"
+    # would already be a directory of parquet parts).  A repeat call in
+    # the same application finds the link already made.
+    stage = os.path.join(
+        scratch_root(spark), f"stream_src_{hashlib.sha1(sf_dir.encode()).hexdigest()[:10]}"
+    )
     os.makedirs(stage, exist_ok=True)
     link = f"{stage}/events.parquet"
     try:
@@ -638,7 +639,7 @@ def write_foreach_batch_idempotent(stream_df: DataFrame, out_dir: str):
     return q
 
 
-def run_foreachbatch_upsert(events: DataFrame, stage_name: str = "fb_upsert") -> DataFrame:
+def run_foreachbatch_upsert(events: DataFrame) -> DataFrame:
     """foreachBatch UPSERT sink: reduce each micro-batch to its latest
     row per user, merge against the current snapshot (union +
     keep-latest — associative, so ANY micro-batch split of the input
@@ -650,55 +651,33 @@ def run_foreachbatch_upsert(events: DataFrame, stage_name: str = "fb_upsert") ->
     dimension into the block manager just so the staging dir could be
     reclaimed immediately — wasted work at bench shape and a
     memory-pressure source at scale).  Each invocation gets a fresh
-    uuid dir under the pid-scoped ``fb_upsert_<pid>`` root, so
-    earlier invocations' returned frames stay readable; the root is
-    atexit-reaped here and dead-pid roots are swept at
-    operators.streaming_exec import (its _SWEEP_PREFIXES already
-    names ``fb_upsert_``).  The bare-parquet equivalent of a
+    uuid dir under ``fb_upsert/`` in the application's
+    :func:`scratch_root`, so earlier invocations' returned frames
+    stay readable.  The bare-parquet equivalent of a
     streaming MERGE INTO; at a real deployment the swap is a
     transactional-table commit and the trigger continuous — the
     per-batch plan is unchanged."""
-    import atexit
-    import os
     import shutil
-    import tempfile
     import uuid
 
     spark = events.sparkSession
-    # the dead-pid sweep at operators.streaming_exec import reaps
-    # roots by KNOWN prefix — a custom stage_name outside that family
-    # would leak its root forever after a hard kill (ADVICE r14)
-    if not stage_name.startswith("fb_upsert"):
-        raise ValueError(
-            f"stage_name {stage_name!r} must start with 'fb_upsert' so "
-            "streaming_exec's dead-pid sweep can reap it"
-        )
-    # pid-scoped like _SNAP_ROOT (ADVICE r5): a fixed shared dir lets
-    # two concurrent sessions clobber each other's current/next dirs
-    # and checkpoint mid-run; uuid per INVOCATION so prior calls'
-    # lazily-read snapshots are never deleted mid-session
-    pid_root = os.path.join(
-        tempfile.gettempdir(),
-        "pandas_redshift_spark_stage",
-        f"{stage_name}_{os.getpid()}",
-    )
-    if not os.path.isdir(pid_root):
-        os.makedirs(pid_root, exist_ok=True)
-        atexit.register(shutil.rmtree, pid_root, ignore_errors=True)
+    upsert_root = os.path.join(scratch_root(spark), "fb_upsert")
+    os.makedirs(upsert_root, exist_ok=True)
     # bound the per-session accumulation (ADVICE r14): keep only the
     # most recent invocations' snapshots — a long session re-invoking
-    # the upsert otherwise piles one dimension copy per call onto /tmp
-    # until exit.  K=8 leaves plenty of slack for callers that hold a
-    # returned (lazily-read) frame across a few later invocations;
-    # holding one longer than that needs its own copy.
+    # the upsert otherwise piles one dimension copy per call onto disk
+    # until the application stops.  K=8 leaves plenty of slack for
+    # callers that hold a returned (lazily-read) frame across a few
+    # later invocations; holding one longer than that needs its own
+    # copy.
     keep = 8
     old = sorted(
-        (os.path.join(pid_root, d) for d in os.listdir(pid_root)),
+        (os.path.join(upsert_root, d) for d in os.listdir(upsert_root)),
         key=os.path.getmtime,
     )
     for stale in old[: max(0, len(old) - (keep - 1))]:
         shutil.rmtree(stale, ignore_errors=True)
-    stage_root = os.path.join(pid_root, uuid.uuid4().hex[:12])
+    stage_root = os.path.join(upsert_root, uuid.uuid4().hex[:12])
     os.makedirs(stage_root, exist_ok=True)
     cur_dir = os.path.join(stage_root, "current")
     next_dir = os.path.join(stage_root, "next")
@@ -739,6 +718,6 @@ def run_foreachbatch_upsert(events: DataFrame, stage_name: str = "fb_upsert") ->
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
     # lazy read of the committed snapshot; checkpoint + next are gone,
-    # only the final current/ parquet stays until process exit
+    # only the final current/ parquet stays until the application stops
     shutil.rmtree(os.path.join(stage_root, "ckpt"), ignore_errors=True)
     return spark.read.parquet(cur_dir)

@@ -122,15 +122,23 @@ def test_jdbc_append_mode(jdbc_bridge):
     assert int(out["n"].iloc[0]) == 4
 
 
-def test_derby_stage_dir_is_reused_within_process():
-    """One Derby staging dir per process (code-review r4): a fresh
-    mkdtemp per CALL leaks a dir + a permanently-booted embedded Derby
-    database per invocation across a driver sweep."""
-    from pandas_redshift_spark.operators.sourcesinks import _derby_stage_dir
-
-    a = _derby_stage_dir()
-    b = _derby_stage_dir()
-    assert a == b
+def test_derby_stage_dir_is_reused_within_process(spark, sf_dir):
+    """One Derby database per application, under its scratch root: a
+    fresh database per CALL would leave a permanently-booted embedded
+    Derby instance per invocation across a driver sweep."""
     import os
 
-    assert os.path.isdir(a)
+    from pandas_redshift_spark.operators.sourcesinks import source_jdbc_roundtrip
+    from pandas_redshift_spark.session import scratch_root
+
+    try:
+        spark._jvm.java.lang.Class.forName("org.apache.derby.jdbc.EmbeddedDriver")
+    except Exception:
+        pytest.skip("Derby JDBC driver not on the Spark classpath")
+    stage = os.path.join(scratch_root(spark), "derby")
+    counts, listings = [], []
+    for _ in range(2):
+        counts.append(source_jdbc_roundtrip(spark, sf_dir).count())
+        listings.append(sorted(os.listdir(stage)))
+    assert counts[0] == counts[1] > 0
+    assert "db" in listings[0] and listings[0] == listings[1]

@@ -309,7 +309,7 @@ def test_foreachbatch_upsert_invariant_under_batch_split(spark, tmp_path):
     )
     got = {
         (r.user_id, r.event_id)
-        for r in run_foreachbatch_upsert(stream, stage_name="fb_upsert_test").collect()
+        for r in run_foreachbatch_upsert(stream).collect()
     }
     w = Window.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
     want = {
@@ -472,23 +472,23 @@ def test_adaptive_state_width_sums_directory_tables(spark, tmp_path):
 
 
 def test_read_events_stream_tolerates_a_link_made_concurrently(
-    spark, sf_dir, events_stream, monkeypatch
+    spark, sf_dir, events_stream
 ):
-    """Two processes on one sf_dir share the stream stage: when the
-    other one creates the symlink between this one's check and its
-    own symlink call, the stream still opens."""
+    """The stream stage lives under the application's scratch root, and
+    a link already in it (made by an earlier call, or by another
+    thread between this call's makedirs and symlink) is not an
+    error: the stream still opens on the same link."""
+    import glob
     import os
 
-    from pandas_redshift_spark.streaming import windows
+    from pandas_redshift_spark.session import scratch_root
 
-    exists = os.path.exists
-
-    def link_not_seen(path):
-        # the link exists (the fixture made it), but the check races
-        # with its creation and does not see it
-        if str(path).startswith("/tmp/prs_stream_"):
-            return False
-        return exists(path)
-
-    monkeypatch.setattr(windows.os.path, "exists", link_not_seen)
+    target = os.path.abspath(f"{sf_dir}/events.parquet")
+    links = [
+        p
+        for p in glob.glob(os.path.join(scratch_root(spark), "stream_src_*", "events.parquet"))
+        if os.path.islink(p) and os.readlink(p) == target
+    ]
+    assert len(links) == 1, links
     assert read_events_stream(spark, sf_dir).isStreaming
+    assert os.readlink(links[0]) == target

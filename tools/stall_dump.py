@@ -31,6 +31,7 @@ r12 — see memory/ops notes).
 from __future__ import annotations
 
 import argparse
+import glob
 import os
 import subprocess
 import sys
@@ -107,16 +108,19 @@ def dump_python(pid: int, out_dir: str) -> None:
 
 
 def dump_machine(out_dir: str) -> None:
-    stage = "/tmp/pandas_redshift_spark_stage"
+    # each application's scratch root (session.scratch_root) lives in
+    # Spark's per-application dir under the local dirs
+    local_dirs = os.environ.get("SPARK_LOCAL_DIRS", "/tmp").split(",")
+    stages = sorted(
+        p for d in local_dirs for p in glob.glob(os.path.join(d, "spark-*", "userFiles-*", "prs"))
+    )
     parts = [
         "## loadavg\n" + _read("/proc/loadavg"),
         "\n## meminfo (head)\n"
         + "\n".join(_read("/proc/meminfo").splitlines()[:12]),
         "\n## df\n" + _run(["df", "-h", "/tmp", os.path.dirname(__file__)]),
-        f"\n## staging dirs under {stage}\n"
-        + (_run(["du", "-sh", *(
-            os.path.join(stage, d) for d in sorted(os.listdir(stage))
-        )]) if os.path.isdir(stage) and os.listdir(stage) else "<none>"),
+        "\n## scratch roots under " + ",".join(local_dirs) + "\n"
+        + (_run(["du", "-sh", *stages]) if stages else "<none>"),
     ]
     with open(os.path.join(out_dir, "machine.txt"), "w") as f:
         f.write("\n".join(parts))
