@@ -2026,9 +2026,9 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # emb_n pass plus its ensure_parallelism exchange — just to feed a
     # 64xQ-row broadcast join; the per-row divide-by-norm arithmetic
     # below is _emb_double's exact expression, so every score is
-    # bit-identical).  The nrm > 0 filter is _emb_double's zero-norm
-    # guard — vacuous here (the shortlist only holds survivors) but
-    # kept so the branch's corpus predicate stays aligned.
+    # bit-identical).  _emb_double's zero-norm guard is not repeated:
+    # the shortlist holds only its survivors, and Catalyst would push
+    # the guard below the join, folding the norm over every corpus row.
     raw = t.embeddings.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").cast("array<double>").alias("emb"),
@@ -2036,7 +2036,6 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = (
         raw.join(broadcast(short), "neighbor_id")
         .withColumn("nrm", F.sqrt(dot(F.col("emb"), F.col("emb"))))
-        .filter(F.col("nrm") > 0)
         .withColumn(
             "n_en",
             F.zip_with(

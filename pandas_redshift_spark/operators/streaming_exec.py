@@ -5,8 +5,8 @@ round 4).
 Each query here runs a REAL streaming job — ``readStream`` over the
 events parquet, Trigger.AvailableNow, parquet file sink (distributed
 executor-side writes; the driver-heap memory sink wedged at sf30 —
-see _run), block until the stream drains — and returns the sink
-directory read back, so the external driver
+see streaming/windows.drain), block until the stream drains — and
+returns the sink directory read back, so the external driver
 hash-compares an actual Structured Streaming execution against batch
 ANSI SQL in DuckDB.  AvailableNow processes exactly the data present
 at start and then stops (the batch-parity trigger); ``complete``
@@ -25,57 +25,17 @@ only, core.py:82-87).
 
 from __future__ import annotations
 
-import os
-import uuid
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from pandas_redshift_spark.operators.registry import query
-from pandas_redshift_spark.session import scratch_root
 from pandas_redshift_spark.streaming.windows import (
+    drain,
     read_events_stream,
-    run_to_files,
     sliding_counts,
     stream_dedup,
     tumbling_counts,
 )
-
-
-def _run(
-    stream_df: DataFrame, mode: str, state_partitions: int | None = None
-) -> DataFrame:
-    """Drain ``stream_df`` into a uuid-named PARQUET directory (file
-    sink for append, foreachBatch overwrite/append for complete/
-    update — streaming/windows.run_to_files) and read the directory
-    back with the stream's own schema (explicit schema keeps a
-    zero-row drain readable).
-
-    History (r5 -> r13): the original memory-sink + snapshot pipeline
-    collected every emitted row onto the DRIVER heap per micro-batch
-    before the parquet snapshot could even start — a ``collect()`` in
-    disguise that wedged the three windowed/stateful executions at
-    sf30 (30M events; BENCH_scale_r12.md §3.5, VERDICT r12 item 2).
-    run_to_files makes the parquet directory BE the sink: every mode
-    lands as a distributed executor-side write, result size never
-    touches the driver, and the read-back is lazy.  Measured at bench
-    shape the drain is the same cost as the old snapshot (the write
-    happened either way); at sf30 it is the difference between
-    finishing and hanging.  Snapshot + checkpoint dirs are uuid-named
-    under the application's :func:`scratch_root`."""
-    spark = stream_df.sparkSession
-    snap = os.path.join(scratch_root(spark), f"stream_{uuid.uuid4().hex[:12]}")
-    q = run_to_files(
-        stream_df,
-        snap,
-        output_mode=mode,
-        state_partitions=state_partitions,
-        checkpoint_dir=snap + "_ckpt",
-    )
-    # the query has terminated (AvailableNow) — stop() releases the
-    # listener bookkeeping
-    q.stop()
-    return spark.read.schema(stream_df.schema).parquet(snap)
 
 
 @query(
@@ -96,7 +56,7 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver's hash check therefore certifies the STREAMING execution
     path, not a batch twin."""
     ev = read_events_stream(spark, sf_dir)
-    return _run(tumbling_counts(ev), "complete")
+    return drain(tumbling_counts(ev), "complete")
 
 
 @query(
@@ -123,7 +83,7 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows); the oracle replays the slide as a 2-way shift-union —
     window k for shift s starts at trunc(ts - 30m*s) + 30m*s."""
     ev = read_events_stream(spark, sf_dir)
-    return _run(sliding_counts(ev), "complete")
+    return drain(sliding_counts(ev), "complete")
 
 
 @query(
@@ -142,7 +102,7 @@ def streaming_dedup_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the comparison is deterministic even though WHICH duplicate row
     survives depends on arrival order within the micro-batch."""
     ev = read_events_stream(spark, sf_dir)
-    sunk = _run(stream_dedup(ev), "append")
+    sunk = drain(stream_dedup(ev), "append")
     return sunk.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("n_unique_users")
     )
@@ -204,7 +164,7 @@ def streaming_session_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     # adaptive_state_width's docstring).
     cap = min(max(spark.sparkContext.defaultParallelism // 2, 2), 32)
     parts = adaptive_state_width(spark, sf_dir, 256 << 10, cap)
-    return _run(session_aggregate(ev), "complete", state_partitions=parts)
+    return drain(session_aggregate(ev), "complete", state_partitions=parts)
 
 
 @query(
@@ -224,7 +184,7 @@ def streaming_user_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame
     streaming/stateful.py) run for real and drained with AvailableNow
     — this is the one driver-verified query that exercises the
     Arrow-batched executor-side Python path end to end (function
-    pickled by value to workers, update-mode state store, memory
+    pickled by value to workers, update-mode state store, parquet
     sink).  The update-mode sink appends one row per user per
     micro-batch, so the sink is reduced to the FINAL row per user —
     ``max_by(…, n_events)`` works because the running count is
@@ -235,7 +195,7 @@ def streaming_user_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame
     from pandas_redshift_spark.streaming.stateful import user_running_totals
 
     ev = read_events_stream(spark, sf_dir)
-    sunk = _run(user_running_totals(ev), "update")
+    sunk = drain(user_running_totals(ev), "update")
     return sunk.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
         F.max_by("total_value", "n_events").alias("total_value"),
@@ -289,7 +249,7 @@ def streaming_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both rungs (adaptive_state_width's docstring has the table).
     cap = min(max(spark.sparkContext.defaultParallelism // 4, 1), 16)
     parts = adaptive_state_width(spark, sf_dir, 512 << 10, cap)
-    return _run(attribution_join(ev), "append", state_partitions=parts)
+    return drain(attribution_join(ev), "append", state_partitions=parts)
 
 
 @query(
@@ -338,7 +298,7 @@ def streaming_enrich_static(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1.46/1.22/1.04 s at sf0.1 and 1.82/1.68/1.33 s at sf1; a small
     # fixed width is the right design for a bounded-key rollup (the
     # broadcast dim join itself has no state).
-    return _run(agg, "complete", state_partitions=8)
+    return drain(agg, "complete", state_partitions=8)
 
 
 @query(
@@ -364,8 +324,10 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     production stream-to-lake pattern (the bare-parquet equivalent of
     Delta/Iceberg ``MERGE INTO`` from a stream): each micro-batch
     reduces to its latest row per user, merges against the current
-    dimension snapshot (union + keep-latest), and lands atomically
-    via a staging-dir swap.  The final table is one row per user with
+    dimension snapshot (union + keep-latest), and lands via a
+    staging-dir swap (``rmtree(current)`` then ``rename(next,
+    current)``: not atomic, a crash between the two steps leaves no
+    ``current/``).  The final table is one row per user with
     their latest event — correct for ANY micro-batch split of the
     input (the merge is associative keep-latest), which is exactly
     why foreachBatch upserts are multi-batch-safe where blind appends

@@ -6,9 +6,10 @@ is the :class:`pyspark.sql.SparkSession` itself; this module only adds
 (a) the runtime confs the engine relies on, (b) a lazy, cached
 registry over the driver-provided parquet corpus
 (``/root/testdata/sf*/``, tables listed in ``TABLE_NAMES``), (c)
-the one session memo (:func:`memo`) every memoized call site shares
-and (d) the one scratch directory (:func:`scratch_root`) every staged
-file goes under.
+the one session memo (:func:`memo`) every memoized call site shares,
+(d) the one scratch directory (:func:`scratch_root`) every staged
+file goes under and (e) the one way to set confs for a while and
+give them back (:func:`scoped_confs`).
 
 Scale notes (100 TB design):
 
@@ -22,9 +23,10 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
+import contextlib
 import os
 from types import MappingProxyType
-from typing import Callable, TypeVar
+from typing import Callable, Iterator, TypeVar
 
 import pyspark.sql.functions as F
 from pyspark import SparkFiles
@@ -146,8 +148,8 @@ _memo_app: str | None = None
 _HITS: dict[str, int] = {}
 
 #: memo hits per family, read-only.  perfbench (``session.memo_hits.*``)
-#: and bench.py (``memo_hits``) read it around each timed region, so
-#: the warmed share of each timing is auditable.
+#: reads it around each timed region, so the warmed share of each
+#: timing is auditable.
 MEMO_HITS = MappingProxyType(_HITS)
 
 _MISSING = object()
@@ -197,6 +199,24 @@ def scratch_root(spark: SparkSession) -> str:
         return root
 
     return memo(spark, "scratch", (), build)
+
+
+@contextlib.contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set each of ``confs`` on the session for the body of the
+    ``with``.  On exit, also when the body raises, every key gets back
+    the value it had before, or is unset again if it had none."""
+    before = {key: spark.conf.get(key, None) for key in confs}
+    try:
+        for key, value in confs.items():
+            spark.conf.set(key, value)
+        yield
+    finally:
+        for key, value in before.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
 
 
 class Tables:

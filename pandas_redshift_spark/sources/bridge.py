@@ -39,7 +39,7 @@ from pandas_redshift_spark.plans.layout import (
     sortkey_columns,
     zorder_codes,
 )
-from pandas_redshift_spark.session import scratch_root
+from pandas_redshift_spark.session import scoped_confs, scratch_root
 from pandas_redshift_spark.sources.schema import (
     apply_validated_names,
     build_create_table_ddl,
@@ -482,16 +482,8 @@ def ingest(spark: SparkSession, frame: "pd.DataFrame | DataFrame") -> DataFrame:
     module lock, so concurrent loads cannot leave it changed."""
     if not isinstance(frame, pd.DataFrame):
         return frame
-    with _INGEST_LOCK:
-        prev = spark.conf.get(_LOCAL_RELATION_THRESHOLD, None)
-        spark.conf.set(_LOCAL_RELATION_THRESHOLD, "0")
-        try:
-            sdf = spark.createDataFrame(frame)
-        finally:
-            if prev is None:
-                spark.conf.unset(_LOCAL_RELATION_THRESHOLD)
-            else:
-                spark.conf.set(_LOCAL_RELATION_THRESHOLD, prev)
+    with _INGEST_LOCK, scoped_confs(spark, {_LOCAL_RELATION_THRESHOLD: "0"}):
+        sdf = spark.createDataFrame(frame)
     step = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
     batches = -(-len(frame) // step) if step > 0 else 1
     slots = spark.sparkContext.defaultParallelism

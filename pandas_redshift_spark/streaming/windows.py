@@ -18,11 +18,17 @@ from __future__ import annotations
 
 import hashlib
 import os
+import uuid
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from pandas_redshift_spark.session import configure_session, memo, scratch_root
+from pandas_redshift_spark.session import (
+    configure_session,
+    memo,
+    scoped_confs,
+    scratch_root,
+)
 
 
 def event_time_ltz(df: DataFrame) -> DataFrame:
@@ -288,258 +294,107 @@ def _append_needs_no_data_batches(stream_df: DataFrame) -> bool:
     return False
 
 
-class _scoped_state_confs:
-    """Context manager scoping the streaming-execution confs (state
-    parallelism + RocksDB provider + drain-cost knobs) to one drain,
-    restoring the session's batch settings on exit — shared by
-    run_to_memory and run_to_files; rationale in run_to_memory's
-    docstring.
-
-    Drain-cost knobs (r14/r15 optimization rounds, measured at sf0.1
-    AND 10x data, identical output row-for-row):
-
-    - ``noDataMicroBatches.enabled=false``: a no-data micro-batch
-      exists to advance the watermark so APPEND-mode windowed
-      aggregates / outer stream-stream joins can flush their
-      watermark-gated output after the last data batch.  Every
-      registered drain is complete/update mode or an immediate-emit
-      append (inner join, dropDuplicates), so the trailing no-data
-      batch only buys one more full state-store commit cycle across
-      every store — pure fixed cost, no rows.  Measured: attribution
-      join 3.19 -> 2.07 s.  ENFORCED (r15, was a docstring note in
-      r14): callers pass ``allow_no_data_batches=True`` when
-      ``_append_needs_no_data_batches`` detects a watermark-gated
-      append plan, so such a drain keeps its trailing batch and its
-      final windows.
-    - RocksDB ``changelogCheckpointing``: commit uploads the per-batch
-      changelog instead of a full SST snapshot — the production-
-      recommended commit mode at scale (commit cost tracks delta size,
-      not total state size) and 16-22% faster even at bench shape
-      (attribution 3.19 -> 2.69 s, session drain 1.61 -> 1.26 s solo;
-      2.07 -> 1.94 s stacked on the no-data knob).
-    - RocksDB ``trackTotalNumberOfRows=false`` (r15): row-count
-      tracking does one extra ``get`` per put/delete purely to keep
-      the ``numRowsTotal`` metric exact — the documented
-      write-heavy-state tuning in the Spark structured-streaming
-      guide.  Nothing in the package consumes the metric.  Measured
-      min-of-3: attribution 1.83 -> 1.56 s / session drain
-      1.22 -> 1.00 s at sf0.1, and the win GROWS with state size —
-      4.48 -> 3.44 s / 2.71 -> 1.83 s at 10x data (sf1).
-    - ``join.stateFormatVersion=3`` (r15): a stream-stream join keeps
-      FOUR state stores per partition (keyToNumValues + keyWithIndex
-      per side); format v3 (Spark 4, RocksDB-only) folds them into
-      ONE store with virtual column families — 4x fewer store
-      opens/commits/changelog uploads per batch, same join state
-      machine.  Safe to set per drain even when a drain resumes an
-      existing checkpoint (``run_to_files`` takes a caller's
-      ``checkpoint_dir`` or reuses ``out_dir + "_ckpt"``): the join
-      state format is one of the confs Spark records in the
-      checkpoint's offset-log metadata (``OffsetSeqMetadata``) and
-      restores from there on restart, so a checkpoint written with
-      another version keeps it.
-    (``sessionWindow.merge.sessions.in.local.partition`` was A/B'd
-    for the session drain and NOT adopted: interleaved min-of-5 at
-    10x data measured the map-side pre-merge pass costing slightly
-    more than the ~3x shuffle-row reduction saves — session rows are
-    narrow and RocksDB put cost dominates either way.)
-    """
-
-    _PROV_KEY = "spark.sql.streaming.stateStore.providerClass"
-    _ROCKSDB = (
+#: Confs in force during every :func:`drain`, beside the two it sets
+#: per drain (the state width and ``noDataMicroBatches``).  Timings are
+#: from the r14/r15 rounds at sf0.1 and at 10x data, with output
+#: identical row for row.
+_DRAIN_CONFS = {
+    # RocksDB, not the default HDFSBacked provider, which keeps the
+    # whole state map in heap: a session drain over 10x data (950k
+    # sessions) OOMed a 1g heap with it and finished with RocksDB,
+    # which is also faster at bench shape (sf0.1 session drain 2.6 ->
+    # 2.0 s).
+    "spark.sql.streaming.stateStore.providerClass": (
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
-    _NODATA_KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
-    _CHANGELOG_KEY = (
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    )
-    _TRACKROWS_KEY = (
-        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
-    )
-    #: plan-level drain confs applied/restored generically (A/B probes
-    #: monkeypatch this map to isolate one knob)
-    EXTRA_CONFS = {
-        "spark.sql.streaming.join.stateFormatVersion": "3",
-    }
+    ),
+    # a commit uploads the batch's changelog, not a full SST snapshot,
+    # so its cost tracks the delta, not the state size: attribution
+    # join 3.19 -> 2.69 s, session drain 1.61 -> 1.26 s.
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+    # row-count tracking does one more get per put/delete only to keep
+    # the numRowsTotal metric, which nothing reads: attribution 1.83 ->
+    # 1.56 s and session 1.22 -> 1.00 s at sf0.1, 4.48 -> 3.44 s and
+    # 2.71 -> 1.83 s at 10x data.
+    "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows": "false",
+    # format 3 (Spark 4, RocksDB only) keeps a stream-stream join's
+    # state in one store per partition instead of four.  A checkpoint
+    # written with another format keeps its own: Spark restores this
+    # conf from the checkpoint's offset log.
+    "spark.sql.streaming.join.stateFormatVersion": "3",
+}
+# (sessionWindow.merge.sessions.in.local.partition was A/B'd for the
+# session drain and not adopted: at 10x data its map-side pre-merge
+# cost slightly more than the shuffle rows it saved.)
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        state_partitions: int | None,
-        allow_no_data_batches: bool = False,
-    ):
-        self.spark = spark
-        if state_partitions is None:
-            state_partitions = min(spark.sparkContext.defaultParallelism, 64)
-        self.state_partitions = state_partitions
-        self.allow_no_data_batches = allow_no_data_batches
-
-    def __enter__(self):
-        self._before = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self._before_prov = self.spark.conf.get(self._PROV_KEY, None)
-        self._before_nodata = self.spark.conf.get(self._NODATA_KEY, None)
-        self._before_changelog = self.spark.conf.get(self._CHANGELOG_KEY, None)
-        self._before_trackrows = self.spark.conf.get(self._TRACKROWS_KEY, None)
-        self._before_extra = {
-            key: self.spark.conf.get(key, None) for key in self.EXTRA_CONFS
-        }
-        self.spark.conf.set(
-            "spark.sql.shuffle.partitions", str(self.state_partitions)
-        )
-        self.spark.conf.set(self._PROV_KEY, self._ROCKSDB)
-        self.spark.conf.set(
-            self._NODATA_KEY, "true" if self.allow_no_data_batches else "false"
-        )
-        self.spark.conf.set(self._CHANGELOG_KEY, "true")
-        self.spark.conf.set(self._TRACKROWS_KEY, "false")
-        for key, val in self.EXTRA_CONFS.items():
-            self.spark.conf.set(key, val)
-        return self
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self._before)
-        for key, before in (
-            (self._PROV_KEY, self._before_prov),
-            (self._NODATA_KEY, self._before_nodata),
-            (self._CHANGELOG_KEY, self._before_changelog),
-            (self._TRACKROWS_KEY, self._before_trackrows),
-            *self._before_extra.items(),
-        ):
-            if before is None:
-                self.spark.conf.unset(key)
-            else:
-                self.spark.conf.set(key, before)
-        return False
+#: Off unless the plan needs it: a no-data micro-batch only advances
+#: the watermark so that append-mode windowed aggregates and outer
+#: joins flush their last output (see _append_needs_no_data_batches).
+#: For every other drain it is one more commit of every state store
+#: for no rows: attribution join 3.19 -> 2.07 s.
+_NO_DATA_KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
 
 
-def run_to_files(
-    stream_df: DataFrame,
-    out_dir: str,
-    output_mode: str = "append",
-    state_partitions: int | None = None,
-    checkpoint_dir: str | None = None,
-):
-    """Execute a streaming plan against all currently-available input
-    (Trigger.AvailableNow) into a PARQUET DIRECTORY and block until
-    done.  Returns the terminated StreamingQuery; read the result with
-    ``spark.read.schema(stream_df.schema).parquet(out_dir)`` (the
-    explicit schema makes a zero-row drain readable).
+def drain(
+    stream_df: DataFrame, output_mode: str, state_partitions: int | None = None
+) -> DataFrame:
+    """Run a streaming plan over all input available now
+    (Trigger.AvailableNow) into a fresh parquet directory under the
+    application's :func:`scratch_root`, stop the query, and return
+    the directory read back with the stream's own schema (so a
+    zero-row drain reads as an empty frame).
 
-    This is the scale-safe drain: the in-memory sink collects every
-    emitted row onto the DRIVER heap per micro-batch — a ``collect()``
-    in disguise that wedged the windowed/stateful executions outright
-    at sf30 (30M events; 9.5M session rows had already squeezed
-    through at sf10 — BENCH_scale_r12.md §3.5, VERDICT r12 item 2).
-    Here every mode lands as a distributed executor-side parquet
-    write, so result size never touches the driver:
+    Every mode writes on the executors, so result size never reaches
+    the driver (the memory sink collected every row there and wedged
+    the stateful drains at 30M events, BENCH_scale_r12.md):
 
-    - ``append``: the NATIVE file sink (the only mode it supports) —
-      exactly-once via the sink's ``_spark_metadata`` commit log,
-      which ``spark.read`` consults on read-back so an uncommitted
-      task's orphan files are invisible.
-    - ``complete``: ``foreachBatch`` + ``mode("overwrite")`` — each
-      micro-batch rewrites the full-result-so-far, so the directory
-      ends as the final complete result.  Idempotent under batch
-      replay (a re-run batch overwrites itself).
-    - ``update``: ``foreachBatch`` + ``mode("append")`` — one row per
-      updated key per micro-batch, the same multiset the memory sink
-      exposed (callers reduce to the final row per key downstream).
-      A batch replayed after a sink-side failure would append twice —
-      the epoch-keyed variant (write_foreach_batch_idempotent) is the
-      exactly-once recipe; for an AvailableNow drain into a fresh
-      uuid directory the window for that is the drain itself.
+    - ``append``: the native file sink.  Its ``_spark_metadata`` commit
+      log hides an uncommitted task's files from the read-back.
+    - ``complete``: ``foreachBatch`` with ``mode("overwrite")``; each
+      batch rewrites the whole result so far.
+    - ``update``: ``foreachBatch`` with ``mode("append")``: one row per
+      updated key per batch, which callers reduce to the last row per
+      key.  A batch replayed after a sink failure would append twice.
 
-    ``state_partitions`` / RocksDB scoping: same contract as
-    run_to_memory (see its docstring for the measurements)."""
+    ``state_partitions`` is the state width.  A streaming query fixes
+    ``spark.sql.shuffle.partitions`` into its state layout at start,
+    and every state partition is a state store with per-batch commit
+    I/O: on a vanilla 200-partition session the attribution join took
+    31.6 s at sf0.01, and about 7 s sized to the cores.  The default,
+    the core count capped at 64, measured as good as a small fixed
+    width at every scale tried.  This width and :data:`_DRAIN_CONFS`
+    hold only while the query runs (:func:`scoped_confs`), so batch
+    plans in the same session keep their own."""
     spark = stream_df.sparkSession
-    os.makedirs(out_dir, exist_ok=True)
-    if checkpoint_dir is None:
-        checkpoint_dir = out_dir.rstrip("/") + "_ckpt"
-    allow_nodata = output_mode == "append" and _append_needs_no_data_batches(
-        stream_df
-    )
-    with _scoped_state_confs(
-        spark, state_partitions, allow_no_data_batches=allow_nodata
-    ):
+    out_dir = os.path.join(scratch_root(spark), f"stream_{uuid.uuid4().hex[:12]}")
+    os.makedirs(out_dir)
+    if state_partitions is None:
+        state_partitions = min(spark.sparkContext.defaultParallelism, 64)
+    no_data = output_mode == "append" and _append_needs_no_data_batches(stream_df)
+    confs = {
+        **_DRAIN_CONFS,
+        "spark.sql.shuffle.partitions": str(state_partitions),
+        _NO_DATA_KEY: "true" if no_data else "false",
+    }
+    with scoped_confs(spark, confs):
         if output_mode == "append":
-            writer = (
-                stream_df.writeStream.format("parquet")
-                .option("path", out_dir)
-                .outputMode("append")
-            )
+            writer = stream_df.writeStream.format("parquet").option("path", out_dir)
         else:
             batch_mode = "overwrite" if output_mode == "complete" else "append"
 
             def _sink(batch_df: DataFrame, batch_id: int) -> None:
                 batch_df.write.mode(batch_mode).parquet(out_dir)
 
-            writer = stream_df.writeStream.foreachBatch(_sink).outputMode(
-                output_mode
-            )
+            writer = stream_df.writeStream.foreachBatch(_sink)
         q = (
-            writer.option("checkpointLocation", checkpoint_dir)
+            writer.outputMode(output_mode)
+            .option("checkpointLocation", out_dir + "_ckpt")
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
-    return q
-
-
-def run_to_memory(
-    stream_df: DataFrame,
-    query_name: str,
-    output_mode: str = "append",
-    state_partitions: int | None = None,
-):
-    """Execute a streaming plan against all currently-available input
-    (Trigger.AvailableNow) into an in-memory sink and block until done.
-    Returns the StreamingQuery (results via spark.sql(select * from
-    query_name)).
-
-    SCALE WARNING: the memory sink buffers every emitted row on the
-    driver heap — use it only for bounded-cardinality aggregates and
-    tests; run_to_files is the production drain (VERDICT r12 item 2).
-
-    ``state_partitions`` sizes the stateful-operator parallelism: a
-    streaming query bakes ``spark.sql.shuffle.partitions`` into its
-    state layout at first batch, and EVERY state partition is a live
-    state-store instance with per-batch commit I/O (a stream-stream
-    join runs FOUR stores per partition).  On a vanilla 200-partition
-    session the attribution join paid 800 store commits per batch for
-    ~150 join keys — measured 31.6s -> ~7s at sf0.01 once sized to
-    core count.  The default (None) resolves to the session's core
-    count capped at 64: measured equal-or-better than a small fixed
-    count at every SF tried (local[32]: 32 parts = 2.0s vs 8 parts =
-    2.1s at sf0.1) while fixing the vanilla-200 pathology.  This is
-    the streaming capacity knob a real deployment sizes to key
-    cardinality x throughput (thousands at a 100 TB firehose); the
-    conf is set only for the stream's planning window and restored
-    before returning, so batch plans in the same session keep their
-    AQE-sized width.
-
-    State store provider: RocksDB (bundled since Spark 3.2, the
-    recommended provider for production state).  The default
-    HDFSBacked provider keeps the ENTIRE state map in driver/executor
-    heap — a session-window drain over 10x data (950k sessions of
-    state) OOMed a default-1g-heap session outright, while RocksDB
-    (disk-backed, off-heap) completed it on the same 1g heap and
-    measures equal-or-FASTER at bench shape (sf0.1 session drain
-    2.0s vs 2.6s).  Scoped and restored like the partition conf."""
-    spark = stream_df.sparkSession
-    allow_nodata = output_mode == "append" and _append_needs_no_data_batches(
-        stream_df
-    )
-    with _scoped_state_confs(
-        spark, state_partitions, allow_no_data_batches=allow_nodata
-    ):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return q
+    # the query has terminated; stop() releases its listener bookkeeping
+    q.stop()
+    return spark.read.schema(stream_df.schema).parquet(out_dir)
 
 
 def user_profile(events_batch: DataFrame) -> DataFrame:
@@ -643,10 +498,12 @@ def run_foreachbatch_upsert(events: DataFrame) -> DataFrame:
     """foreachBatch UPSERT sink: reduce each micro-batch to its latest
     row per user, merge against the current snapshot (union +
     keep-latest — associative, so ANY micro-batch split of the input
-    lands on the same final table), and swap the staging dir
-    atomically (never overwrite the dir being read).  Returns the
+    lands on the same final table), write the merge to ``next/`` and
+    swap it in (never overwrite the dir being read).  The swap is
+    ``rmtree(current)`` then ``rename(next, current)``, not atomic: a
+    crash between the two steps leaves no ``current/``.  Returns the
     final merged snapshot read LAZILY from the sink directory — the
-    directory IS the table, exactly like run_to_files (r14: the old
+    directory IS the table, exactly like :func:`drain` (r14: the old
     eager ``localCheckpoint`` re-materialized the entire final
     dimension into the block manager just so the staging dir could be
     reclaimed immediately — wasted work at bench shape and a
@@ -658,7 +515,6 @@ def run_foreachbatch_upsert(events: DataFrame) -> DataFrame:
     transactional-table commit and the trigger continuous — the
     per-batch plan is unchanged."""
     import shutil
-    import uuid
 
     spark = events.sparkSession
     upsert_root = os.path.join(scratch_root(spark), "fb_upsert")
@@ -701,12 +557,8 @@ def run_foreachbatch_upsert(events: DataFrame) -> DataFrame:
         shutil.rmtree(cur_dir, ignore_errors=True)
         os.rename(next_dir, cur_dir)
 
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(min(spark.sparkContext.defaultParallelism, 64)),
-    )
-    try:
+    width = str(min(spark.sparkContext.defaultParallelism, 64))
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": width}):
         q = (
             events.writeStream.foreachBatch(upsert)
             .trigger(availableNow=True)
@@ -715,8 +567,6 @@ def run_foreachbatch_upsert(events: DataFrame) -> DataFrame:
         )
         q.awaitTermination()
         q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
     # lazy read of the committed snapshot; checkpoint + next are gone,
     # only the final current/ parquet stays until the application stops
     shutil.rmtree(os.path.join(stage_root, "ckpt"), ignore_errors=True)

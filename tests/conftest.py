@@ -32,3 +32,35 @@ def drop_memo(*families: str) -> None:
 
     for key in [k for k in session._MEMO if k[0] in families]:
         del session._MEMO[key]
+
+
+def confs_while_draining(spark, sf_dir, monkeypatch, width: int) -> dict:
+    """Every conf the query of a width-``width`` ``drain`` of the
+    tumbling-window plan ran with, read from the session of its
+    micro-batches: the drain confs, the state width and
+    ``noDataMicroBatches``."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from pandas_redshift_spark.streaming import windows
+
+    keys = (
+        *windows._DRAIN_CONFS,
+        windows._NO_DATA_KEY,
+        "spark.sql.shuffle.partitions",
+    )
+    seen: dict = {}
+    real = DataStreamWriter.foreachBatch
+
+    def spy(writer, fn):
+        def sink(batch_df, batch_id):
+            conf = batch_df.sparkSession.conf
+            seen.update({k: conf.get(k, None) for k in keys})
+            fn(batch_df, batch_id)
+
+        return real(writer, sink)
+
+    monkeypatch.setattr(DataStreamWriter, "foreachBatch", spy)
+    plan = windows.tumbling_counts(windows.read_events_stream(spark, sf_dir))
+    windows.drain(plan, "complete", state_partitions=width).collect()
+    assert seen, "the drain ran no micro-batch"
+    return seen

@@ -129,7 +129,7 @@ def test_runtime_bloom_filter_injects_on_selective_shuffle_join(spark, sf_dir):
     conf."""
     import pyspark.sql.functions as F
 
-    from pandas_redshift_spark.session import Tables
+    from pandas_redshift_spark.session import Tables, scoped_confs
 
     confs = {
         "spark.sql.autoBroadcastJoinThreshold": "-1",
@@ -138,14 +138,7 @@ def test_runtime_bloom_filter_injects_on_selective_shuffle_join(spark, sf_dir):
         "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "100MB",
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "1KB",
     }
-    old = {}
-    for k, v in confs.items():
-        try:
-            old[k] = spark.conf.get(k)
-        except Exception:
-            old[k] = None
-        spark.conf.set(k, v)
-    try:
+    with scoped_confs(spark, confs):
         t = Tables(spark, sf_dir)
         sel = t.part.filter(F.col("p_size") == 1).select("p_partkey")
         j = (
@@ -155,12 +148,25 @@ def test_runtime_bloom_filter_injects_on_selective_shuffle_join(spark, sf_dir):
         )
         optimized = j._jdf.queryExecution().optimizedPlan().toString()
         assert "might_contain" in optimized, optimized
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+
+
+def test_pq_rerank_norm_computed_above_the_join(spark, sf_dir):
+    """sim_pq_adc_topk's exact re-rank normalizes only the joined
+    shortlist rows: no norm (SQRT) is folded on the raw corpus side of
+    the re-rank join, where a pushed-down ``nrm > 0`` filter would put
+    it, and the norm is computed above that join."""
+    df = all_queries()["sim_pq_adc_topk"].fn(spark, sf_dir)
+    lines = df._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    # the re-rank join is the plan's topmost join; its left child is
+    # the raw corpus, printed down to the right child's "+-" marker
+    top = next(i for i, ln in enumerate(lines) if "Join Inner" in ln)
+    child_col = lines[top].index("+-") + 3
+    right = next(
+        i for i in range(top + 1, len(lines)) if lines[i][child_col:].startswith("+-")
+    )
+    assert any("SQRT" in ln for ln in lines[:top]), lines[:top]
+    raw_side = lines[top + 1 : right]
+    assert not any("SQRT" in ln for ln in raw_side), raw_side
 
 
 def test_banded_range_join_avoids_nested_loop(spark, sf_dir):

@@ -122,18 +122,21 @@ def test_zorder_bounds_match_inline_agg(spark, sf_dir):
     assert column_minmax(t, "lineitem", cols) is got
 
 
-def test_scoped_state_confs_set_and_restore_drain_knobs(spark):
-    """_scoped_state_confs must scope the two r14 drain-cost knobs
+def test_scoped_state_confs_set_and_restore_drain_knobs(spark, sf_dir, monkeypatch):
+    """A drain must run its query with the two r14 drain-cost knobs
     (no-data micro-batches off, RocksDB changelog checkpointing on)
-    to the drain and restore the session's settings on exit."""
-    from pandas_redshift_spark.streaming.windows import _scoped_state_confs
+    and its state width, and restore the session's settings on
+    exit."""
+    from pandas_redshift_spark.streaming import windows
+    from tests.conftest import confs_while_draining
 
-    nodata = _scoped_state_confs._NODATA_KEY
-    changelog = _scoped_state_confs._CHANGELOG_KEY
-    before_nodata = spark.conf.get(nodata, None)
-    with _scoped_state_confs(spark, 4):
-        assert spark.conf.get(nodata) == "false"
-        assert spark.conf.get(changelog) == "true"
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
-    assert spark.conf.get(nodata, None) == before_nodata
-    assert spark.conf.get(changelog, None) in (None, "false")
+    nodata = windows._NO_DATA_KEY
+    changelog = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+    parts = "spark.sql.shuffle.partitions"
+    assert windows._DRAIN_CONFS[changelog] == "true"
+    before = {k: spark.conf.get(k, None) for k in (nodata, changelog, parts)}
+    inside = confs_while_draining(spark, sf_dir, monkeypatch, 4)
+    assert inside[nodata] == "false"
+    assert inside[changelog] == "true"
+    assert inside[parts] == "4"
+    assert {k: spark.conf.get(k, None) for k in before} == before

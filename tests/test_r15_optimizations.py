@@ -133,16 +133,20 @@ def test_profile_summary_branch_scans_prune_disjoint_columns(spark, sf_dir):
         assert hits == 1, (col, schemas)
 
 
-def test_scoped_state_confs_extra_knobs_set_and_restored(spark):
-    """The r15 plan-level drain knob — stream-stream join state
-    format v3 (one virtual-column-family store per partition instead
-    of four) — must apply inside _scoped_state_confs and restore the
-    session's setting on exit, like the r14 knobs."""
-    from pandas_redshift_spark.streaming.windows import _scoped_state_confs
+def test_scoped_state_confs_extra_knobs_set_and_restored(spark, sf_dir, monkeypatch):
+    """The r15 drain knobs — stream-stream join state format v3 (one
+    virtual-column-family store per partition instead of four) and
+    RocksDB row-count tracking off — must be in force while a drain
+    runs and restored on exit, like the r14 knobs."""
+    from pandas_redshift_spark.streaming.windows import _DRAIN_CONFS
+    from tests.conftest import confs_while_draining
 
     join_key = "spark.sql.streaming.join.stateFormatVersion"
-    assert _scoped_state_confs.EXTRA_CONFS[join_key] == "3"
-    before = spark.conf.get(join_key, None)
-    with _scoped_state_confs(spark, 4):
-        assert spark.conf.get(join_key) == "3"
-    assert spark.conf.get(join_key, None) == before
+    rows_key = "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
+    assert _DRAIN_CONFS[join_key] == "3"
+    assert _DRAIN_CONFS[rows_key] == "false"
+    before = {k: spark.conf.get(k, None) for k in (join_key, rows_key)}
+    inside = confs_while_draining(spark, sf_dir, monkeypatch, 4)
+    assert inside[join_key] == "3"
+    assert inside[rows_key] == "false"
+    assert {k: spark.conf.get(k, None) for k in before} == before

@@ -10,9 +10,9 @@ import pytest
 from pandas_redshift_spark.operators.events import events_tumbling_window
 from pandas_redshift_spark.operators.events import events_sliding_window
 from pandas_redshift_spark.streaming.windows import (
+    drain,
     event_time_ltz,
     read_events_stream,
-    run_to_memory,
     session_aggregate,
     sliding_counts,
     stream_dedup,
@@ -28,10 +28,9 @@ def events_stream(spark, sf_dir):
 def test_tumbling_stream_matches_batch(spark, sf_dir, events_stream):
     # complete mode: append would hold back windows not yet closed by
     # the watermark when available input is exhausted
-    run_to_memory(tumbling_counts(events_stream), "t_tumbling", output_mode="complete")
     got = {
         (r.window_start, r.event_type): (r.n_events, r.total_value)
-        for r in spark.sql("SELECT * FROM t_tumbling").collect()
+        for r in drain(tumbling_counts(events_stream), "complete").collect()
     }
     want = {
         (r.window_start, r.event_type): (r.n_events, r.total_value)
@@ -41,10 +40,9 @@ def test_tumbling_stream_matches_batch(spark, sf_dir, events_stream):
 
 
 def test_sliding_stream_matches_batch(spark, sf_dir, events_stream):
-    run_to_memory(sliding_counts(events_stream), "t_sliding", output_mode="complete")
     got = {
         (r.window_start,): (r.n_events, r.total_value)
-        for r in spark.sql("SELECT * FROM t_sliding").collect()
+        for r in drain(sliding_counts(events_stream), "complete").collect()
     }
     want = {
         (r.window_start,): (r.n_events, r.total_value)
@@ -54,8 +52,7 @@ def test_sliding_stream_matches_batch(spark, sf_dir, events_stream):
 
 
 def test_session_stream_produces_sessions(spark, sf_dir, events_stream):
-    run_to_memory(session_aggregate(events_stream), "t_sessions", output_mode="complete")
-    rows = spark.sql("SELECT * FROM t_sessions").collect()
+    rows = drain(session_aggregate(events_stream), "complete").collect()
     assert rows
     # session event counts must sum to the total event count
     total = sum(r.n_events for r in rows)
@@ -72,11 +69,10 @@ def test_stateful_running_totals_match_batch(spark, sf_dir, events_stream):
         user_running_totals,
     )
 
-    run_to_memory(user_running_totals(events_stream), "t_state", output_mode="update")
     # keep only the last update per user (one micro-batch -> already final)
     got = {
         r.user_id: (r.n_events, r.total_value, r.last_seen)
-        for r in spark.sql("SELECT * FROM t_state").collect()
+        for r in drain(user_running_totals(events_stream), "update").collect()
     }
     events_batch = event_time_ltz(spark.read.parquet(f"{sf_dir}/events.parquet"))
     want = {
@@ -87,8 +83,7 @@ def test_stateful_running_totals_match_batch(spark, sf_dir, events_stream):
 
 
 def test_stream_dedup_bounded(spark, sf_dir, events_stream):
-    run_to_memory(stream_dedup(events_stream), "t_dedup")
-    out = spark.sql("SELECT user_id, event_type FROM t_dedup")
+    out = drain(stream_dedup(events_stream), "append").select("user_id", "event_type")
     n = out.count()
     distinct_pairs = out.distinct().count()
     assert n == distinct_pairs  # no duplicate survivors within watermark
@@ -100,7 +95,6 @@ def test_stream_static_enrichment_matches_batch(spark, sf_dir, events_stream):
     batch join's per-band aggregate once the stream drains."""
     from pandas_redshift_spark.streaming.windows import (
         enrich_stream_with_profile,
-        run_to_memory,
         user_profile,
     )
     from pandas_redshift_spark.session import Tables, configure_session
@@ -113,15 +107,8 @@ def test_stream_static_enrichment_matches_batch(spark, sf_dir, events_stream):
         for r in enrich_stream_with_profile(batch, profile).collect()
     }
 
-    run_to_memory(
-        enrich_stream_with_profile(events_stream, profile),
-        "enriched_bands",
-        output_mode="complete",
-    )
-    got = {
-        r.band: (r.n_events, r.avg_value)
-        for r in spark.sql("SELECT * FROM enriched_bands").collect()
-    }
+    enriched = drain(enrich_stream_with_profile(events_stream, profile), "complete")
+    got = {r.band: (r.n_events, r.avg_value) for r in enriched.collect()}
     assert got == expected
     assert sum(v[0] for v in got.values()) == batch.count()
 
@@ -130,10 +117,7 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir, events_stream)
     """The watermarked stream-stream interval join, fully drained, must
     produce exactly the batch join's pairs."""
     from pandas_redshift_spark.session import Tables, configure_session
-    from pandas_redshift_spark.streaming.windows import (
-        click_purchase_interval_join,
-        run_to_memory,
-    )
+    from pandas_redshift_spark.streaming.windows import click_purchase_interval_join
 
     configure_session(spark)
     batch = Tables(spark, sf_dir).events
@@ -142,10 +126,9 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir, events_stream)
         for r in click_purchase_interval_join(batch).collect()
     }
     assert want, "batch twin produced no attribution pairs"
-    run_to_memory(click_purchase_interval_join(events_stream), "t_ssjoin")
     got = {
         (r.user_id, r.click_id, r.purchase_id)
-        for r in spark.sql("SELECT * FROM t_ssjoin").collect()
+        for r in drain(click_purchase_interval_join(events_stream), "append").collect()
     }
     assert got == want
 
@@ -182,20 +165,16 @@ def _tws_available() -> bool:
 def test_transform_with_state_matches_batch(spark, sf_dir, events_stream):
     """transformWithStateInPandas (Spark 4 stateful API) must produce
     the same final per-user totals as applyInPandasWithState and the
-    batch aggregate.  Requires the RocksDB state store provider."""
+    batch aggregate.  Requires the RocksDB state store provider, which
+    ``drain`` sets for the query."""
     from pandas_redshift_spark.streaming.stateful import (
         batch_user_totals,
         user_running_totals_tws,
     )
 
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    run_to_memory(user_running_totals_tws(events_stream), "t_tws", output_mode="update")
     got = {
         r.user_id: (r.n_events, r.total_value, r.last_seen)
-        for r in spark.sql("SELECT * FROM t_tws").collect()
+        for r in drain(user_running_totals_tws(events_stream), "update").collect()
     }
     events_batch = event_time_ltz(spark.read.parquet(f"{sf_dir}/events.parquet"))
     want = {
@@ -268,6 +247,7 @@ def test_watermark_evicts_state_and_drops_late_data(spark, tmp_path):
         for r in spark.sql("SELECT * FROM t_late").collect()
         if r.window_start == "2024-01-01 08:00:00"
     ]
+    spark.catalog.dropTempView("t_late")
     # exactly ONE emission of the 08:00 window: 3 on-time + the 2
     # lag-window rows; batch 3's 2 stragglers were dropped, never
     # resurrecting the evicted window as a duplicate result row
@@ -349,13 +329,14 @@ def test_attribution_join_accepts_compound_horizon(spark, sf_dir, events_stream)
     assert df.schema["purchase_value"].dataType.typeName() in ("double", "decimal")
 
 
-def test_run_to_files_modes_match_memory_sink(spark, sf_dir, events_stream, tmp_path):
-    """run_to_files (the scale-safe drain, VERDICT r12 item 2) must
-    produce exactly the memory sink's multiset in every output mode:
-    append (native file sink), complete (foreachBatch overwrite), and
-    update (foreachBatch append)."""
+def test_run_to_files_modes_match_memory_sink(spark, sf_dir, events_stream):
+    """``drain`` (the scale-safe parquet drain, VERDICT r12 item 2) must
+    produce exactly Spark's memory sink's multiset in every output
+    mode: append (native file sink), complete (foreachBatch
+    overwrite), and update (foreachBatch append).  The memory sink is
+    the oracle here, so it is started inline, not through the
+    package."""
     from pandas_redshift_spark.streaming.stateful import user_running_totals
-    from pandas_redshift_spark.streaming.windows import run_to_files
 
     cases = [
         ("append", stream_dedup(events_stream), "f_append"),
@@ -363,11 +344,15 @@ def test_run_to_files_modes_match_memory_sink(spark, sf_dir, events_stream, tmp_
         ("update", user_running_totals(events_stream), "f_update"),
     ]
     for mode, plan, name in cases:
-        out = str(tmp_path / name)
-        q = run_to_files(plan, out, output_mode=mode)
-        q.stop()
-        filed = spark.read.schema(plan.schema).parquet(out)
-        run_to_memory(plan, name + "_mem", output_mode=mode)
+        filed = drain(plan, mode)
+        q = (
+            plan.writeStream.format("memory")
+            .queryName(name + "_mem")
+            .outputMode(mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
         mem = spark.sql(f"SELECT * FROM {name}_mem")
         assert sorted(filed.columns) == sorted(mem.columns), mode
         a = sorted(map(str, filed.collect()))
@@ -376,17 +361,12 @@ def test_run_to_files_modes_match_memory_sink(spark, sf_dir, events_stream, tmp_
         spark.catalog.dropTempView(name + "_mem")
 
 
-def test_run_to_files_zero_row_drain_readable(spark, events_stream, tmp_path):
+def test_run_to_files_zero_row_drain_readable(spark, events_stream):
     """A drain that emits nothing must still read back as an empty
     frame with the right schema (the read uses the stream's schema
     explicitly — an empty directory has nothing to infer from)."""
-    from pandas_redshift_spark.streaming.windows import run_to_files
-
     none = stream_dedup(events_stream).filter(F.lit(False))
-    out = str(tmp_path / "f_empty")
-    q = run_to_files(none, out, output_mode="append")
-    q.stop()
-    got = spark.read.schema(none.schema).parquet(out)
+    got = drain(none, "append")
     assert got.count() == 0
     assert got.schema == none.schema
 
@@ -397,13 +377,12 @@ def test_append_windowed_aggregate_emits_final_windows(spark, tmp_path):
     cost cut, which is only safe for immediate-emit append plans and
     complete/update modes.  An APPEND-mode windowed aggregate needs
     the trailing no-data batch to advance the watermark and flush its
-    closed windows — run_to_files must detect that shape and re-enable
-    the batch, or this drain would silently emit nothing."""
+    closed windows — drain must detect that shape and re-enable the
+    batch, or this drain would silently emit nothing."""
     import datetime as dt
 
     from pandas_redshift_spark.streaming.windows import (
         _append_needs_no_data_batches,
-        run_to_files,
         tumbling_counts,
     )
 
@@ -424,12 +403,9 @@ def test_append_windowed_aggregate_emits_final_windows(spark, tmp_path):
     ).parquet(src)
     plan = tumbling_counts(stream, watermark="1 hour")
     assert _append_needs_no_data_batches(plan)  # windowed agg -> True
-    out = str(tmp_path / "nodata_out")
-    q = run_to_files(plan, out, output_mode="append")
-    q.stop()
     got = {
         (r.window_start, r.event_type): (r.n_events, r.total_value)
-        for r in spark.read.schema(plan.schema).parquet(out).collect()
+        for r in drain(plan, "append").collect()
     }
     # without the re-enabled no-data batch this is {} — the final
     # windows never emit
