@@ -459,15 +459,16 @@ def events_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch twin of the streaming click->purchase interval join
-    (streaming/windows.click_purchase_interval_join, batch-differential
-    tested): purchases attributed to a same-user click within the
-    preceding 30 minutes.  The event-time bounds are exactly the ones
-    Structured Streaming requires to expire join state — same
-    expression both modes.  Self-join shuffles once on user_id."""
-    ev = Tables(spark, sf_dir).events
-    from pandas_redshift_spark.streaming.windows import click_purchase_interval_join
+    (streaming/windows.attribution_join, the plan streaming_attribution_join
+    drains; batch-differential tested): purchases attributed to a
+    same-user click within the preceding 30 minutes.  The event-time
+    bounds are exactly the ones Structured Streaming requires to expire
+    join state — same expression both modes (a batch frame ignores the
+    watermarks).  Self-join shuffles once on user_id."""
+    from pandas_redshift_spark.streaming.windows import attribution_join
 
-    return click_purchase_interval_join(ev).select(
+    ev = Tables(spark, sf_dir).events
+    return attribution_join(ev, "30 minutes").select(
         "user_id", "click_id", "purchase_id", "purchase_value"
     )
 

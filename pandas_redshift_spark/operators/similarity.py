@@ -10,7 +10,6 @@ near-linear instead of |queries| x |corpus|.
 from __future__ import annotations
 
 import math
-import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -636,14 +635,13 @@ KMEANS_SAMPLE_MOD = 4
 #: embedding the codebook as plan LITERALS (O(K*d) expression tree —
 #: fine at bench K, a driver/plan-serialization bottleneck when the
 #: K = N/125 schedule tracks a 100 TB corpus) and switches to the
-#: broadcast-DataFrame argmax-join path (VERDICT r7 item 2): same
-#: floats, same strict-greater/smallest-id argmax, O(1) plan size.
-#: Env-overridable so the scale sweep and the equivalence test can
-#: force either path at any SF.  Default 128: the r8 sf1 A/B measured
-#: the crossover below K=160 (literal 4.00 s vs broadcast 2.11 s at
-#: sf1, BENCH_scale_r08.md) — codegen/plan cost of the literal tree
-#: overtakes the two broadcast exchanges well before the 1024 guess.
-CODEBOOK_LITERAL_MAX_K = int(os.environ.get("PRS_CODEBOOK_LITERAL_MAX_K", "128"))
+#: broadcast-codebook-frame path (:func:`_assign_two_level`, VERDICT r7
+#: item 2): same floats, same strict-greater/smallest-id argmax, O(1)
+#: plan size.  128: the r8 sf1 A/B measured the crossover below K=160
+#: (literal 4.00 s vs broadcast 2.11 s at sf1, BENCH_scale_r08.md) —
+#: codegen/plan cost of the literal tree overtakes the two broadcast
+#: exchanges well before the 1024 guess.
+CODEBOOK_LITERAL_MAX_K = 128
 
 #: Hard ceiling for the DRIVER-side super-centroid trainer
 #: (:func:`super_centroids` is O(iters * K * sqrt(K) * dims) pure
@@ -660,14 +658,14 @@ SUPER_TRAIN_MAX_K = 16384
 #: whose driver traffic is O(sqrt(K) x dims): only the S = ceil(
 #: sqrt(K)) super-codebook ever crosses the driver; the K child
 #: centroids live and iterate as a DataFrame keyed by super-cell and
-#: are consumed via a shuffle join (:func:`_assign_two_level_join`),
-#: never broadcast.  Ceiling math: S <= 16384 covers K <= 2.7e8,
-#: i.e. N <= 3.3e10 vectors under the K = N/125 schedule — past
-#: 100 TB of 64-dim embeddings.  Default matches SUPER_TRAIN_MAX_K
-#: (the flat path's own driver bound); every fixture SF trains K
-#: well below it, so certified hashes are untouched.  Module-level
-#: (not env-frozen) so the forced-path test can monkeypatch it.
-KMEANS_FLAT_TRAIN_MAX_K = int(os.environ.get("PRS_KMEANS_FLAT_MAX_K", "16384"))
+#: reach :func:`_assign_two_level` as a shuffle-joined frame, never
+#: broadcast.  Ceiling math: S <= 16384 covers K <= 2.7e8, i.e.
+#: N <= 3.3e10 vectors under the K = N/125 schedule — past 100 TB of
+#: 64-dim embeddings.  Matches SUPER_TRAIN_MAX_K (the flat path's own
+#: driver bound); every fixture SF trains K well below it, so
+#: certified hashes are untouched.
+KMEANS_FLAT_TRAIN_MAX_K = 16384
+
 
 def _seed_frame(samp: DataFrame, k_cells: int) -> DataFrame:
     """The K smallest-id sample vectors — k-means seeds.  ``orderBy +
@@ -682,57 +680,172 @@ def _seed_frame(samp: DataFrame, k_cells: int) -> DataFrame:
     )
 
 
-def train_kmeans_centroids(
+def _argmax_join(
+    rows: DataFrame,
+    book: DataFrame,
+    cid: str,
+    cen: str,
+    on: str | None = None,
+    keep: tuple = ("emb_n",),
+) -> DataFrame:
+    """Each ``(vec_id, emb_n, ...)`` row's max-dot codebook entry, as a
+    join + group-by: ``rows`` meets every ``book`` row (or, with
+    ``on``, those sharing that key) and ``max(struct(sim, -cid))``
+    keeps the greatest sim and, on exact float ties, the greatest
+    ``-cid`` = SMALLEST id — the strict-greater fold of
+    :func:`argmax_dot` and DuckDB's ``row_number() OVER (ORDER BY lip
+    DESC, id)``.  NaN sims can't arise: ``_emb_double`` filters
+    zero-norm vectors and centroids are unit vectors.  ``keep``
+    columns are constant per vec_id, so ``first()`` is
+    value-deterministic.  Returns ``(vec_id, *keep, cid)``."""
+    pairs = rows.join(book, on) if on else rows.join(book, how="cross")
+    nid = (-F.col(cid)).cast("long").alias("nid")
+    return (
+        pairs.withColumn("sim", dot(F.col("emb_n"), F.col(cen)))
+        .groupBy("vec_id")
+        .agg(
+            *[F.first(c).alias(c) for c in keep],
+            F.max(F.struct("sim", nid)).alias("m"),
+        )
+        .select("vec_id", *keep, (-F.col("m.nid")).cast("long").alias(cid))
+    )
+
+
+def _pinned_means(members: DataFrame, vec: str, keys: tuple) -> DataFrame:
+    """Per ``(*keys, dim)`` mean of the members' ``vec`` arrays,
+    ORDER-PINNED: members summed left-to-right in vec_id-asc order
+    (fold over ``array_sort(collect_list(struct(vec_id, val)))``;
+    DuckDB: ``list_inner_product(array_agg(val ORDER BY vec_id),
+    ones)``), divided by the double count — bit-exact across engines
+    with NO rounding pin (the r6 ``round(avg(), 6)`` pin was itself a
+    flake source: the engines round 6dp boundary values differently,
+    ADVICE r6).  Member lists are ~(sample/K) elements, constant under
+    the K = N/125 schedule, so collect_list stays bounded.  Returns
+    ``(*keys, dim, cv)`` with 0-based ``dim``."""
+    return (
+        members.select(*keys, "vec_id", F.posexplode(vec).alias("dim", "val"))
+        .groupBy(*keys, "dim")
+        .agg(
+            F.aggregate(
+                F.array_sort(F.collect_list(F.struct("vec_id", "val"))),
+                F.lit(0.0),
+                lambda acc, x: acc + x["val"],
+            ).alias("sv"),
+            F.count(F.lit(1)).alias("cnt"),
+        )
+        .select(*keys, "dim", (F.col("sv") / F.col("cnt")).alias("cv"))
+    )
+
+
+def train_pq_books(
     spark: SparkSession,
     emb: DataFrame,
-    k_cells: int,
+    n_sub: int,
+    sub_dims: int | None,
+    k_codes: int,
     cache_key: tuple,
     iters: int = KMEANS_ITERS,
     sample_mod: int = KMEANS_SAMPLE_MOD,
-) -> DataFrame:
-    """Deterministic sampled spherical k-means — the trained codebook
-    behind the IVF operators (replaces the r4/r5 first-K-by-id seeds,
-    whose cell geometry was unrealistically loose: the measured 1.4%
-    Cauchy-Schwarz pruning rate in PLANS.md was the tell).
+) -> list[list]:
+    """The Lloyd trainer: deterministic sampled spherical k-means on
+    ``n_sub`` contiguous ``sub_dims``-wide slices of every vector at
+    once, carrying the subspace ``m`` through each stage and grouping
+    on ``(m, cell)``.  ``sub_dims=None`` splits the vector evenly, so
+    ``n_sub=1`` trains on whole vectors of any length — the flat
+    codebook behind the IVF operators
+    (:func:`train_kmeans_centroid_values`); product quantization
+    trains ``PQ_M`` slices of ``PQ_SUB`` dims.  (Trained codebooks
+    replaced the r4/r5 first-K-by-id seeds, whose loose cell geometry
+    showed as a 1.4% Cauchy-Schwarz pruning rate, PLANS.md.)
 
-    Exactly replayed by the DuckDB oracle (:func:`_kmeans_ctes`), step
-    for step:
+    Replayed per subspace by :func:`_kmeans_ctes`, step for step:
 
     - sample: ``vec_id % sample_mod == 0`` (deterministic, no RNG);
-    - seeds: the K smallest-id sample vectors' unit-normalized
-      embeddings; ``cell`` keeps the seed's vec_id;
-    - per iteration: assign each sample vector to its max-dot centroid
-      (ties -> smaller cell id), re-average per (cell, dim) with an
-      ORDER-PINNED mean — members summed left-to-right in vec_id-asc
-      order (Spark: fold over ``array_sort(collect_list(struct(vec_id,
-      val)))``; DuckDB: ``list_inner_product(array_agg(val ORDER BY
-      vec_id), ones)``), divided by the double count — bit-exact
-      across engines with NO rounding pin (the r6 ``round(avg(), 6)``
-      pin was itself a flake source: the three engines round 6dp
-      boundary values differently, ADVICE r6) — then renormalize with
-      a left-to-right sum-of-squares fold;
-    - a cell that captured no vectors keeps its previous centroid.
+    - seeds: the K smallest-id sample vectors (:func:`_seed_frame`),
+      sliced per subspace on the driver; ``cell`` keeps the seed's
+      vec_id;
+    - per iteration: assign each sample slice to its max-dot centroid
+      (``row_number`` over dot desc, cell asc: ties -> smaller cell
+      id), re-average per (m, cell, dim) with :func:`_pinned_means`,
+      then renormalize on the driver with a left-to-right
+      sum-of-squares fold;
+    - a cell that captured no vectors, or whose mean is all zeros
+      (reachable for a sub-slice of nonzero vectors, ADVICE r8), keeps
+      its previous centroid — the oracle's CASE guard.
 
-    Scale design: this is the ML-KMeans pattern — the sample stages
-    run distributed, and only K x dims doubles ever reach the
-    driver (the same driver-side scalar class as the CC convergence
-    signals).  At 100 TB the sample predicate becomes a fixed-size
-    draw; the schedule and replay stay identical.
+    Jobs: 1 seed collect + ``iters`` mean collects whatever ``n_sub``
+    (sequential per-subspace training burned ~25 s of cold start at
+    sf0.1 on 24 tiny-job round trips).  Only ``n_sub x K x sub_dims``
+    doubles ever reach the driver — the ML-KMeans pattern; at 100 TB
+    the sample predicate becomes a fixed-size draw and the schedule
+    and replay stay identical.
 
-    Returns a broadcast-ready ``(cell, c_en)`` DataFrame of LITERAL
-    centroid values, so downstream assign/probe plans are shallow and
-    the training jobs run once per (session, cache_key).  Callers that
-    need the literal VALUES (e.g. the two-level SemDeDup assignment,
-    which derives super-centroids from them driver-side) use
-    :func:`train_kmeans_centroid_values`."""
-    return broadcast(
-        spark.createDataFrame(
-            train_kmeans_centroid_values(
-                spark, emb, k_cells, cache_key, iters, sample_mod
+    Returns ``books``: for each ``m``, the ``[(cell, [floats])]`` list
+    in cell-id order.  Memoized in the ``kmeans`` family; the slice
+    width rides in the key, since a width-blind key would hand back
+    wrong-width centroids."""
+
+    def build() -> list[list]:
+        samp = emb.filter(F.col("vec_id") % sample_mod == 0).select("vec_id", "emb_n")
+        seeds = _seed_frame(samp, k_codes).collect()
+        width = sub_dims or len(seeds[0]["c_en"]) // n_sub
+        cents = {
+            (m, r["cell"]): list(r["c_en"][m * width : (m + 1) * width])
+            for r in seeds
+            for m in range(n_sub)
+        }  # (m, cell) -> centroid
+        # the sample, exploded once per subspace: (vec_id, m, sub_en)
+        exploded = samp.select(
+            "vec_id",
+            "emb_n",
+            F.explode(F.sequence(F.lit(0), F.lit(n_sub - 1))).alias("m"),
+        ).select(
+            "vec_id",
+            "m",
+            F.slice(F.col("emb_n"), F.col("m") * width + 1, F.lit(width)).alias(
+                "sub_en"
             ),
-            schema="cell long, c_en array<double>",
         )
-    )
+        for _ in range(iters):
+            cents_df = broadcast(
+                spark.createDataFrame(
+                    [(m, c, v) for (m, c), v in sorted(cents.items())],
+                    schema="m int, cell long, c_en array<double>",
+                )
+            )
+            w_asg = Window.partitionBy("vec_id", "m").orderBy(
+                F.col("c_sim").desc(), F.col("cell")
+            )
+            assigned = (
+                exploded.join(cents_df, "m")
+                .withColumn("c_sim", dot(F.col("sub_en"), F.col("c_en")))
+                .withColumn("c_rn", F.row_number().over(w_asg))
+                .filter(F.col("c_rn") == 1)
+                .select("vec_id", "m", "cell", "sub_en")
+            )
+            by_cell: dict[tuple, dict[int, float]] = {}
+            for r in _pinned_means(assigned, "sub_en", ("m", "cell")).collect():
+                by_cell.setdefault((r["m"], r["cell"]), {})[r["dim"]] = r["cv"]
+            nxt = {}
+            for mc, prev in cents.items():
+                vals = by_cell.get(mc)
+                if vals is None:
+                    nxt[mc] = prev
+                    continue
+                raw = [vals[i] for i in range(width)]
+                acc = 0.0
+                for v in raw:  # left-to-right fold == both engines' fold
+                    acc = acc + v * v
+                nrm = math.sqrt(acc)
+                nxt[mc] = prev if nrm == 0.0 else [v / nrm for v in raw]
+            cents = nxt
+        return [
+            sorted((c, v) for (m, c), v in cents.items() if m == mm)
+            for mm in range(n_sub)
+        ]
+
+    key = (*cache_key, n_sub, sub_dims, k_codes, iters, sample_mod)
+    return memo(spark, "kmeans", key, build)
 
 
 def train_kmeans_centroid_values(
@@ -743,79 +856,38 @@ def train_kmeans_centroid_values(
     iters: int = KMEANS_ITERS,
     sample_mod: int = KMEANS_SAMPLE_MOD,
 ) -> list:
-    """The memoized ``[(cell, [centroid floats])]`` literals behind
-    :func:`train_kmeans_centroids` (see there for the algorithm and
-    the oracle-replay pins), in seed order (cell id ascending)."""
+    """The flat ``[(cell, [centroid floats])]`` codebook in cell-id
+    order: :func:`train_pq_books`' one-subspace, whole-vector call
+    (see there for the algorithm and the oracle-replay pins).  Training
+    runs once per (session, cache_key, K, schedule); repeat calls and
+    the probe + assign stages of one query reuse it."""
+    return train_pq_books(
+        spark, emb, 1, None, k_cells, cache_key, iters, sample_mod
+    )[0]
 
-    def build() -> list:
-        samp = emb.filter(F.col("vec_id") % sample_mod == 0).select(
-            "vec_id", "emb_n"
+
+def train_kmeans_centroids(
+    spark: SparkSession,
+    emb: DataFrame,
+    k_cells: int,
+    cache_key: tuple,
+    iters: int = KMEANS_ITERS,
+    sample_mod: int = KMEANS_SAMPLE_MOD,
+) -> DataFrame:
+    """:func:`train_kmeans_centroid_values` as a broadcast ``(cell,
+    c_en)`` DataFrame of LITERAL centroid values, so downstream
+    assign/probe plans are shallow.  Callers that need the VALUES
+    (e.g. the two-level SemDeDup assignment, which derives
+    super-centroids from them driver-side) call
+    :func:`train_kmeans_centroid_values` directly."""
+    return broadcast(
+        spark.createDataFrame(
+            train_kmeans_centroid_values(
+                spark, emb, k_cells, cache_key, iters, sample_mod
+            ),
+            schema="cell long, c_en array<double>",
         )
-        seed_rows = _seed_frame(samp, k_cells).collect()
-        cents = [(r["cell"], list(r["c_en"])) for r in seed_rows]
-        n_dims = len(cents[0][1])
-        for _ in range(iters):
-            cents_df = broadcast(
-                spark.createDataFrame(cents, schema="cell long, c_en array<double>")
-            )
-            w_asg = Window.partitionBy("vec_id").orderBy(
-                F.col("c_sim").desc(), F.col("cell")
-            )
-            assigned = (
-                samp.join(cents_df, how="cross")
-                .withColumn("c_sim", dot(F.col("emb_n"), F.col("c_en")))
-                .withColumn("c_rn", F.row_number().over(w_asg))
-                .filter(F.col("c_rn") == 1)
-                .select("vec_id", "cell", "emb_n")
-            )
-            # order-pinned mean: members folded left-to-right in
-            # vec_id-asc order, so the sum (and thus the centroid) is
-            # bit-identical to the DuckDB/Python replays with no
-            # rounding pin.  Member lists are ~(sample/K) elements
-            # (the ~125/sample_mod cell-size target), constant under
-            # the K = N/125 schedule — collect_list stays bounded.
-            avg_rows = (
-                assigned.select(
-                    "vec_id", "cell", F.posexplode("emb_n").alias("dim", "val")
-                )
-                .groupBy("cell", "dim")
-                .agg(
-                    F.aggregate(
-                        F.array_sort(F.collect_list(F.struct("vec_id", "val"))),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x["val"],
-                    ).alias("sv"),
-                    F.count(F.lit(1)).alias("cnt"),
-                )
-                .select(
-                    "cell", "dim", (F.col("sv") / F.col("cnt")).alias("cv")
-                )
-                .collect()
-            )
-            by_cell: dict[int, dict[int, float]] = {}
-            for r in avg_rows:
-                by_cell.setdefault(r["cell"], {})[r["dim"]] = r["cv"]
-            nxt = []
-            for cell, prev in cents:
-                vals = by_cell.get(cell)
-                if vals is None:
-                    nxt.append((cell, prev))
-                    continue
-                raw = [vals[i] for i in range(n_dims)]
-                acc = 0.0
-                for v in raw:  # left-to-right fold == both engines' fold
-                    acc = acc + v * v
-                nrm = math.sqrt(acc)
-                # all-zero mean (cancellation): keep the previous
-                # centroid, same rule as the empty-cluster branch and
-                # the oracle replay's CASE guard (ADVICE r8)
-                nxt.append((cell, prev if nrm == 0.0 else [v / nrm for v in raw]))
-            cents = nxt
-        return cents
-
-    # training runs a couple of tiny sample jobs; repeat calls and the
-    # probe + assign stages of one query reuse one training run
-    return memo(spark, "kmeans", (*cache_key, k_cells, iters, sample_mod), build)
+    )
 
 
 def _kmeans_ctes(
@@ -826,7 +898,7 @@ def _kmeans_ctes(
     suffix: str = "",
     src: str = "e",
 ) -> str:
-    """CTE chain replaying :func:`train_kmeans_centroids` in DuckDB —
+    """CTE chain replaying :func:`train_pq_books` in DuckDB —
     same sample, seeds, assignment rule, order-pinned per-dim means
     (members summed vec_id-asc via ``list_inner_product(array_agg(val
     ORDER BY vec_id), ones)`` — bit-exact with Spark's sorted
@@ -934,7 +1006,7 @@ def super_centroids(
 
     Runs DRIVER-SIDE over the literal child centroids (K x dims
     doubles — the same driver-scalar class the Lloyd updates
-    in :func:`train_kmeans_centroids` already collect per iteration,
+    in :func:`train_pq_books` already collect per iteration,
     so this adds no new scale class; at extreme K the identical
     schedule lifts into the Spark trainer unchanged).  Every float op
     is pinned to the engines' shared arithmetic so the DuckDB replay
@@ -963,7 +1035,7 @@ def super_centroids(
             f"super_centroids: K={len(cents)} child centroids exceeds "
             f"SUPER_TRAIN_MAX_K={SUPER_TRAIN_MAX_K} — the driver-side "
             "Lloyd loop is O(iters*K*sqrt(K)*dims); lift this schedule "
-            "into train_kmeans_centroids' Spark trainer (identical "
+            "into the train_pq_books Spark trainer (identical "
             "steps, distributed sample jobs) before raising the bound"
         )
     cs = sorted((cell, list(vec)) for cell, vec in cents)
@@ -1023,8 +1095,8 @@ def argmax_dot(vec: Column, cands: Column) -> Column:
     assignment becomes a NARROW projection — no join, no shuffle, no
     window — the plan you want when the corpus is 100 TB and the
     codebook is kilobytes.  (At extreme K the same argmax runs as a
-    broadcast join + max(struct) partial agg; the fold form keeps the
-    bench plans one stage.)"""
+    join + max(struct) partial agg, :func:`_argmax_join`; the fold
+    form keeps the bench plans one stage.)"""
     init = F.struct(
         F.lit(float("-inf")).alias("sim"), F.lit(-1).cast("long").alias("id")
     )
@@ -1045,9 +1117,9 @@ def _assign_two_level_literal(
     PLAN LITERALS — a narrow projection (argmax folds over literal
     arrays: no join, no shuffle, no window), the one-stage plan the
     bench runs.  Plan size is O(K*d) literals, so this path is gated
-    at ``CODEBOOK_LITERAL_MAX_K``; past that the broadcast twin
-    (:func:`_assign_two_level_broadcast`) computes the identical
-    result with an O(1) plan.  Returns ``(vec_id, cell, emb_n)``."""
+    at ``CODEBOOK_LITERAL_MAX_K``; past that :func:`_assign_two_level`
+    over a broadcast codebook frame computes the identical result with
+    an O(1) plan.  Returns ``(vec_id, cell, emb_n)``."""
     sup_arr = F.array(
         *[_cand_struct(sid, sen) for sid, sen in sorted(sups) if sid in live]
     )
@@ -1071,76 +1143,41 @@ def _assign_two_level_literal(
     return emb.select("vec_id", cell.alias("cell"), "emb_n")
 
 
-def _assign_two_level_broadcast(
-    spark: SparkSession, emb: DataFrame, sups: list, c2s: dict, cents: list, live: set
-) -> DataFrame:
-    """Two-level nearest-cell assignment via BROADCAST codebook frames
-    (VERDICT r7 item 2 — the big-K lift path): the same floats as
-    :func:`_assign_two_level_literal` travel as broadcast relation
-    DATA instead of expression-tree literals, so plan size is O(1) in
-    K and whole-stage codegen never sees the codebook.
-
-    Math/determinism identical to the literal fold, pinned two ways:
-
-    - the dot is the same :func:`dot` fold per candidate row;
-    - the argmax is ``max(struct(sim, -id))`` — lexicographic struct
-      max keeps the greatest sim and, on exact float ties, the
-      greatest ``-id`` = SMALLEST id, exactly the strict-greater fold
-      (and DuckDB's ``row_number() OVER (ORDER BY lip DESC, id)``).
-      NaN sims can't arise: ``_emb_double`` filters zero-norm vectors
-      and centroids are unit vectors.
-
-    Shuffle shape at 100 TB: two broadcast joins (S-row and K-row
-    codebooks — kilobytes to low MB) each followed by a partial-agg
-    max, so the corpus crosses the wire twice keyed by vec_id with
-    map-side combine shrinking N*S / N*(K/S) candidate rows to N
-    before each exchange.  Returns ``(vec_id, cell, emb_n)``."""
-    sup_rows = [
-        (int(sid), [float(x) for x in sen])
-        for sid, sen in sorted(sups)
-        if sid in live
-    ]
-    child_rows = [
-        (int(c2s[cell]), int(cell), [float(x) for x in vec])
-        for cell, vec in sorted(cents)
-    ]
-    sup_df = broadcast(
-        spark.createDataFrame(sup_rows, schema="sup long, s_en array<double>")
-    )
-    child_df = broadcast(
+def _sup_frame(spark: SparkSession, sups: list) -> DataFrame:
+    """Broadcast ``(sup, s_en)`` frame of super-centroid literals."""
+    return broadcast(
         spark.createDataFrame(
-            child_rows, schema="sup long, cell long, c_en array<double>"
+            [(int(s), [float(x) for x in v]) for s, v in sups],
+            schema="sup long, s_en array<double>",
         )
     )
 
-    def neg(col: str) -> Column:
-        return (-F.col(col)).cast("long")
 
-    v2s = (
-        emb.join(sup_df, how="cross")
-        .withColumn("s_sim", dot(F.col("emb_n"), F.col("s_en")))
-        .groupBy("vec_id")
-        .agg(
-            # emb_n is constant per vec_id, so first() is
-            # order-insensitive here (value-deterministic)
-            F.first("emb_n").alias("emb_n"),
-            F.max(
-                F.struct(F.col("s_sim").alias("sim"), neg("sup").alias("nid"))
-            ).alias("m"),
-        )
-        .select("vec_id", "emb_n", (-F.col("m.nid")).cast("long").alias("sup"))
-    )
-    return (
-        v2s.join(child_df, "sup")
-        .withColumn("c_sim", dot(F.col("emb_n"), F.col("c_en")))
-        .groupBy("vec_id")
-        .agg(
-            F.first("emb_n").alias("emb_n"),
-            F.max(
-                F.struct(F.col("c_sim").alias("sim"), neg("cell").alias("nid"))
-            ).alias("m"),
-        )
-        .select("vec_id", (-F.col("m.nid")).cast("long").alias("cell"), "emb_n")
+def _assign_two_level(
+    spark: SparkSession, emb: DataFrame, sups: list, child_df: DataFrame
+) -> DataFrame:
+    """Two-level nearest-cell assignment over codebook FRAMES: level 1
+    broadcasts the S-row super codebook ``sups`` (live supers only —
+    the level-2 join is INNER on ``sup``, so a vector routed to a
+    childless super would vanish); level 2 joins each vector to its
+    super's rows of the child codebook ``child_df`` ``(sup, cell,
+    c_en)``.  Both levels are :func:`_argmax_join`, so the math is the
+    literal fold's (:func:`_assign_two_level_literal`): the same dot
+    per candidate, the same smallest-id tie rule.
+
+    The codebook travels as relation DATA, not expression literals, so
+    plan size is O(1) in K.  The caller picks the level-2 shape by the
+    frame it passes: ``dedup_semantic_ivf``'s flat path a broadcast
+    K-row frame (VERDICT r7 item 2 — kilobytes to low MB), the
+    hierarchical path :func:`train_kmeans_hierarchical`'s
+    checkpointed frame, shuffle-joined on ``sup`` so each vector meets
+    only its super-cell's ~sqrt(K) children and nothing O(K) crosses
+    the driver or a broadcast.  Each level's partial-agg max shrinks
+    N*S / N*(K/S) candidate rows to N before its exchange on vec_id.
+    Returns ``(vec_id, cell, emb_n)``."""
+    v2s = _argmax_join(emb, _sup_frame(spark, sups), "sup", "s_en")
+    return _argmax_join(v2s, child_df, "cell", "c_en", on="sup").select(
+        "vec_id", "cell", "emb_n"
     )
 
 
@@ -1154,32 +1191,33 @@ def train_kmeans_hierarchical(
 ) -> tuple[list, DataFrame]:
     """Two-level spherical k-means for K past the flat trainer's
     driver ceiling (VERDICT r9 item 3): returns ``(sups, child_df)``
-    where ``sups`` is the S = ceil(sqrt(K)) super-centroid literal
-    list (flat-trained — driver traffic O(sqrt(K) x dims)) and
-    ``child_df`` is the K-row child codebook ``(sup, cell, c_en)`` as
-    a checkpointed DATAFRAME that never crosses the driver.
+    where ``sups`` is the live S = ceil(sqrt(K)) super-centroid
+    literal list (driver traffic O(sqrt(K) x dims)) and ``child_df``
+    is the K-row child codebook ``(sup, cell, c_en)`` as a
+    checkpointed DATAFRAME that never crosses the driver.
 
     Schedule (per-level arithmetic identical to the flat trainer —
-    smallest-id seeds, strict-greater/smallest-id argmax, order-pinned
-    member folds, zero-norm keep-prev):
+    smallest-id seeds, smallest-id argmax ties, order-pinned member
+    folds, zero-norm keep-prev):
 
-    1. supers: flat ``train_kmeans_centroid_values`` at K=S.
-    2. the sample is assigned to its nearest super Spark-side
-       (broadcast of the S-row codebook only).
+    1. supers: :func:`train_kmeans_centroid_values` at K=S.
+    2. the sample is assigned to its nearest super with
+       :func:`_argmax_join` against the broadcast S-row codebook.
     3. per super-cell, ceil(K/S) children seed from the cell's
        smallest-id sample vectors and run the same Lloyd iterations
-       ENTIRELY as DataFrame ops — assignment is a shuffle join on
-       ``sup`` (children co-partitioned with their members), means
-       are the same order-pinned posexplode folds, renorm +
-       keep-prev are native array ops.  ``localCheckpoint`` after
-       each iteration truncates lineage; per-iteration driver
-       traffic is zero.
+       ENTIRELY as DataFrame ops — assignment is :func:`_argmax_join`
+       shuffle-joined on ``sup`` (children co-partitioned with their
+       members), means are :func:`_pinned_means`, renorm + keep-prev
+       are native array ops.  ``localCheckpoint`` after each
+       iteration truncates lineage; per-iteration driver traffic is
+       zero.
 
-    The output feeds :func:`_assign_two_level_join`.  This path is
-    NOT DuckDB-replayed (no fixture SF reaches the threshold — the
-    hash gate always exercises the flat trainer); its correctness
-    contract is the forced-threshold structural test in
-    tests/test_extensions.py."""
+    Only supers that won at least one child are returned, so the
+    output feeds :func:`_assign_two_level` directly.  Replayed in
+    DuckDB by :func:`_hier_replay_ctes` (the cert oracle's
+    hierarchical regime); no fixture SF reaches the threshold, so the
+    forced-threshold tests in tests/test_extensions.py and
+    tests/test_cert_oracles.py exercise it."""
 
     def build() -> tuple[list, DataFrame]:
         s_cells = math.ceil(math.sqrt(k_cells))
@@ -1187,31 +1225,10 @@ def train_kmeans_hierarchical(
         sups = train_kmeans_centroid_values(
             spark, emb, s_cells, ("hier_super", *cache_key)
         )
-        sup_df = broadcast(
-            spark.createDataFrame(
-                [(int(s), [float(x) for x in v]) for s, v in sups],
-                schema="sup long, s_en array<double>",
-            )
-        )
-
-        def neg(col: str) -> Column:
-            return (-F.col(col)).cast("long")
-
-        samp_sup = (
-            emb.filter(F.col("vec_id") % sample_mod == 0)
-            .select("vec_id", "emb_n")
-            .join(sup_df, how="cross")
-            .withColumn("s_sim", dot(F.col("emb_n"), F.col("s_en")))
-            .groupBy("vec_id")
-            .agg(
-                F.first("emb_n").alias("emb_n"),
-                F.max(
-                    F.struct(F.col("s_sim").alias("sim"), neg("sup").alias("nid"))
-                ).alias("m"),
-            )
-            .select("vec_id", "emb_n", (-F.col("m.nid")).cast("long").alias("sup"))
-            .localCheckpoint(eager=True)
-        )
+        samp = emb.filter(F.col("vec_id") % sample_mod == 0).select("vec_id", "emb_n")
+        samp_sup = _argmax_join(
+            samp, _sup_frame(spark, sups), "sup", "s_en"
+        ).localCheckpoint(eager=True)
 
         w_seed = Window.partitionBy("sup").orderBy("vec_id")
         child = (
@@ -1222,36 +1239,12 @@ def train_kmeans_hierarchical(
         )
 
         for _ in range(iters):
-            asg = (
-                samp_sup.join(child, "sup")
-                .withColumn("c_sim", dot(F.col("emb_n"), F.col("c_en")))
-                .groupBy("vec_id")
-                .agg(
-                    F.first("sup").alias("sup"),
-                    F.first("emb_n").alias("emb_n"),
-                    F.max(
-                        F.struct(F.col("c_sim").alias("sim"), neg("cell").alias("nid"))
-                    ).alias("m"),
-                )
-                .select(
-                    "sup", "vec_id", "emb_n", (-F.col("m.nid")).cast("long").alias("cell")
-                )
-            )
-            means = (
-                asg.select("sup", "cell", "vec_id", F.posexplode("emb_n").alias("dim", "val"))
-                .groupBy("sup", "cell", "dim")
-                .agg(
-                    F.aggregate(
-                        F.array_sort(F.collect_list(F.struct("vec_id", "val"))),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x["val"],
-                    ).alias("sv"),
-                    F.count(F.lit(1)).alias("cnt"),
-                )
-                .select("sup", "cell", "dim", (F.col("sv") / F.col("cnt")).alias("cv"))
+            asg = _argmax_join(
+                samp_sup, child, "cell", "c_en", on="sup", keep=("sup", "emb_n")
             )
             newc = (
-                means.groupBy("sup", "cell")
+                _pinned_means(asg, "emb_n", ("sup", "cell"))
+                .groupBy("sup", "cell")
                 .agg(
                     F.transform(
                         F.array_sort(F.collect_list(F.struct("dim", "cv"))),
@@ -1271,21 +1264,19 @@ def train_kmeans_hierarchical(
                 )
             )
             # keep-prev: empty cells and zero-norm means keep the old
-            # centroid, same rule as the flat trainer's Python branch
+            # centroid, same rule as the flat trainer's driver branch
             child = (
                 child.join(newc, ["sup", "cell"], "left")
                 .select("sup", "cell", F.coalesce("new_en", "c_en").alias("c_en"))
                 .localCheckpoint(eager=True)
             )
 
-        # only supers that won at least one child are scoreable: the
-        # level-2 join in :func:`_assign_two_level_join` is INNER on
-        # ``sup``, so a corpus vector whose nearest super had no sample
-        # members (hence no children) would silently vanish from the
-        # assignment, breaking the every-vector-covered contract (ADVICE
-        # r10).  Mirrors the flat path's ``live`` filter at the call
-        # site; the distinct-sup collect is O(S) = O(sqrt(K)) driver
-        # rows, the same order as the ``sups`` literal itself.
+        # only supers that won at least one child are scoreable: a
+        # corpus vector whose nearest super had no sample members (hence
+        # no children) would vanish from the inner level-2 join,
+        # breaking the every-vector-covered contract (ADVICE r10).  The
+        # distinct-sup collect is O(S) = O(sqrt(K)) driver rows, the
+        # same order as the ``sups`` literal itself.
         live = {r[0] for r in child.select("sup").distinct().collect()}
         sups = [(s, v) for s, v in sups if s in live]
 
@@ -1298,53 +1289,6 @@ def train_kmeans_hierarchical(
         "kmeans_hier",
         ("hier", *cache_key, k_cells, iters, sample_mod),
         build,
-    )
-
-
-def _assign_two_level_join(
-    spark: SparkSession, emb: DataFrame, sups: list, child_df: DataFrame
-) -> DataFrame:
-    """Two-level nearest-cell assignment for codebooks past the
-    broadcast ceiling: level 1 broadcasts only the S-row super
-    codebook; level 2 is a SHUFFLE join on ``sup`` against the
-    child-codebook DataFrame (each vector meets only its super-cell's
-    ~sqrt(K) children), so nothing O(K) ever crosses the driver or a
-    broadcast.  Same argmax rule (lexicographic ``max(struct(sim,
-    -id))``) as :func:`_assign_two_level_broadcast`; returns
-    ``(vec_id, cell, emb_n)``."""
-    sup_df = broadcast(
-        spark.createDataFrame(
-            [(int(s), [float(x) for x in v]) for s, v in sups],
-            schema="sup long, s_en array<double>",
-        )
-    )
-
-    def neg(col: str) -> Column:
-        return (-F.col(col)).cast("long")
-
-    v2s = (
-        emb.join(sup_df, how="cross")
-        .withColumn("s_sim", dot(F.col("emb_n"), F.col("s_en")))
-        .groupBy("vec_id")
-        .agg(
-            F.first("emb_n").alias("emb_n"),
-            F.max(
-                F.struct(F.col("s_sim").alias("sim"), neg("sup").alias("nid"))
-            ).alias("m"),
-        )
-        .select("vec_id", "emb_n", (-F.col("m.nid")).cast("long").alias("sup"))
-    )
-    return (
-        v2s.join(child_df, "sup")
-        .withColumn("c_sim", dot(F.col("emb_n"), F.col("c_en")))
-        .groupBy("vec_id")
-        .agg(
-            F.first("emb_n").alias("emb_n"),
-            F.max(
-                F.struct(F.col("c_sim").alias("sim"), neg("cell").alias("nid"))
-            ).alias("m"),
-        )
-        .select("vec_id", (-F.col("m.nid")).cast("long").alias("cell"), "emb_n")
     )
 
 
@@ -1719,122 +1663,6 @@ def _pq_adc_oracle() -> str:
     """
 
 
-def train_pq_books(
-    spark: SparkSession,
-    emb: DataFrame,
-    n_sub: int,
-    sub_dims: int,
-    k_codes: int,
-    cache_key: tuple,
-    iters: int = KMEANS_ITERS,
-    sample_mod: int = KMEANS_SAMPLE_MOD,
-) -> list[list]:
-    """All ``n_sub`` product-quantization sub-codebooks trained in ONE
-    batched pipeline — the same deterministic sampled spherical
-    k-means schedule as :func:`train_kmeans_centroid_values`, run for
-    every subspace simultaneously by carrying ``m`` through each stage
-    and grouping on ``(m, cell)`` instead of ``cell``.  Per subspace
-    the arithmetic is IDENTICAL to the per-m sequential calls (same
-    sample, same smallest-id seeds, same argmax ties, same
-    order-pinned means and left-fold renorms), so the per-m
-    :func:`_kmeans_ctes` oracle replays still match bit for bit; the
-    win is job count: 1 seed collect + ``iters`` mean collects TOTAL,
-    instead of ``n_sub x (1 + iters)`` (the sequential form burned
-    ~25 s of cold-start at sf0.1 on 24 tiny-job round-trips; batched
-    runs the same floats in 3).
-
-    Returns ``books`` — for each ``m``, the ``[(cell, [floats])]``
-    list in seed order, exactly what the sequential calls return."""
-
-    def build() -> list[list]:
-        # the sample, exploded once per subspace: (vec_id, m, sub_en)
-        samp = emb.filter(F.col("vec_id") % sample_mod == 0).select("vec_id", "emb_n")
-        exploded = samp.select(
-            "vec_id",
-            "emb_n",
-            F.explode(F.sequence(F.lit(0), F.lit(n_sub - 1))).alias("m"),
-        ).select(
-            "vec_id",
-            "m",
-            F.slice(
-                F.col("emb_n"), F.col("m") * sub_dims + 1, F.lit(sub_dims)
-            ).alias("sub_en"),
-        )
-        # seeds: the K smallest-id sample vectors (same ids for every m) —
-        # TakeOrdered shape, one collect of K x n_sub x sub_dims doubles
-        seed_rows = (
-            exploded.orderBy("vec_id", "m")
-            .limit(k_codes * n_sub)
-            .collect()
-        )
-        cents = {
-            (r["m"], r["vec_id"]): list(r["sub_en"]) for r in seed_rows
-        }  # (m, cell) -> centroid
-        for _ in range(iters):
-            cents_df = broadcast(
-                spark.createDataFrame(
-                    [(m, c, v) for (m, c), v in sorted(cents.items())],
-                    schema="m int, cell long, c_en array<double>",
-                )
-            )
-            w_asg = Window.partitionBy("vec_id", "m").orderBy(
-                F.col("c_sim").desc(), F.col("cell")
-            )
-            assigned = (
-                exploded.join(cents_df, "m")
-                .withColumn("c_sim", dot(F.col("sub_en"), F.col("c_en")))
-                .withColumn("c_rn", F.row_number().over(w_asg))
-                .filter(F.col("c_rn") == 1)
-                .select("vec_id", "m", "cell", "sub_en")
-            )
-            # order-pinned mean per (m, cell, dim): members folded
-            # left-to-right in vec_id-asc order — bit-identical to the
-            # sequential trainer's fold and the DuckDB replay
-            avg_rows = (
-                assigned.select(
-                    "vec_id", "m", "cell", F.posexplode("sub_en").alias("dim", "val")
-                )
-                .groupBy("m", "cell", "dim")
-                .agg(
-                    F.aggregate(
-                        F.array_sort(F.collect_list(F.struct("vec_id", "val"))),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x["val"],
-                    ).alias("sv"),
-                    F.count(F.lit(1)).alias("cnt"),
-                )
-                .select("m", "cell", "dim", (F.col("sv") / F.col("cnt")).alias("cv"))
-                .collect()
-            )
-            by_cell: dict[tuple, dict[int, float]] = {}
-            for r in avg_rows:
-                by_cell.setdefault((r["m"], r["cell"]), {})[r["dim"]] = r["cv"]
-            nxt = {}
-            for mc, prev in cents.items():
-                vals = by_cell.get(mc)
-                if vals is None:
-                    nxt[mc] = prev
-                    continue
-                raw = [vals[i] for i in range(sub_dims)]
-                acc = 0.0
-                for v in raw:  # left-to-right fold == both engines' fold
-                    acc = acc + v * v
-                nrm = math.sqrt(acc)
-                # an all-zero SUB-SLICE mean is reachable on sparse real
-                # embeddings even though whole-vector zero norms are
-                # filtered (ADVICE r8): keep the previous centroid, the
-                # same rule the oracle replay's CASE guard applies
-                nxt[mc] = prev if nrm == 0.0 else [v / nrm for v in raw]
-            cents = nxt
-        return [
-            sorted((c, v) for (m, c), v in cents.items() if m == mm)
-            for mm in range(n_sub)
-        ]
-
-    key = ("pq_batch", *cache_key, n_sub, sub_dims, k_codes, iters, sample_mod)
-    return memo(spark, "kmeans", key, build)
-
-
 def _pq_lut(cen_lits: list, sub, m: int) -> Column:
     """Positional LUT for subspace ``m``: one dot per code, in
     position order.  A named closure, NOT an inline two-arg lambda —
@@ -1915,9 +1743,9 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     - split the 64-dim unit vector into PQ_M=8 contiguous 8-dim
       subspaces; train an independent PQ_CODES=32-centroid codebook
       per subspace with the SAME sampled spherical k-means schedule as
-      IVF (:func:`train_kmeans_centroid_values` on the sliced frame —
-      memoized per session, shared with nothing else via the ``pq``
-      cache key, which carries the slice width);
+      IVF (:func:`train_pq_books`, all 8 subspaces in one batched
+      run — memoized per session under a key that carries the slice
+      width);
     - encode: each corpus vector becomes 8 code ids (argmax dot vs the
       32 sub-centroids, ties -> smaller id) — a NARROW literal-fold
       projection (codebook is 8x32x8 = 2k doubles, far under
@@ -2215,10 +2043,7 @@ def sim_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: canonical low-rung fixture for the cert-sweep trainer drift pin
-#: (overridable so tests can point it at a scratch fixture)
-KMEANS_DRIFT_FIXTURE = os.environ.get(
-    "PRS_KMEANS_DRIFT_FIXTURE", "/root/testdata/sf0.01"
-)
+KMEANS_DRIFT_FIXTURE = "/root/testdata/sf0.01"
 
 
 def _trainer_codebook_drift_check(spark: SparkSession) -> None:
@@ -2285,8 +2110,8 @@ def _hier_replay_ctes(
     n_dims: int = EMBEDDING_DIMS,
 ) -> str:
     """CTE chain replaying the HIERARCHICAL schedule
-    (:func:`train_kmeans_hierarchical` + :func:`_assign_two_level_join`)
-    in DuckDB, bit-exactly, ending in ``assigned(vec_id, cell)`` over
+    (:func:`train_kmeans_hierarchical` + :func:`_assign_two_level` over
+    its child frame) in DuckDB, bit-exactly, ending in ``assigned(vec_id, cell)`` over
     the full corpus (VERDICT r13 item 5: the hierarchical regime had
     no replay — its cert boundary was a NotImplementedError guard).
 
@@ -2414,7 +2239,7 @@ def _semdedup_cert_oracle(spark: SparkSession, sf_dir: str, con) -> str:
     item 3): the primary oracle's Lloyd-training replay (sample x K
     cross joins, materialized per iteration) spills >71 GB at sf10,
     while every LIVE stage of it is already certified elsewhere —
-    :func:`train_kmeans_centroids` is replayed BIT-EXACTLY by
+    :func:`train_kmeans_centroid_values` is replayed BIT-EXACTLY by
     :func:`_kmeans_ctes` at sf0.01/sf1/sf3 and through sim_ivf_topk at
     sf10.  So this oracle PINS exactly one intermediate — the trained
     child codebook, exported from the same memoized trainer the query
@@ -2442,10 +2267,8 @@ def _semdedup_cert_oracle(spark: SparkSession, sf_dir: str, con) -> str:
         # nothing pinned, so no drift check is needed.  The replay is
         # cheaper than the flat one at equal K (child assignment
         # meets only ~sqrt(K) children per vector), so the regime is
-        # certifiable at any forced-threshold rung; certified via
-        # PRS_KMEANS_FLAT_MAX_K-forced driver_sim legs (CERT_r14.md)
-        # and pinned == the Spark result at sf0.001 by
-        # tests/test_cert_oracles.py.
+        # certifiable at any forced-threshold rung; pinned == the
+        # Spark result at sf0.001 by tests/test_cert_oracles.py.
         return f"""
     WITH {_EN_CTE},
     {_hier_replay_ctes(k_cells)},
@@ -2556,7 +2379,7 @@ def dedup_semantic_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule is order-free, one join, and exactly SQL-replayable.)
 
     Clustering uses TRAINED centroids (deterministic sampled spherical
-    k-means, :func:`train_kmeans_centroids` — same trainer as
+    k-means, :func:`train_kmeans_centroid_values` — same codebook as
     sim_ivf_topk) with TWO-LEVEL nearest-cell assignment (r6-verdict
     item 2): S = ceil(sqrt(K)) super-centroids are derived from the
     child codebook (:func:`super_centroids`), each vector scores the S
@@ -2574,11 +2397,14 @@ def dedup_semantic_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (argmax folds over plan-literal codebooks: no join, no shuffle,
     no window, :func:`_assign_two_level_literal`); above
     ``CODEBOOK_LITERAL_MAX_K`` the identical math runs as two
-    broadcast-join argmaxes (:func:`_assign_two_level_broadcast`) so
-    plan size stays O(1) while the K = N/125 schedule grows — the
-    r7-verdict plan-serialization ceiling is gone (the two paths are
-    pinned hash-identical by tests/test_extensions.py's forced-
-    threshold equivalence test).  Measured on the 10x sf0.1->sf1 step
+    broadcast-join argmaxes (:func:`_assign_two_level` over a broadcast
+    child-codebook frame) so plan size stays O(1) while the K = N/125
+    schedule grows — the r7-verdict plan-serialization ceiling is gone
+    (the two paths are pinned hash-identical by
+    tests/test_extensions.py's forced-threshold equivalence test).
+    Past ``KMEANS_FLAT_TRAIN_MAX_K`` the codebook comes from
+    :func:`train_kmeans_hierarchical` and :func:`_assign_two_level`
+    shuffle-joins its child frame instead.  Measured on the 10x sf0.1->sf1 step
     (BENCH_scale_r08.md, same-session A/B): literal path 1.12->4.00 s
     (3.6x — codegen/plan cost growing with K=16->160), broadcast path
     1.79->2.11 s (1.2x); as shipped (threshold 128) the operator runs
@@ -2612,17 +2438,24 @@ def dedup_semantic_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             hsups, child_df = train_kmeans_hierarchical(
                 spark, emb, k_cells, cache_key=("kmeans", sf_dir)
             )
-            return _assign_two_level_join(spark, emb, hsups, child_df)
+            return _assign_two_level(spark, emb, hsups, child_df)
         cents = train_kmeans_centroid_values(
             spark, emb, k_cells, cache_key=("kmeans", sf_dir)
         )
         sups, c2s = super_centroids(cents, math.ceil(math.sqrt(k_cells)))
         # only super-cells that won at least one child are scoreable
         # (a vector routed to a childless super would have no cell)
-        live = {s for s in c2s.values()}
+        live = set(c2s.values())
         if k_cells <= CODEBOOK_LITERAL_MAX_K:
             return _assign_two_level_literal(emb, sups, c2s, cents, live)
-        return _assign_two_level_broadcast(spark, emb, sups, c2s, cents, live)
+        child_df = broadcast(
+            spark.createDataFrame(
+                [(c2s[c], c, v) for c, v in cents],
+                schema="sup long, cell long, c_en array<double>",
+            )
+        )
+        live_sups = [(s, v) for s, v in sups if s in live]
+        return _assign_two_level(spark, emb, live_sups, child_df)
 
     # the threshold is part of the memo key: the assignment PATH
     # (literal vs broadcast) is a function of it, and the equivalence

@@ -249,7 +249,15 @@ def streaming_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both rungs (adaptive_state_width's docstring has the table).
     cap = min(max(spark.sparkContext.defaultParallelism // 4, 1), 16)
     parts = adaptive_state_width(spark, sf_dir, 512 << 10, cap)
-    return drain(attribution_join(ev), "append", state_partitions=parts)
+    pairs = attribution_join(ev).select(
+        "user_id",
+        "click_id",
+        "purchase_id",
+        F.date_format("click_ts", "yyyy-MM-dd HH:mm:ss").alias("click_time"),
+        F.date_format("purchase_ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_time"),
+        F.round("purchase_value", 2).alias("purchase_value"),
+    )
+    return drain(pairs, "append", state_partitions=parts)
 
 
 @query(

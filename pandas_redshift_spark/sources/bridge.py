@@ -334,19 +334,16 @@ class SparkRedshiftBridge:
                 if layout:
                     writer = writer.option("createTableOptions", layout)
             writer.mode(mode).save()
-        elif zorder:
-            out = apply_layout(
-                sdf, diststyle=diststyle, distkey=distkey, sortkey=ZORDER_COL
-            )
-            out.drop(ZORDER_COL).write.mode(mode).saveAsTable(table_name)
         else:
             out = apply_layout(
                 sdf,
                 diststyle=diststyle,
                 distkey=distkey,
-                sortkey=sortkey,
+                sortkey=ZORDER_COL if zorder else sortkey,
                 sort_interleaved=sort_interleaved,
             )
+            if zorder:
+                out = out.drop(ZORDER_COL)
             out.write.mode(mode).saveAsTable(table_name)
         if verbose:
             logger.info("wrote table %s (mode=%s)", table_name, mode)

@@ -155,7 +155,10 @@ def attribution_join(events: DataFrame, horizon: str = "1 hour") -> DataFrame:
     canonical bounded-state stream-stream join (attribution at a 100 TB
     event firehose runs exactly this plan against Kafka).  Self-joining
     one source stream is supported: the planner instantiates two
-    scans."""
+    scans.  Returns ``(user_id, click_id, purchase_id, click_ts,
+    purchase_ts, purchase_value)`` unformatted, so the batch operator
+    ``events_attribution_join`` and the streaming one
+    ``streaming_attribution_join`` share this one plan."""
     # Watermark delay is STRICTLY GREATER than the join horizon
     # (ADVICE r5): with delay == horizon, a purchase arriving in a
     # later micro-batch exactly `horizon` after the newest click would
@@ -193,9 +196,9 @@ def attribution_join(events: DataFrame, horizon: str = "1 hour") -> DataFrame:
         F.col("c_user").alias("user_id"),
         "click_id",
         "purchase_id",
-        F.date_format("click_ts", "yyyy-MM-dd HH:mm:ss").alias("click_time"),
-        F.date_format("purchase_ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_time"),
-        F.round("purchase_value", 2).alias("purchase_value"),
+        "click_ts",
+        "purchase_ts",
+        "purchase_value",
     )
 
 
@@ -395,103 +398,6 @@ def drain(
     # the query has terminated; stop() releases its listener bookkeeping
     q.stop()
     return spark.read.schema(stream_df.schema).parquet(out_dir)
-
-
-def user_profile(events_batch: DataFrame) -> DataFrame:
-    """Static per-user profile (all-time event count + avg value) —
-    the batch-computed feature table a streaming job enriches against.
-    In production this is a periodically refreshed lake table."""
-    return events_batch.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("hist_events"),
-        F.avg("value").alias("hist_avg_value"),
-    )
-
-
-def enrich_stream_with_profile(events: DataFrame, profile: DataFrame) -> DataFrame:
-    """Stream-static broadcast join: every micro-batch of the event
-    stream is enriched with the (small, slowly-changing) user profile.
-    The static side broadcasts once per micro-batch — no stream-side
-    shuffle and no state store involvement, which is why stream-static
-    is the preferred enrichment shape before reaching for
-    stream-stream joins.  Downstream aggregates by profile attributes
-    then work normally (here: per-activity-band event counts)."""
-    banded = events.join(F.broadcast(profile), "user_id").withColumn(
-        "band",
-        F.when(F.col("hist_events") >= 20, "heavy")
-        .when(F.col("hist_events") >= 5, "mid")
-        .otherwise("light"),
-    )
-    return banded.groupBy("band").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.avg("value"), 4).alias("avg_value"),
-    )
-
-
-def click_purchase_interval_join(events: DataFrame, horizon: str = "30 minutes") -> DataFrame:
-    """STREAM-STREAM event-time interval join: purchases attributed to
-    the same user's click within the preceding ``horizon``.  Both
-    sides carry watermarks and the join condition bounds event time in
-    ONE direction per side, so the state store can expire rows — the
-    canonical attribution-join shape (Structured Streaming requires
-    exactly these bounds to avoid unbounded state; an unbounded
-    condition is rejected at analysis time).
-
-    Emits one row per (click, purchase) pair inside the horizon; the
-    batch twin is the identical expression over the static frame
-    (batch-differential tested)."""
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-            F.col("event_id").alias("click_id"),
-        )
-        .withWatermark("click_ts", "2 hours")
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    return clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {horizon}")),
-    ).select(
-        F.col("c_user").alias("user_id"),
-        "click_id",
-        "purchase_id",
-        "purchase_value",
-    )
-
-
-def write_foreach_batch_idempotent(stream_df: DataFrame, out_dir: str):
-    """writeStream.foreachBatch with EPOCH-KEYED idempotent output:
-    each micro-batch lands in ``{out_dir}/epoch={batch_id}`` via
-    mode("overwrite"), so a replayed batch (restart after a sink
-    failure, before the commit log advanced) overwrites its own
-    directory instead of appending duplicates — the standard
-    exactly-once recipe for sinks without transactional commit.
-    Blocks until all available input is consumed; read the result with
-    spark.read.parquet(out_dir)."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out_dir}/epoch={batch_id}")
-
-    q = (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", f"{out_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
 
 
 def run_foreachbatch_upsert(events: DataFrame) -> DataFrame:

@@ -1577,7 +1577,11 @@ def test_semdedup_broadcast_plan_carries_no_codebook_literals(spark, sf_dir):
     (O(K) occurrences); the broadcast path's plan must stay free of
     that expansion — the codebook travels as broadcast relation data,
     and the only struct constructors left are the two argmax
-    max(struct(sim, nid)) aggregates."""
+    max(struct(sim, nid)) aggregates.  Audited on the assignment
+    dedup_semantic_ivf runs past the threshold: _assign_two_level over
+    a broadcast child-codebook frame."""
+    from pyspark.sql.functions import broadcast
+
     import pandas_redshift_spark.operators.similarity as sim
     from pandas_redshift_spark.session import Tables
 
@@ -1595,8 +1599,15 @@ def test_semdedup_broadcast_plan_carries_no_codebook_literals(spark, sf_dir):
         ._jdf.queryExecution()
         .explainString(mode)
     )
+    child_df = broadcast(
+        spark.createDataFrame(
+            [(c2s[c], c, v) for c, v in cents],
+            schema="sup long, cell long, c_en array<double>",
+        )
+    )
+    live_sups = [(s, v) for s, v in sups if s in live]
     bc_plan = (
-        sim._assign_two_level_broadcast(spark, emb, sups, c2s, cents, live)
+        sim._assign_two_level(spark, emb, live_sups, child_df)
         ._jdf.queryExecution()
         .explainString(mode)
     )
@@ -1782,7 +1793,7 @@ def test_semdedup_hierarchical_trainer_structural(spark, sf_dir, monkeypatch):
     """Forced-threshold contract for the big-K hierarchical path
     (VERDICT r9 item 3): with KMEANS_FLAT_TRAIN_MAX_K monkeypatched
     below the fixture's K, dedup_semantic_ivf must route through
-    train_kmeans_hierarchical + _assign_two_level_join and still
+    train_kmeans_hierarchical + _assign_two_level and still
     satisfy the operator's semantic contract.  The path is NOT
     oracle-replayed (no fixture SF reaches the real threshold), so
     this test IS its correctness gate:
@@ -1818,7 +1829,7 @@ def test_semdedup_hierarchical_trainer_structural(spark, sf_dir, monkeypatch):
     assert len({(r["sup"], r["cell"]) for r in crows}) == len(crows)
     sup_ids = {s for s, _ in sups}
     # ADVICE r10 fix: the trainer returns ONLY live supers (those with
-    # >=1 child), so the inner join in _assign_two_level_join can
+    # >=1 child), so the inner join in _assign_two_level can
     # never drop a vector routed to a childless super
     assert sup_ids == {r["sup"] for r in crows}
     for r in crows:
@@ -1847,44 +1858,3 @@ def test_semdedup_hierarchical_trainer_structural(spark, sf_dir, monkeypatch):
     flagged = {r["vid"] for r in pairs.collect()}
     dropped = {r["vec_id"] for r in out.filter(~F.col("kept")).collect()}
     assert dropped == flagged
-
-
-def test_two_level_join_assignment_matches_broadcast(spark, sf_dir):
-    """The shuffle-join assignment path (`_assign_two_level_join`, the
-    big-K consumer of the hierarchical trainer) must compute the SAME
-    argmax as the certified broadcast path when fed the SAME codebook:
-    build the flat-trained K=16 codebook + its super derivation (the
-    combination the driver has hash-verified end-to-end through
-    dedup_semantic_ivf), run both assignment paths on it, and require
-    row-for-row equality — pinning the join path's max(struct(sim,
-    -id)) math to the certified floats."""
-    import pandas_redshift_spark.operators.similarity as sim
-    from pandas_redshift_spark.session import Tables
-
-    t = Tables(spark, sf_dir)
-    emb = sim._emb_double(t).select("vec_id", "emb_n")
-    cents = sim.train_kmeans_centroid_values(
-        spark, emb, 16, cache_key=("kmeans", sf_dir)
-    )
-    sups, c2s = sim.super_centroids(cents, 4)
-    live = set(c2s.values())
-
-    bc = {
-        (r["vec_id"], r["cell"])
-        for r in sim._assign_two_level_broadcast(
-            spark, emb, sups, c2s, cents, live
-        ).collect()
-    }
-    child_df = spark.createDataFrame(
-        [
-            (int(c2s[cell]), int(cell), [float(x) for x in vec])
-            for cell, vec in sorted(cents)
-        ],
-        schema="sup long, cell long, c_en array<double>",
-    )
-    live_sups = [(s, v) for s, v in sups if s in live]
-    jn = {
-        (r["vec_id"], r["cell"])
-        for r in sim._assign_two_level_join(spark, emb, live_sups, child_df).collect()
-    }
-    assert bc == jn and len(bc) > 0

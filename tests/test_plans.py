@@ -321,31 +321,35 @@ _AUDIT_WAIVERS = {
 }
 
 
-def test_kmeans_seed_selection_has_no_single_partition_sort(spark, sf_dir):
+def test_kmeans_seed_selection_has_no_single_partition_sort(spark, sf_dir, monkeypatch):
     """The k-means trainer's seed draw must plan as
     TakeOrderedAndProject (per-partition top-K + driver merge), not
     the r6 global-window row_number — an Exchange SinglePartition of
-    the whole training sample (VERDICT r6 item 3).  Audited here on
-    the trainer's REAL seed frame so the shape can't regress."""
-    from pandas_redshift_spark.operators.similarity import (
-        KMEANS_SAMPLE_MOD,
-        _emb_double,
-        _seed_frame,
-    )
+    the whole training sample (VERDICT r6 item 3).  Audited on the
+    seed frames the trainer really draws, for both its flat and its
+    product-quantization call, so the shape can't regress."""
+    import pandas_redshift_spark.operators.similarity as sim
     from pandas_redshift_spark.plans.audit import audit_plan
     from pandas_redshift_spark.session import Tables
 
-    samp = (
-        _emb_double(Tables(spark, sf_dir))
-        .select("vec_id", "emb_n")
-        .filter(F.col("vec_id") % KMEANS_SAMPLE_MOD == 0)
-    )
-    seeds = _seed_frame(samp, 16)
-    assert not [f for f in audit_plan(seeds) if f.rule == "single_part"]
-    plan = seeds._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
-    )
-    assert "TakeOrderedAndProject" in plan, plan
+    drawn = []
+    real = sim._seed_frame
+
+    def spy(samp, k_cells):
+        drawn.append(real(samp, k_cells))
+        return drawn[-1]
+
+    monkeypatch.setattr(sim, "_seed_frame", spy)
+    emb = sim._emb_double(Tables(spark, sf_dir)).select("vec_id", "emb_n")
+    key = ("seed_plan_audit", sf_dir)
+    sim.train_kmeans_centroid_values(spark, emb, 16, key, iters=1)
+    sim.train_pq_books(spark, emb, sim.PQ_M, sim.PQ_SUB, sim.PQ_CODES, key, iters=1)
+    assert len(drawn) == 2
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
+    for seeds in drawn:
+        assert not [f for f in audit_plan(seeds) if f.rule == "single_part"]
+        plan = seeds._jdf.queryExecution().explainString(mode)
+        assert "TakeOrderedAndProject" in plan, plan
 
 
 def test_every_registered_plan_passes_audit(spark, sf_dir):

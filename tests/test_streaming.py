@@ -90,64 +90,27 @@ def test_stream_dedup_bounded(spark, sf_dir, events_stream):
     assert n > 0
 
 
-def test_stream_static_enrichment_matches_batch(spark, sf_dir, events_stream):
-    """Stream-static broadcast enrichment must produce exactly the
-    batch join's per-band aggregate once the stream drains."""
-    from pandas_redshift_spark.streaming.windows import (
-        enrich_stream_with_profile,
-        user_profile,
-    )
-    from pandas_redshift_spark.session import Tables, configure_session
-
-    configure_session(spark)
-    batch = Tables(spark, sf_dir).events
-    profile = user_profile(batch)
-    expected = {
-        r.band: (r.n_events, r.avg_value)
-        for r in enrich_stream_with_profile(batch, profile).collect()
-    }
-
-    enriched = drain(enrich_stream_with_profile(events_stream, profile), "complete")
-    got = {r.band: (r.n_events, r.avg_value) for r in enriched.collect()}
-    assert got == expected
-    assert sum(v[0] for v in got.values()) == batch.count()
-
-
 def test_stream_stream_interval_join_matches_batch(spark, sf_dir, events_stream):
     """The watermarked stream-stream interval join, fully drained, must
-    produce exactly the batch join's pairs."""
+    produce exactly the batch join's pairs.  Both sides are
+    ``attribution_join`` — the plan streaming_attribution_join drains
+    and events_attribution_join runs in batch — at the batch operator's
+    30-minute horizon."""
     from pandas_redshift_spark.session import Tables, configure_session
-    from pandas_redshift_spark.streaming.windows import click_purchase_interval_join
+    from pandas_redshift_spark.streaming.windows import attribution_join
 
     configure_session(spark)
     batch = Tables(spark, sf_dir).events
     want = {
         (r.user_id, r.click_id, r.purchase_id)
-        for r in click_purchase_interval_join(batch).collect()
+        for r in attribution_join(batch, "30 minutes").collect()
     }
     assert want, "batch twin produced no attribution pairs"
     got = {
         (r.user_id, r.click_id, r.purchase_id)
-        for r in drain(click_purchase_interval_join(events_stream), "append").collect()
+        for r in drain(attribution_join(events_stream, "30 minutes"), "append").collect()
     }
     assert got == want
-
-
-def test_foreach_batch_idempotent_sink(spark, sf_dir, events_stream, tmp_path):
-    """foreachBatch epoch-keyed sink: after draining, the parquet
-    output holds every input row exactly once."""
-    from pandas_redshift_spark.streaming.windows import (
-        write_foreach_batch_idempotent,
-    )
-
-    out = str(tmp_path / "fb_sink")
-    write_foreach_batch_idempotent(
-        events_stream.select("event_id", "user_id", "event_type", "value"), out
-    )
-    written = spark.read.parquet(out)
-    n_in = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    assert written.count() == n_in
-    assert written.select("event_id").distinct().count() == n_in
 
 
 def _tws_available() -> bool:
