@@ -130,26 +130,26 @@ def shingle_cte_sql(alias: str = "shingle_set") -> str:
 
 
 def shingle_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The (doc_id, shingle_set) frame, persisted ONCE per
-    (session, sf_dir) and shared by every shingle-based operator
-    (jaccard, dfcut, containment, decontaminate).
+    """The (doc_id, shingle_set) frame, built ONCE per (session,
+    sf_dir) as a checkpoint (``memoized_persist``) and shared by every
+    shingle-based operator (jaccard, dfcut, containment,
+    decontaminate).
 
     Two reasons this is a memoized singleton rather than a per-query
-    ``.persist()``:
+    materialization:
 
-    - the cache boundary must sit BEFORE the explode so
+    - the materialization boundary must sit BEFORE the explode so
       InferFiltersFromGenerate's inferred ``size(arr) > 0`` filter
       cannot drag the whole shingle-building expression below the
       repartition exchange into the scan stage (PLANS.md "Optimizer
-      trap", measured 10-25x);
-    - re-persisting an identical plan on every invocation leaves plan
-      shape dependent on invocation history ("Asked to cache already
-      cached data" — the earlier instance's cache entry claims the
-      plan) and pins one cache entry per call site.  Reusing ONE
-      DataFrame object makes repeated invocations plan-stable and the
-      shingle pass genuinely run-once per session, which is also the
-      100 TB shape: shingling is the expensive linear scan, every
-      downstream dedup variant should share it.
+      trap", measured 10-25x).  The build's own plan has no explode,
+      and the consumers explode a checkpoint that has no scan;
+    - one frame per session makes the shingle pass run once per
+      session and keeps repeated invocations plan-stable, which is
+      also the 100 TB shape: shingling is the expensive linear scan,
+      every downstream dedup variant should share it.  A warm call
+      plans over the checkpoint's one ``LogicalRDD`` leaf, never over
+      the shingling lineage.
 
     Keyed on applicationId (via ``memoized_persist``) so a fresh
     SparkContext never sees a stale frame and stopped-session entries
@@ -189,7 +189,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     selectivity is what keeps this linear-ish; at 100 TB you'd cap
     posting-list length (drop ultra-common shingles) — the standard
     "document frequency cut" — before the self-join."""
-    # shared persisted shingle frame — the pre-explode cache boundary
+    # shared checkpointed shingle frame — the pre-explode boundary
     # (see shingle_frame) stops the InferFiltersFromGenerate pushdown
     # trap AND lets every shingle-based operator reuse one shingle pass
     sh = shingle_frame(spark, sf_dir)
@@ -399,7 +399,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # both self-join sides reuse the signature pipeline; memoized so
-    # repeated calls share ONE cached bucket frame (no per-call pile-up)
+    # repeated calls share ONE checkpointed bucket frame
     buckets = memoized_persist(spark, ("lsh_buckets", sf_dir, n_hashes), build_buckets)
     a = buckets.alias("a")
     b = buckets.alias("b")
@@ -752,7 +752,7 @@ def dedup_ngram_jaccard_dfcut(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # both self-join sides reuse the cut postings; memoized (see
-    # memoized_persist) so repeat calls don't stack cache entries
+    # memoized_persist) so repeat calls don't rebuild them
     sized = memoized_persist(spark, ("dfcut_sized", sf_dir), build_sized)
     a = sized.alias("a")
     b = sized.alias("b")
@@ -1008,10 +1008,10 @@ def dedup_chunk_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     the chunk text, so shuffle width is independent of chunk length.
     The expensive part at 100 TB is tokenize+digest over all text, so
     that pass runs ONCE: the reduced (chunk_h, doc_id, n_inst) frame is
-    persisted (memoized, shingle_frame pattern) and both consumers —
+    checkpointed (memoized, shingle_frame pattern) and both consumers —
     the HAVING-filtered duplicated-chunk set and the per-doc rollup it
     joins back to (inverted-index shape, no self-join) — read the
-    cached digests instead of re-scanning the corpus.  Hot boilerplate
+    stored digests instead of re-scanning the corpus.  Hot boilerplate
     chunks are bounded by the reduction to distinct (chunk, doc) pairs
     before any join; AQE skew-join covers the rest."""
 

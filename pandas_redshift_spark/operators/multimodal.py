@@ -638,10 +638,12 @@ def make_phash_extractor():
 def _phash_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (doc_id, ahash) frame behind both phash operators —
     synthesize real BMPs for the image docs, parse + hash them once,
-    and persist (memoized_persist, shingle_frame pattern): the
-    expensive part at scale is the decode+hash pass over all media
-    bytes, and the near-dup operator reads the frame three times
-    (banding + two hash joins back onto narrow candidate ids)."""
+    and checkpoint the hashes (memoized_persist, shingle_frame
+    pattern): the expensive part at scale is the decode+hash pass over
+    all media bytes, and the near-dup operator reads the frame three
+    times (banding + two hash joins back onto narrow candidate ids).
+    Both ``mapInPandas`` passes run inside this build only; the
+    consumers' plans read the checkpoint and hold no Python node."""
     def build() -> DataFrame:
         d = Tables(spark, sf_dir).documents
         payloads = (

@@ -161,7 +161,7 @@ def pipe_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership probe is a BROADCAST join against the exploded training
     shingles — the corpus-side data never shuffles, which is what
     makes contamination checks affordable at 100 TB."""
-    # shared persisted shingle frame — pre-explode cache boundary stops
+    # shared checkpointed shingle frame — the pre-explode boundary stops
     # the InferFiltersFromGenerate pushdown trap (see dedup.shingle_frame)
     sh = shingle_frame(spark, sf_dir)
     bench = (

@@ -2417,8 +2417,8 @@ def dedup_semantic_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf1 scale sample measured the fixed-16 version at 19x on a 10x
     data step — the quadratic sum(|cell|^2) blowup this formula
     removes; both engines compute K from the same count).  The
-    assignment frame is memoized-persisted because the self-join
-    consumes it twice."""
+    assignment frame is memoized (``memoized_persist``) because the
+    self-join consumes it twice."""
     t = Tables(spark, sf_dir)
     tau = 0.3
 
@@ -2460,7 +2460,7 @@ def dedup_semantic_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the threshold is part of the memo key: the assignment PATH
     # (literal vs broadcast) is a function of it, and the equivalence
     # test flips it mid-session — a keyless memo would replay the
-    # other path's persisted frame
+    # other path's checkpointed frame
     assigned = memoized_persist(
         spark,
         (

@@ -1017,14 +1017,14 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale design: the model is vocabulary-sized, orders of magnitude
     smaller than the token stream, so it BROADCASTS onto the stream
     (the stream itself is never shuffled by term — the one shape that
-    survives a 100 TB corpus); the per-doc frame is memoized-persisted
+    survives a 100 TB corpus); the per-doc frame is memoized
     because both the tail cutoff and the final projection consume it,
     and the cutoff joins back as a broadcast 1-row aggregate.  Token
     scan -> per-term partial counts is the only big shuffle."""
     d = ensure_parallelism(Tables(spark, sf_dir).documents)
     tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
     # the model is consumed twice (totals fold + stream broadcast);
-    # memoized-persisting the vocab-sized frame keeps corpus passes at
+    # memoizing the vocab-sized frame keeps corpus passes at
     # two (model build, scoring scan) instead of three
     model = memoized_persist(
         spark,

@@ -84,13 +84,18 @@ def configure_session(spark: SparkSession) -> SparkSession:
     # Let AQE re-plan the output partitioning of CACHED plans (off by
     # default): without it a persisted frame materializes at the
     # static spark.sql.shuffle.partitions (200 on a vanilla session),
-    # and every consumer of a small memoized frame (baskets, LSH
-    # buckets, shingles) then runs hundreds of near-empty tasks —
-    # measured 22x on the market-basket query (31.5s -> 1.4s at
-    # sf0.01).  Explicit repartition(n) calls (ensure_parallelism)
-    # keep their user-specified counts — AQE only coalesces
-    # ENSURE_REQUIREMENTS exchanges — so CPU-parallelism floors for
-    # cheap-bytes/expensive-row stages are unaffected.
+    # and its consumers run hundreds of near-empty tasks.  Memoized
+    # frames are checkpoints now (memoized_persist) and keep their
+    # AQE-sized partitions either way; what still needs the conf is
+    # the persisted edge frame of dedup.propagate_components, read by
+    # every hop of the label loop: dedup_cluster_components warm at
+    # sf0.01 measured 1.1-1.6 s with it and 2.0-3.0 s without (1.8-2.2
+    # against 5.0-6.5 s at 200 shuffle partitions), while
+    # agg_market_basket no longer moves.  Explicit repartition(n)
+    # calls (ensure_parallelism) keep their user-specified counts —
+    # AQE only coalesces ENSURE_REQUIREMENTS exchanges — so
+    # CPU-parallelism floors for cheap-bytes/expensive-row stages are
+    # unaffected.
     spark.conf.set(
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
     )
@@ -175,15 +180,38 @@ def memo(spark: SparkSession, family: str, key: tuple, build: Callable[[], _T]) 
     return value
 
 
+def checkpoint_build(frame: DataFrame) -> DataFrame:
+    """Run ``frame`` now and return it as one ``LogicalRDD`` leaf over
+    its locally checkpointed blocks.  The build of every
+    :func:`memoized_persist` frame passes through here, so the plan
+    audit (tests/test_plans.py) can see each build's own plan before
+    the checkpoint cuts it off from its consumers."""
+    return frame.localCheckpoint(eager=True)
+
+
 def memoized_persist(spark: SparkSession, cache_key: tuple, build) -> DataFrame:
-    """The one persisted DataFrame for ``cache_key`` in the live
-    session.  Operators that ``.persist()`` an intermediate consumed
-    lazily by the returned plan cannot unpersist before the caller
-    executes, so a bare per-call persist piles up MEMORY_AND_DISK
-    blocks across repeated invocations; routing through the memo
-    persists each such frame once per session and keeps repeat calls
-    plan-stable."""
-    return memo(spark, "persist", cache_key, lambda: build().persist())
+    """The one materialized DataFrame for ``cache_key`` in the live
+    session: ``build()`` runs once, during the first call, and is
+    stored as an eager local checkpoint (:func:`checkpoint_build`).
+
+    Consumers then plan over a single ``LogicalRDD`` leaf, so a warm
+    call analyzes, optimizes and AQE-plans only its own operators, not
+    the whole build lineage again (for ``dedup_minhash_lsh`` that
+    lineage is md5 shingle hashes, 32 ``zip_with`` re-mixes and 8 band
+    folds).  A persisted frame kept that lineage in every consumer's
+    plan under an ``InMemoryRelation`` and only skipped its execution.
+
+    What is stored, its key and its session scope are what the
+    earlier ``.persist()`` held: an intermediate that the returned
+    plan reads lazily, built once per session instead of one cached
+    copy per call.  The name and the ``persist`` memo family stay
+    because perfbench reads ``session.memo_hits.persist`` and names
+    this function.
+
+    Trade-off: checkpoint blocks have no lineage to recompute from.
+    If the executor holding them is lost, every later call in that
+    session that reads the frame fails; a new session rebuilds it."""
+    return memo(spark, "persist", cache_key, lambda: checkpoint_build(build()))
 
 
 def scratch_root(spark: SparkSession) -> str:

@@ -34,6 +34,21 @@ def drop_memo(*families: str) -> None:
         del session._MEMO[key]
 
 
+def on_memo_build(monkeypatch, inspect) -> None:
+    """Call ``inspect(frame)`` on the frame of every memoized build
+    before ``session.checkpoint_build`` runs it: consumers' plans only
+    show the checkpoint, so this is where a test sees a build's plan."""
+    from pandas_redshift_spark import session
+
+    real = session.checkpoint_build
+
+    def spy(frame):
+        inspect(frame)
+        return real(frame)
+
+    monkeypatch.setattr(session, "checkpoint_build", spy)
+
+
 def confs_while_draining(spark, sf_dir, monkeypatch, width: int) -> dict:
     """Every conf the query of a width-``width`` ``drain`` of the
     tumbling-window plan ran with, read from the session of its

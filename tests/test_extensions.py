@@ -668,10 +668,11 @@ def test_results_invariant_under_partition_count(spark, sf_dir):
 
     def fresh():
         # memoized frames (shingles, unigram model/per-doc, LSH
-        # buckets) persist across calls keyed only on (appId, sf_dir):
-        # without clearing, the second partition-count run would read
-        # the FIRST run's materialized frames and the comparison is
-        # vacuous for any memoized query
+        # buckets) are checkpointed once per (appId, sf_dir): without
+        # dropping them, the second partition-count run would read the
+        # FIRST run's checkpoints and the comparison is vacuous for
+        # any memoized query; plan memos hold plans over those
+        # checkpoints
         from tests.conftest import drop_memo
 
         drop_memo("persist", "frame")

@@ -6,6 +6,7 @@ Python evaluation."""
 from __future__ import annotations
 
 import re
+import uuid
 
 import pyspark.sql.functions as F
 
@@ -88,34 +89,75 @@ def test_bucketed_similarity_defaults_have_no_all_pairs_join(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" in _plan(spark, "sim_pairs_threshold_exact", sf_dir)
 
 
-def test_shingle_transform_never_reaches_a_scan(spark, sf_dir):
+def test_shingle_transform_never_reaches_a_scan(spark, sf_dir, monkeypatch):
     """Regression guard for the InferFiltersFromGenerate trap
     (PLANS.md): the shingle-building expression must not be dragged
     into any FileScan's data filters — that would run the whole
     transform (twice) in the single-task pre-shuffle scan stage.  The
-    persisted shingle ARRAYS (pre-explode — a post-explode persist
-    leaves the trap alive inside the cached plan's own build) keep the
-    scan stages expression-free.
+    memoized shingle ARRAYS (pre-explode — a post-explode build leaves
+    the trap alive inside the build's own plan) keep the scan stages
+    expression-free.
 
-    Checked twice: on a cold cache AND after materialization, because
-    the explain of a materialized InMemoryRelation renders the
-    cache-BUILD plan — which is the plan production sessions actually
-    executed (the round-1 order-dependent failure was exactly this:
-    clean cold plan, trap visible warm)."""
+    The consumers read the shingles from a checkpoint, so their plans
+    hold no scan of ``documents``; the scan lives only in the plans of
+    the memoized builds, which the spy on ``session.checkpoint_build``
+    captures before they run.  The round-1 order-dependent failure
+    was exactly a build plan the consumer's cold explain did not
+    show."""
+    from tests.conftest import drop_memo, on_memo_build
 
-    def assert_clean(name, plan):
-        for line in plan.splitlines():
-            if "FileScan" in line:
-                assert "array_distinct" not in line, (name, line[:300])
-                assert "transform(" not in line, (name, line[:300])
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
 
+    def explain(df):
+        return df._jdf.queryExecution().explainString(mode)
+
+    builds = []
+    on_memo_build(monkeypatch, lambda frame: builds.append(explain(frame)))
     for name in ("pipe_decontaminate", "dedup_ngram_jaccard", "dedup_ngram_jaccard_dfcut"):
-        df = all_queries()[name].fn(spark, sf_dir)
-        jvm = spark._jvm
-        mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
-        assert_clean(name, df._jdf.queryExecution().explainString(mode))
-        df.count()  # materialize the persisted shingle cache
-        assert_clean(name, _plan(spark, name, sf_dir))
+        # pipe_decontaminate's plan memo would skip its builds
+        drop_memo("persist", "frame")
+        builds.clear()
+        consumer = explain(all_queries()[name].fn(spark, sf_dir))
+        scanned_documents = False
+        for plan in (consumer, *builds):
+            for line in plan.splitlines():
+                if "FileScan" in line:
+                    scanned_documents |= "documents" in line
+                    assert "array_distinct" not in line, (name, line[:300])
+                    assert "transform(" not in line, (name, line[:300])
+        assert scanned_documents, name
+
+
+def _jobs_of(spark, action):
+    """``(action(), number of Spark jobs it started)``, counted by job
+    group through the status tracker."""
+    sc = spark.sparkContext
+    group = f"jobs-of-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = action()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_minhash_call_plans_over_the_checkpoint(spark, sf_dir):
+    """A warm ``dedup_minhash_lsh`` call starts no job while building
+    its plan, plans over the checkpointed bucket frame (one
+    ``LogicalRDD`` leaf, none of the md5 / ``zip_with`` signature
+    lineage) and collects in 3 jobs."""
+    fn = all_queries()["dedup_minhash_lsh"].fn
+    fn(spark, sf_dir).collect()  # builds the memoized buckets
+    df, build_jobs = _jobs_of(spark, lambda: fn(spark, sf_dir))
+    assert build_jobs == 0
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("extended")
+    plan = df._jdf.queryExecution().explainString(mode)
+    assert "LogicalRDD" in plan, plan
+    assert "zip_with" not in plan and "md5" not in plan, plan
+    _, collect_jobs = _jobs_of(spark, df.collect)
+    assert collect_jobs == 3
 
 
 def test_runtime_bloom_filter_injects_on_selective_shuffle_join(spark, sf_dir):
@@ -352,24 +394,34 @@ def test_kmeans_seed_selection_has_no_single_partition_sort(spark, sf_dir, monke
         assert "TakeOrderedAndProject" in plan, plan
 
 
-def test_every_registered_plan_passes_audit(spark, sf_dir):
+def test_every_registered_plan_passes_audit(spark, sf_dir, monkeypatch):
+    """Every operator's plan, and the plan of every memoized build it
+    makes, passes the audit or is waived.  A memoized frame is a
+    checkpoint, so the consumer's plan no longer shows its build: the
+    spy on ``session.checkpoint_build`` audits each build before it is
+    checkpointed and counts its findings against the operator that
+    made it.  The persist memo is dropped before every operator, so
+    each consumer builds its frames itself: both phash operators'
+    ``mapInPandas`` lives only in ``_phash_frame``'s build."""
     from pandas_redshift_spark.operators import all_queries
     from pandas_redshift_spark.plans.audit import audit_plan
-    from tests.conftest import drop_memo
+    from tests.conftest import drop_memo, on_memo_build
 
-    # Audit COLD plans: a memoized frame already materialized by an
-    # earlier test shows AQE-finalized cached partitioning (with
-    # canChangeCachedPlanOutputPartitioning=true), which hides/changes
-    # exchanges and makes findings depend on test order.  Dropping the
-    # memo + cache gives every query the same unmaterialized plan no
-    # matter what ran before (consumers rebuild the memo lazily).
-    drop_memo("persist", "frame")
+    build_findings = []
+    on_memo_build(monkeypatch, lambda frame: build_findings.extend(audit_plan(frame)))
+    # a plan memo from an earlier test's call would return its plan
+    # without running the builds under it; and a frame an earlier test
+    # cached would render under InMemoryRelation in a matching plan
+    drop_memo("frame")
     spark.catalog.clearCache()
 
     unwaived, fired = [], set()
     for name, spec in sorted(all_queries().items()):
         waivers = _AUDIT_WAIVERS.get(name, {})
-        for f in audit_plan(spec.fn(spark, sf_dir)):
+        drop_memo("persist")
+        build_findings.clear()
+        df = spec.fn(spark, sf_dir)
+        for f in audit_plan(df) + build_findings:
             if f.rule in waivers:
                 fired.add((name, f.rule))
             else:
