@@ -195,7 +195,6 @@ def create_redshift_table(
     else:
         pdf = data_frame
     names = _validate_names(pdf.columns)
-    types = column_data_types or get_column_data_types(pdf)
     b.exec_sql(build_drop_table_ddl(redshift_table_name))
     if b.jdbc_options:
         # remote warehouse parses the Redshift layout clauses verbatim
@@ -203,7 +202,7 @@ def create_redshift_table(
             build_create_table_ddl(
                 redshift_table_name,
                 names,
-                types,
+                column_data_types or get_column_data_types(pdf),
                 diststyle=diststyle,
                 distkey=distkey,
                 sort_interleaved=sort_interleaved,
@@ -214,10 +213,8 @@ def create_redshift_table(
         # local catalog: Spark SQL doesn't parse diststyle/sortkey —
         # create the empty table from the frame's schema; layout hints
         # apply at write time (plans/layout.apply_layout)
-        empty = ingest(b.spark, pdf).limit(0)
-        apply_validated_names(empty).write.mode("overwrite").saveAsTable(
-            redshift_table_name
-        )
+        empty = ingest(b.spark, pdf).limit(0).toDF(*names)
+        empty.write.mode("overwrite").saveAsTable(redshift_table_name)
 
 
 def s3_to_redshift(

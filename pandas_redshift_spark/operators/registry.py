@@ -55,9 +55,9 @@ class QuerySpec:
     #: r15: True routes repeat invocations through the session memo
     #: (``session.memo``, family ``frame``): the BUILT logical plan
     #: (an immutable, unexecuted DataFrame) is shared per (session,
-    #: sf_dir), the same object class the ``table`` and ``pq_exprs``
-    #: families already share.  Nothing executed is cached; every run
-    #: still computes from the parquet inputs.  Set only on queries
+    #: sf_dir), the same object class the ``table`` family already
+    #: shares.  Nothing executed is cached; every run still computes
+    #: from the parquet inputs.  Set only on queries
     #: whose MEASURED per-invocation Python build cost is >= ~0.1 s
     #: (py4j round-trips re-assembling the identical expression trees;
     #: table in OPTIMIZATION_r15.md), and never on operators whose
@@ -95,9 +95,8 @@ def query(
             from pandas_redshift_spark.session import memo
 
             def run(spark: SparkSession, sf_dir: str) -> DataFrame:  # noqa: F811
-                # e.g. sim_pq_adc_topk spends ~0.55 s per call in ~1200
-                # py4j round-trips re-assembling the same codebook-literal
-                # expression trees (measured r15, warm memos)
+                # e.g. sim_pq_adc_topk spends about 0.5 s in py4j
+                # round trips assembling its argmax and LUT fold trees
                 return memo(
                     spark, "frame", ("plan", name, sf_dir), lambda: fn(spark, sf_dir)
                 )

@@ -34,6 +34,23 @@ from pandas_redshift_spark.stats import table_rows
 EMBEDDING_DIMS = 64
 
 
+def _double_array(values: list) -> Column:
+    """``array<double>`` literal of ``values`` (``array<array<double>>``
+    for a list of lists), built as ONE ``F.expr`` of SQL text.
+    ``F.lit(list)`` is ``array(*[lit(x) for x in list])`` in PySpark
+    4.1: one py4j round trip per element, ~0.5 s for a 16 x 64
+    codebook.  Each value is written as ``repr(float(x)) + "D"``, which
+    parses back to the same double bit for bit (subnormals and -0.0
+    included); values must be finite."""
+
+    def sql(v) -> str:
+        if isinstance(v, (list, tuple)):
+            return "array(" + ", ".join(sql(x) for x in v) + ")"
+        return repr(float(v)) + "D"
+
+    return F.expr(sql(values))
+
+
 def dot(x: Column, y: Column) -> Column:
     """Dot product of two array<double> columns using only JVM
     built-ins (zip_with product + aggregate sum) — stays JVM-side, no
@@ -377,11 +394,8 @@ def hyperplane_buckets(
         # from the RAW vector on purpose: sign(<v,h>) == sign(<v/|v|,h>)
         # mathematically, but the normalized fold could flip an
         # ulp-scale near-zero projection, so both engines pin the raw
-        # form and stay bit-identical.  ONE F.lit per plane: the
-        # per-element form is ~1 ms of py4j round-trip per float
-        # (see _cand_struct / _pq_exprs), which at 4w planes x 64
-        # dims was over a second of pure driver time per call.
-        h_p = F.lit([float(v) for v in planes[p]])
+        # form and stay bit-identical.
+        h_p = _double_array(planes[p])
         return F.when(dot(F.col("emb"), h_p) > 0, F.lit(1)).otherwise(F.lit(0))
 
     # passthrough: callers choose which vector columns ride along with
@@ -640,7 +654,10 @@ KMEANS_SAMPLE_MOD = 4
 #: plan size.  128: the r8 sf1 A/B measured the crossover below K=160
 #: (literal 4.00 s vs broadcast 2.11 s at sf1, BENCH_scale_r08.md) —
 #: codegen/plan cost of the literal tree overtakes the two broadcast
-#: exchanges well before the 1024 guess.
+#: exchanges well before the 1024 guess.  Those literal timings
+#: included building every centroid element as its own py4j ``lit``
+#: call, which :func:`_double_array` no longer pays, so the crossover
+#: is due a re-measurement at the sf1 scale sample.
 CODEBOOK_LITERAL_MAX_K = 128
 
 #: Hard ceiling for the DRIVER-side super-centroid trainer
@@ -1075,14 +1092,11 @@ def super_centroids(
 
 
 def _cand_struct(cand_id: int, vec: list) -> Column:
-    """``struct<id: long, cen: array<double>>`` literal candidate.
-    ``F.lit(list)`` builds the whole array literal in ONE py4j call —
-    per-element ``F.lit`` floats measured ~1 ms of driver round-trip
-    EACH, which at the sf1 scale sample's K=160 x 64 dims is ~10 s of
-    pure expression construction."""
+    """``struct<id: long, cen: array<double>>`` literal candidate; the
+    centroid is one :func:`_double_array`."""
     return F.struct(
         F.lit(int(cand_id)).cast("long").alias("id"),
-        F.lit([float(x) for x in vec]).alias("cen"),
+        _double_array(vec).alias("cen"),
     )
 
 
@@ -1673,58 +1687,52 @@ def _pq_lut(cen_lits: list, sub, m: int) -> Column:
     return F.transform(cen_lits[m], lambda cen: dot(sub(F.col("emb_n"), m), cen))
 
 
-def _pq_exprs(spark: SparkSession, books: list, memo_key: tuple) -> tuple:
-    """Build (or fetch) the corpus ``codes`` array column and the
-    per-query ``luts`` array column for the given trained books
-    (memoized per ``memo_key``, family ``pq_exprs``)."""
+def _pq_exprs(books: list) -> tuple:
+    """The corpus ``__subs__`` and ``codes`` array columns and the
+    per-query ``luts`` array column for the given trained books."""
 
-    def build() -> tuple:
-        def sub(col: Column, m: int) -> Column:
-            return F.slice(col, m * PQ_SUB + 1, PQ_SUB)
+    def sub(col: Column, m: int) -> Column:
+        return F.slice(col, m * PQ_SUB + 1, PQ_SUB)
 
-        # RANK-COMPRESS cell ids to 1-based POSITIONS (id-ascending, so
-        # position order == cell-id order and every tie-break stays
-        # aligned with the oracle's ORDER BY ..., cell).  Positions buy
-        # the one-py4j-call literal form: each sub-codebook ships as a
-        # single nested-array F.lit — the per-struct literal form burned
-        # ~8 s PER CALL of driver py4j round-trips (measured r8).
-        cen_lits = [
-            F.lit([[float(v) for v in cen] for _, cen in sorted(books[m])])
+    # RANK-COMPRESS cell ids to 1-based POSITIONS (id-ascending, so
+    # position order == cell-id order and every tie-break stays
+    # aligned with the oracle's ORDER BY ..., cell).  Positions let
+    # each sub-codebook ship as one nested-array literal with no id
+    # field (:func:`_double_array`).
+    cen_lits = [
+        _double_array([cen for _, cen in sorted(books[m])]) for m in range(PQ_M)
+    ]
+
+    def cands(m: int) -> Column:
+        # arrays_zip names struct fields from the input aliases, so
+        # the argmax_dot fold sees the same (id, cen) shape as the
+        # per-struct literal form
+        return F.arrays_zip(
+            F.sequence(F.lit(1), F.lit(PQ_CODES)).cast("array<bigint>").alias("id"),
+            cen_lits[m].alias("cen"),
+        )
+
+    # corpus encode reads PRE-SLICED subvectors (``subs_col`` below,
+    # materialized in its own projection by the caller): with
+    # ``slice(emb_n, ...)`` as the fold's query vector, the
+    # interpreted per-candidate lambda re-allocates the 8-double slice
+    # for every one of the 32 candidates x 8 subspaces = 2048 array
+    # copies per row (r14); ``element_at`` on a materialized
+    # array<array<double>> attribute is a reference read.  Same dot
+    # folds over the same doubles — arithmetic unchanged.
+    subs_col = F.array(*[sub(F.col("emb_n"), m) for m in range(PQ_M)]).alias(
+        "__subs__"
+    )
+    codes_col = F.array(
+        *[
+            argmax_dot(F.element_at(F.col("__subs__"), m + 1), cands(m))
             for m in range(PQ_M)
         ]
-
-        def cands(m: int) -> Column:
-            # arrays_zip names struct fields from the input aliases, so
-            # the argmax_dot fold sees the same (id, cen) shape as the
-            # per-struct literal form
-            return F.arrays_zip(
-                F.sequence(F.lit(1), F.lit(PQ_CODES)).cast("array<bigint>").alias("id"),
-                cen_lits[m].alias("cen"),
-            )
-
-        # corpus encode reads PRE-SLICED subvectors (``subs_col`` below,
-        # materialized in its own projection by the caller): with
-        # ``slice(emb_n, ...)`` as the fold's query vector, the
-        # interpreted per-candidate lambda re-allocates the 8-double slice
-        # for every one of the 32 candidates x 8 subspaces = 2048 array
-        # copies per row (r14); ``element_at`` on a materialized
-        # array<array<double>> attribute is a reference read.  Same dot
-        # folds over the same doubles — arithmetic unchanged.
-        subs_col = F.array(*[sub(F.col("emb_n"), m) for m in range(PQ_M)]).alias(
-            "__subs__"
-        )
-        codes_col = F.array(
-            *[
-                argmax_dot(F.element_at(F.col("__subs__"), m + 1), cands(m))
-                for m in range(PQ_M)
-            ]
-        ).alias("codes")
-        luts_col = F.array(*[_pq_lut(cen_lits, sub, m) for m in range(PQ_M)]).alias(
-            "luts"
-        )
-        return subs_col, codes_col, luts_col
-
-    return memo(spark, "pq_exprs", memo_key, build)
+    ).alias("codes")
+    luts_col = F.array(*[_pq_lut(cen_lits, sub, m) for m in range(PQ_M)]).alias(
+        "luts"
+    )
+    return subs_col, codes_col, luts_col
 
 
 @query("sim_pq_adc_topk", oracle=_pq_adc_oracle(), memo_plan=True)
@@ -1769,12 +1777,13 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact re-rank touches 64xQ rows.  The unit test pins recall
     vs sim_bruteforce_topk; the oracle pins every float.
 
-    The BUILT plan is session-memoized (``memo_plan=True``, r15):
-    re-assembling the codebook-literal expression trees into the same
-    immutable logical plan cost ~0.55 s of py4j round-trips per
-    invocation on top of the r8 expression memo — ~40% of the query's
-    warm bench time.  Nothing executed is cached: every run still
-    computes from the parquet inputs."""
+    The BUILT plan is session-memoized (``memo_plan=True``):
+    assembling the PQ expression trees (:func:`_pq_exprs`: the eight
+    literal sub-codebooks and their argmax and LUT folds) costs about
+    0.5 s of py4j round trips, so only a session's first call pays
+    it; later calls reuse the immutable logical plan.  Nothing
+    executed is cached: every run still computes from the parquet
+    inputs."""
     t = Tables(spark, sf_dir)
     emb = _emb_double(t).select("vec_id", "emb_n")
     # corpus-scaled re-rank pool, sized from the memoized raw-table
@@ -1793,16 +1802,7 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     books = train_pq_books(
         spark, emb, PQ_M, PQ_SUB, PQ_CODES, cache_key=(sf_dir,)
     )
-    # memoized expression trees: the PQ trees are pure functions of
-    # the trained books, and BUILDING them is the warm-path bottleneck
-    # — the 8 nested-array F.lit py4j conversions alone measured 1.4 s
-    # and the argmax fold trees another 0.6 s per call at sf0.1 (vs
-    # ~1.3 s of actual cluster work).  Columns are immutable
-    # unresolved expressions, so reuse across calls in one session is
-    # safe.
-    subs_col, codes_col, luts_col = _pq_exprs(
-        spark, books, (sf_dir, PQ_M, PQ_SUB, PQ_CODES)
-    )
+    subs_col, codes_col, luts_col = _pq_exprs(books)
 
     # corpus -> 8 code positions: pre-slice the subvectors in their
     # own projection (multi-referenced, so they materialize once per

@@ -169,6 +169,9 @@ def ddl_create_insert_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     t.register_views()
     path = _stage_dir(spark, "ddl_create_insert")
+    # an existing LOCATION: a missing one makes Spark log a
+    # FileNotFoundException stack trace on every call
+    os.makedirs(path)
     spark.sql("DROP TABLE IF EXISTS prs_region_stats")
     spark.sql(
         f"CREATE TABLE prs_region_stats (r_name STRING, n_nations BIGINT) "

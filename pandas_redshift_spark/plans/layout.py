@@ -193,10 +193,3 @@ def apply_layout(
             out = out.sortWithinPartitions(*keys)
     return out
 
-
-def explain_str(df: DataFrame, mode: str = "formatted") -> str:
-    """Capture .explain output as a string (plan-inspection helper for
-    tests and tuning)."""
-    return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-        df._jdf.queryExecution(), mode
-    )

@@ -42,8 +42,8 @@ from pandas_redshift_spark.plans.layout import (
 from pandas_redshift_spark.session import scoped_confs, scratch_root
 from pandas_redshift_spark.sources.schema import (
     apply_validated_names,
-    build_create_table_ddl,
     get_column_data_types,
+    layout_clause,
     validate_column_names,
 )
 
@@ -273,10 +273,13 @@ class SparkRedshiftBridge:
         verbose: bool = True,
         **kwargs: Any,
     ) -> None:
-        """Load pipeline: validate names -> (infer types) -> one
-        distributed write, in place of the reference's 4-step staged
-        load (CSV -> S3 put_object -> DROP/CREATE -> COPY,
-        core.py:289-304).
+        """Load pipeline: validate names -> one distributed write (a
+        JDBC load also infers its column types), in place of the
+        reference's 4-step staged load (CSV -> S3 put_object ->
+        DROP/CREATE -> COPY, core.py:289-304).  Names are validated
+        once, before anything is written: a pandas frame is renamed
+        before the ingest, so names that collide after normalization
+        raise while the old table is still in place.
 
         A pandas frame is ingested by :func:`ingest`: Arrow batches of
         ``arrowMaxRecordsPerBatch`` rows decoded by tasks, at most
@@ -300,20 +303,21 @@ class SparkRedshiftBridge:
         if isinstance(data_frame, pd.DataFrame):
             if index:
                 data_frame = data_frame.reset_index()
-            names = validate_column_names(data_frame.columns)
+            data_frame = data_frame.copy(deep=False)
+            data_frame.columns = validate_column_names(data_frame.columns)
             if sort_interleaved and not self.jdbc_options:
-                zcols = _numeric_zorder_columns(data_frame, names, sortkey)
+                zcols = _numeric_zorder_columns(data_frame, sortkey)
                 if zcols:
-                    data_frame = data_frame.copy(deep=False)
                     data_frame[ZORDER_COL] = zorder_codes(data_frame, zcols)
                     zorder = True
-        sdf = apply_validated_names(ingest(self.spark, data_frame))
-
-        if column_data_types is None:
-            column_data_types = get_column_data_types(sdf)
+            sdf = ingest(self.spark, data_frame)
+        else:
+            sdf = apply_validated_names(data_frame)
 
         mode = "append" if append else "overwrite"
         if self.jdbc_options:
+            if column_data_types is None:
+                column_data_types = get_column_data_types(sdf)
             ddl_types = ", ".join(
                 f"{c} {t}" for c, t in zip(sdf.columns, column_data_types)
             )
@@ -328,9 +332,7 @@ class SparkRedshiftBridge:
             # generic JDBC targets (tested live against Derby) work
             is_redshift = "redshift" in self.jdbc_options.get("url", "")
             if is_redshift or distkey or sortkey or diststyle != "even":
-                layout = _layout_create_options(
-                    diststyle, distkey, sort_interleaved, sortkey
-                )
+                layout = layout_clause(diststyle, distkey, sort_interleaved, sortkey)
                 if layout:
                     writer = writer.option("createTableOptions", layout)
             writer.mode(mode).save()
@@ -596,39 +598,19 @@ def _bind_literals(sql_query: str, params) -> str:
     return "".join(out)
 
 
-def _numeric_zorder_columns(
-    frame: pd.DataFrame, names: list[str], sortkey: str
-) -> list | None:
+def _numeric_zorder_columns(frame: pd.DataFrame, sortkey: str) -> list | None:
     """The ``frame`` columns behind an interleaved ``sortkey`` when the
-    driver can build its Morton key: two or more keys, each matching a
-    validated column name case-insensitively (as Spark resolves them)
-    with an integer or float dtype, nullable ones included and bool
-    excluded.  None sends the load down the ``zorder_key`` path."""
-    by_name = {n.lower(): c for n, c in zip(names, frame.columns)}
-    keys = sortkey_columns(sortkey)
-    if len(keys) < 2 or len(by_name) < len(names) or ZORDER_COL in by_name:
+    driver can build its Morton key: two or more keys, each naming one
+    of the frame's validated (lowercase) columns case-insensitively,
+    as Spark resolves them, with an integer or float dtype, nullable
+    ones included and bool excluded.  None sends the load down the
+    ``zorder_key`` path."""
+    keys = [k.lower() for k in sortkey_columns(sortkey)]
+    if len(keys) < 2 or ZORDER_COL in frame.columns:
         return None
-    cols = [by_name.get(k.lower()) for k in keys]
     if all(
-        c is not None and (is_integer_dtype(frame[c]) or is_float_dtype(frame[c]))
-        for c in cols
+        k in frame.columns and (is_integer_dtype(frame[k]) or is_float_dtype(frame[k]))
+        for k in keys
     ):
-        return cols
+        return keys
     return None
-
-
-def _layout_create_options(
-    diststyle: str, distkey: str, sort_interleaved: bool, sortkey: str
-) -> str:
-    """Redshift physical clauses for JDBC createTableOptions — same
-    text the reference appends to CREATE TABLE (core.py:199-211)."""
-    parts = []
-    if distkey:
-        parts.append(f"distkey({distkey})")
-    elif diststyle:
-        if diststyle not in ("even", "all"):
-            raise ValueError("diststyle must be either 'even' or 'all'")
-        parts.append(f"diststyle {diststyle}")
-    if sortkey:
-        parts.append(("interleaved " if sort_interleaved else "") + f"sortkey({sortkey})")
-    return " ".join(parts)

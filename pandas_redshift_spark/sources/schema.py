@@ -100,9 +100,14 @@ def validate_column_names(columns: Iterable[str]) -> list[str]:
     """Pure port of the reference's validate_column_names
     (core.py:90-117): lowercase everything, reject reserved words,
     quote whitespace-containing names.  Returns the new name list
-    instead of mutating a DataFrame."""
+    instead of mutating a DataFrame.
+
+    Unlike the reference, names that collide after normalization
+    (``A`` and ``a``) raise ``ValueError``: a table cannot hold both,
+    and Spark would only find out after an overwrite had dropped the
+    old table."""
     reserved = load_reserved_words()
-    normalized = []
+    sources: dict[str, list[str]] = {}
     for name in columns:
         lowered = str(name).lower()
         if lowered in reserved:
@@ -110,8 +115,13 @@ def validate_column_names(columns: Iterable[str]) -> list[str]:
                 f"DataFrame column name {lowered!r} is a reserved word in Redshift! "
                 "Please rename the column."
             )
-        normalized.append(normalize_column_name(name))
-    return normalized
+        sources.setdefault(normalize_column_name(name), []).append(str(name))
+    clashes = [f"{olds} -> {new!r}" for new, olds in sources.items() if len(olds) > 1]
+    if clashes:
+        raise ValueError(
+            "DataFrame column names collide after normalization: " + "; ".join(clashes)
+        )
+    return list(sources)
 
 
 def apply_validated_names(df: DataFrame) -> DataFrame:
@@ -182,6 +192,30 @@ def get_column_data_types(
 VALID_DISTSTYLES = ("even", "all", "key")
 
 
+def layout_clause(
+    diststyle: str = "even",
+    distkey: str = "",
+    sort_interleaved: bool = False,
+    sortkey: str = "",
+) -> str:
+    """The Redshift physical-layout clauses the reference appends to
+    CREATE TABLE (core.py:199-211): ``distkey(k)``, which overrides
+    ``diststyle`` (core.py:205-207), else ``diststyle even|all``; then
+    ``[interleaved] sortkey(k)``.  An empty ``diststyle`` writes no
+    distribution clause (the JDBC ``createTableOptions`` path leaves
+    it to the warehouse); :func:`build_create_table_ddl` rejects it."""
+    parts = []
+    if distkey:
+        parts.append(f"distkey({distkey})")
+    elif diststyle:
+        if diststyle not in ("even", "all"):
+            raise ValueError("diststyle must be either 'even' or 'all'")
+        parts.append(f"diststyle {diststyle}")
+    if sortkey:
+        parts.append(("interleaved " if sort_interleaved else "") + f"sortkey({sortkey})")
+    return " ".join(parts)
+
+
 def build_create_table_ddl(
     table_name: str,
     columns: Sequence[str],
@@ -193,8 +227,7 @@ def build_create_table_ddl(
 ) -> str:
     """CREATE TABLE DDL with Redshift physical-layout clauses —
     string-for-string what the reference builds (core.py:194-211),
-    exposed for the JDBC `createTableOptions` path and unit-tested
-    against the reference's documented output shape.
+    unit-tested against the reference's documented output shape.
 
     The reference's create_redshift_table executes ``drop table if
     exists`` immediately before this statement (core.py:215-216) —
@@ -202,20 +235,11 @@ def build_create_table_ddl(
     overwrite-replaces-schema semantics."""
     if len(columns) != len(column_data_types):
         raise ValueError("columns and column_data_types must align")
+    if not (distkey or diststyle):
+        raise ValueError("diststyle must be either 'even' or 'all'")
     cols = ", ".join(f"{c} {t}" for c, t in zip(columns, column_data_types))
-    ddl = f"create table {table_name} ({cols})"
-    if distkey:
-        # distkey overrides diststyle (reference core.py:205-207)
-        ddl += f" distkey({distkey})"
-    else:
-        if diststyle not in ("even", "all"):
-            raise ValueError("diststyle must be either 'even' or 'all'")
-        ddl += f" diststyle {diststyle}"
-    if sortkey:
-        if sort_interleaved:
-            ddl += " interleaved"
-        ddl += f" sortkey({sortkey})"
-    return ddl
+    clause = layout_clause(diststyle, distkey, sort_interleaved, sortkey)
+    return f"create table {table_name} ({cols}) {clause}"
 
 
 def build_drop_table_ddl(table_name: str) -> str:

@@ -105,71 +105,3 @@ def batch_user_totals(events: DataFrame) -> DataFrame:
         F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss").alias("last_seen"),
     )
 
-
-def make_totals_processor():
-    """Factory returning a StatefulProcessor subclass INSTANCE for
-    ``transformWithStateInPandas`` — Spark 4's successor to
-    applyInPandasWithState: named state variables (value/list/map
-    state), timers, and TTL live on a handle instead of one opaque
-    tuple.  Same per-user running totals as make_running_totals_fn so
-    the differential test can pin both APIs to the batch aggregate.
-
-    Defined inside a factory so cloudpickle ships the CLASS by value
-    (executors don't import this repo — same constraint as
-    make_running_totals_fn).
-
-    Environment gate: the transformWithState runtime needs a working
-    ``google.protobuf`` (driver-side state server) and the RocksDB
-    state store provider; the differential test skips with a reason
-    where protobuf is unavailable (this container), and
-    applyInPandasWithState (above) remains the fully-exercised
-    stateful path."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            (user_id,) = key
-            n, total, last = 0, 0.0, ""
-            if self._totals.exists():
-                n, total, last = self._totals.get()
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-                iso = pdf["ts"].max().strftime("%Y-%m-%d %H:%M:%S")
-                last = max(last, iso) if last else iso
-            self._totals.update((n, total, last))
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "n_events": [n],
-                    "total_value": [round(total, 2)],
-                    "last_seen": [last],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return RunningTotals()
-
-
-def user_running_totals_tws(events: DataFrame) -> DataFrame:
-    """transformWithStateInPandas twin of :func:`user_running_totals`."""
-    return (
-        events.select("user_id", "value", "ts")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=make_totals_processor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )

@@ -17,8 +17,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql.readwriter import DataFrameWriter
 
 from pandas_redshift_spark.plans.layout import ZORDER_COL, zorder_codes
-from pandas_redshift_spark.sources.bridge import connect, ingest
-from pandas_redshift_spark.sources.schema import ReservedWordError
+from pandas_redshift_spark.sources.bridge import SparkRedshiftBridge, connect, ingest
+from pandas_redshift_spark.sources.schema import ReservedWordError, build_create_table_ddl
 
 
 @pytest.fixture()
@@ -58,6 +58,46 @@ def test_overwrite_mode(bridge):
 def test_reserved_column_rejected(bridge):
     with pytest.raises(ReservedWordError):
         bridge.write_table(pd.DataFrame({"select": [1]}), "t_roundtrip")
+
+
+def test_name_collision_keeps_the_old_table(bridge, spark):
+    """Names equal after normalization are rejected before the
+    overwrite drops the table: the old rows still read afterwards."""
+    bridge.write_table(pd.DataFrame({"x": [1, 2]}), "t_roundtrip")
+    for frame in (
+        pd.DataFrame([[1, 2]], columns=["A", "a"]),
+        spark.createDataFrame([(1, 2)], ["A", "a"]),
+    ):
+        with pytest.raises(ValueError, match=r"\['A', 'a'\] -> 'a'"):
+            bridge.write_table(frame, "t_roundtrip")
+    assert bridge.sql("SELECT count(*) AS n FROM t_roundtrip").first()["n"] == 2
+
+
+@pytest.mark.parametrize("distkey", ["", "x"])
+@pytest.mark.parametrize("diststyle", ["even", "all"])
+@pytest.mark.parametrize("sortkey", ["", "x", "x, y"])
+@pytest.mark.parametrize("sort_interleaved", [False, True])
+def test_jdbc_layout_options_match_ddl_tail(
+    spark, monkeypatch, distkey, diststyle, sortkey, sort_interleaved
+):
+    """A Redshift JDBC load's ``createTableOptions`` text is the tail
+    of ``build_create_table_ddl`` for the same layout hints."""
+    options = {}
+
+    def option(writer, key, value):
+        options[key] = value
+        return writer
+
+    monkeypatch.setattr(DataFrameWriter, "option", option)
+    monkeypatch.setattr(DataFrameWriter, "save", lambda writer: None)
+    layout = dict(
+        diststyle=diststyle, distkey=distkey, sortkey=sortkey, sort_interleaved=sort_interleaved
+    )
+    url = "jdbc:redshift://warehouse:5439/db"
+    b = SparkRedshiftBridge(spark=spark, jdbc_options={"url": url})
+    b.write_table(pd.DataFrame({"x": [1], "y": [2]}), "t_layout", **layout)
+    ddl = build_create_table_ddl("t_layout", ["x", "y"], ["BIGINT", "BIGINT"], **layout)
+    assert ddl == "create table t_layout (x BIGINT, y BIGINT) " + options["createTableOptions"]
 
 
 def test_exec_sql_ctas_union(bridge):

@@ -15,6 +15,7 @@ from pandas_redshift_spark.sources.schema import (
     ReservedWordError,
     build_create_table_ddl,
     get_column_data_types,
+    layout_clause,
     pd_dtype_to_redshift_dtype,
     validate_column_names,
 )
@@ -139,6 +140,13 @@ class TestCreateTableDdl:
         # reference core.py:201-202 raises ValueError on bad diststyle
         with pytest.raises(ValueError):
             build_create_table_ddl("t", ["a"], ["BIGINT"], diststyle="key")
+
+    def test_empty_diststyle(self):
+        # the JDBC createTableOptions path writes no clause for it; the
+        # full DDL has no default to fall back on
+        assert layout_clause(diststyle="") == ""
+        with pytest.raises(ValueError):
+            build_create_table_ddl("t", ["a"], ["BIGINT"], diststyle="")
 
     def test_distkey_overrides_diststyle(self):
         # reference core.py:205-207: distkey wins, diststyle dropped

@@ -113,39 +113,6 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir, events_stream)
     assert got == want
 
 
-def _tws_available() -> bool:
-    # transformWithStateInPandas talks to a driver-side state server
-    # over protobuf; this container ships a broken google.protobuf
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(not _tws_available(), reason="google.protobuf unavailable: transformWithState state server cannot start in this container")
-def test_transform_with_state_matches_batch(spark, sf_dir, events_stream):
-    """transformWithStateInPandas (Spark 4 stateful API) must produce
-    the same final per-user totals as applyInPandasWithState and the
-    batch aggregate.  Requires the RocksDB state store provider, which
-    ``drain`` sets for the query."""
-    from pandas_redshift_spark.streaming.stateful import (
-        batch_user_totals,
-        user_running_totals_tws,
-    )
-
-    got = {
-        r.user_id: (r.n_events, r.total_value, r.last_seen)
-        for r in drain(user_running_totals_tws(events_stream), "update").collect()
-    }
-    events_batch = event_time_ltz(spark.read.parquet(f"{sf_dir}/events.parquet"))
-    want = {
-        r.user_id: (r.n_events, r.total_value, r.last_seen)
-        for r in batch_user_totals(events_batch).collect()
-    }
-    assert got == want
-
 def test_watermark_evicts_state_and_drops_late_data(spark, tmp_path):
     """Watermark semantics end-to-end over 3 micro-batches: batch 1
     advances the event-time high mark; batch 2's late rows still merge
