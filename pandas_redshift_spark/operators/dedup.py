@@ -10,7 +10,7 @@ pair space stays near-linear at 100 TB.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 
 from pandas_redshift_spark.operators.registry import query
 from pandas_redshift_spark.session import Tables, ensure_parallelism, memoized_persist
@@ -477,9 +477,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _components_output(labels: DataFrame) -> DataFrame:
-    """(component_id, n_members, members) from a (node, label) frame —
-    shared by both clustering variants so the output contract stays in
-    lockstep with _CLUSTER_ORACLE's ``string_agg(node, ',' ORDER BY
+    """(component_id, n_members, members) from a (node, label) frame,
+    in lockstep with _CLUSTER_ORACLE's ``string_agg(node, ',' ORDER BY
     node)`` (comma separator, numeric member order).  The member list
     is a STRING because the driver's canonicalizer hashes row values
     and cannot sort/hash a raw array<long> cell."""
@@ -524,7 +523,7 @@ def components_cte_sql(threshold: float = 0.2) -> str:
     """Extends :func:`jaccard_pairs_cte_sql` with the recursive
     transitive closure: adds (edges, reach, comp) where ``comp`` maps
     every node in the pair graph to its component_id (the min
-    reachable node — exactly the fixpoint min-label propagation
+    reachable node — exactly the labels :func:`lsstar_components`
     converges to).  Requires ``WITH RECURSIVE`` at the call site."""
     return f"""{jaccard_pairs_cte_sql(threshold)},
     edges AS (
@@ -567,7 +566,7 @@ def _cluster_cert_oracle(spark: SparkSession, sf_dir: str, con) -> str:
     sf10/sf30), the closure runs as UNION-FIND over the fetched edge
     list in Python (path-halving, O(E a(N)) — exact, no recursion
     depth, nothing quadratic), labels are canonicalized to the
-    component MINIMUM (the same fixpoint min-label propagation
+    component MINIMUM (the same labels :func:`lsstar_components`
     converges to), and the returned SQL formats (component_id,
     n_members, members) from the registered labels.  Unlike the other
     cert oracles this pins NOTHING from Spark — the whole computation
@@ -617,91 +616,24 @@ def _cluster_cert_oracle(spark: SparkSession, sf_dir: str, con) -> str:
     oracle=_CLUSTER_ORACLE,
     cert_oracle=_cluster_cert_oracle,
 )
+@query("dedup_cluster_components_lsstar", oracle=_CLUSTER_ORACLE)
 def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the near-dup pair graph — the step
     that turns pairwise Jaccard matches into dedup GROUPS (transitive
     closure: if A~B and B~C, then {A,B,C} is one cluster with one
-    survivor).  Iterative min-label propagation: every node starts
-    labeled with min(self, neighbors) (round 1 baked into the seed);
-    each hop every node takes the min label among itself and its
-    neighbors; fixpoint in O(diameter) hops.  Near-dup graphs are
-    overwhelmingly tiny cliques, so 1-2 materialized rounds close
-    them — each round runs TWO hops (two shuffle join+aggregates)
-    because the driver-side costs per round (convergence collect,
-    ``localCheckpoint`` job) dominate, and propagation is monotone so
-    deeper reach per materialization never changes the fixpoint.
-    ``localCheckpoint`` truncates the growing lineage so round N
-    doesn't re-execute rounds 1..N-1 (the classic iterative-DataFrame
-    trap).  Convergence is detected by the strictly decreasing sum of
-    labels — a cheap scalar aggregate, no row-diffing.  At 100 TB you'd switch the round body to the
-    large-star/small-star formulation (same join shape, provably
-    O(log n) rounds); the driver loop and checkpointing are identical.
+    survivor, its min doc_id).  One loop, :func:`lsstar_components`
+    (large-star/small-star, O(log n) rounds), serves both registry
+    names; ``dedup_cluster_components_lsstar`` is kept as an alias so
+    callers of either name get the same plan.
 
-    Checked four ways: the driver's value-hash oracle (a DuckDB
+    Checked three ways: the driver's value-hash oracle (a DuckDB
     recursive-CTE transitive closure — see ``_CLUSTER_ORACLE``),
     tests/test_extensions.py's union-find ground truth on the same
-    pairs, the large-star/small-star twin below, and the adversarial
-    chain-graph round-count fixture (tests/test_extensions.py) that
-    measures the O(diameter)-vs-O(log n) trade the docstrings claim.
-    """
+    pairs, and the adversarial chain-graph fixture
+    (tests/test_extensions.py) that pins the O(log n) round bound."""
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    labels, _rounds = propagate_components(pairs)
+    labels, _rounds = lsstar_components(pairs)
     return _components_output(labels)
-
-
-def propagate_components(
-    pairs: DataFrame, max_rounds: int = 10
-) -> tuple[DataFrame, int]:
-    """Min-label-propagation connected components over an undirected
-    pair graph given as (doc_a, doc_b) rows.  Returns ``(labels,
-    rounds)`` — a (node, label) frame at (or nearest to) the fixpoint
-    and the number of MATERIALIZED rounds consumed, so callers (and
-    the adversarial-skew test) can observe the O(diameter) round
-    complexity directly.  See :func:`dedup_cluster_components` for the
-    algorithm walkthrough; this helper is the exact loop that query
-    runs, lifted so a synthetic worst-case graph can be pushed through
-    it without re-deriving Jaccard pairs."""
-    # undirected: propagate labels both ways
-    edges = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).persist()
-    # seed with min(self, neighbors) — same shuffle as the plain
-    # distinct would cost, but it bakes round 1 of propagation into
-    # the seed, so tiny cliques (the overwhelming case) converge one
-    # join+agg+collect round earlier
-    labels = (
-        edges.groupBy(F.col("doc_a").alias("node"))
-        .agg(F.least(F.min("doc_b"), F.col("doc_a")).alias("label"))
-        .localCheckpoint()
-    )
-
-    def hop(lbl):
-        neighbor = edges.join(lbl, edges.doc_a == lbl.node).select(
-            F.col("doc_b").alias("node"), "label"
-        )
-        return (
-            lbl.select("node", "label")
-            .union(neighbor)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-        )
-
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-    rounds = 0
-    for _ in range(max_rounds):  # diameter bound; near-dup cliques close in 1-2
-        # TWO hops per materialized round: the driver-side costs
-        # (convergence collect + localCheckpoint job) dominate at small
-        # graph sizes, and label propagation is monotone, so doubling
-        # the per-round reach halves the materializations without
-        # changing the fixpoint.
-        labels = hop(hop(labels)).localCheckpoint()
-        rounds += 1
-        new_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    edges.unpersist()
-    return labels, rounds
 
 
 @query(
@@ -773,90 +705,73 @@ def dedup_ngram_jaccard_dfcut(spark: SparkSession, sf_dir: str) -> DataFrame:
     return inter.filter(jac >= 0.2).select("doc_a", "doc_b", jac.alias("jaccard"))
 
 
-@query("dedup_cluster_components_lsstar", oracle=_CLUSTER_ORACLE)
-def dedup_cluster_components_lsstar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components via alternating LARGE-STAR / SMALL-STAR
-    rounds (Kiveris et al., "Connected Components in MapReduce and
-    Beyond") — the provably O(log n)-round formulation that replaces
-    min-label propagation's O(diameter) at 100 TB, where a single
-    chain-shaped near-dup cluster would otherwise serialize the loop.
-
-    large-star: every node connects its LARGER neighbors to the min of
-    its neighborhood (incl. itself); small-star: every node connects
-    its smaller-or-equal neighbors (and itself) to that min.  Both are
-    one groupBy + one join re-emission — the same shuffle shape as one
-    propagation round — but the composition provably halves component
-    height per double-round.  Convergence = edge multiset fixpoint,
-    detected by a 1-row (count, sum) aggregate; localCheckpoint
-    truncates lineage per round as in dedup_cluster_components.
-
-    Same output contract as dedup_cluster_components (the
-    union-find-verified baseline); tests assert they agree
-    component-for-component.  Iterative => rows-only driver check."""
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    labels, _rounds = lsstar_components(pairs)
-    return _components_output(labels)
-
-
 def lsstar_components(
     pairs: DataFrame, max_rounds: int = 15
 ) -> tuple[DataFrame, int]:
-    """Large-star/small-star connected components over an undirected
-    pair graph given as (doc_a, doc_b) rows.  Returns ``(labels,
-    rounds)`` — a (node, label) frame and the number of materialized
-    double-rounds consumed, so the adversarial-skew test can verify
-    the O(log n) bound against :func:`propagate_components`'s
-    O(diameter) on the same worst-case graph.  This is the exact loop
-    :func:`dedup_cluster_components_lsstar` runs."""
-    # canonical hi -> lo direction
-    e = (
-        pairs.select(
-            F.greatest("doc_a", "doc_b").alias("u"), F.least("doc_a", "doc_b").alias("v")
+    """Large-star/small-star connected components (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC 2014) over an
+    undirected pair graph given as (doc_a, doc_b) rows.  Returns
+    ``(labels, rounds)`` — a (node, label) frame, label = the
+    component's min node, and the number of materialized rounds
+    consumed, so the adversarial chain test can pin the O(log n)
+    bound.  Raises ``RuntimeError`` if no round within ``max_rounds``
+    confirms the fixpoint (it takes two): partial labels would
+    silently split a cluster.
+
+    Edges are kept hi -> lo (u > v).  large-star: every node links
+    its LARGER neighbors to the min of its neighborhood (incl.
+    itself); small-star: every node links its smaller neighbors and
+    itself to that min.  Each step's neighborhood min is one window
+    over ``u`` — one shuffle, no groupBy + join back — and the steps
+    are SQL text, a few py4j calls each.  The composition provably
+    halves component height per round.  small-star keeps its
+    self-edges (m, m), which large-star drops again, so at the
+    fixpoint every node has exactly one edge, (node, root), and the
+    edges are the labels frame as is.
+
+    Round 1 runs on the raw pairs (the window mins and the closing
+    ``distinct`` don't care about duplicates); it turns every clique
+    into a star, so near-dup graphs are done once round 2 confirms it.
+    Each round is ``localCheckpoint``ed so round N doesn't re-execute
+    rounds 1..N-1, and the fixpoint test — an unchanged (count, sum u,
+    sum v) edge signature — is an ``observe`` on the checkpointed
+    frame: its metrics come back with the checkpoint's own jobs, so a
+    round costs no separate driver collect."""
+    min_v = "min(v) OVER (PARTITION BY u)"
+
+    def star_round(edges: DataFrame) -> tuple[DataFrame, tuple]:
+        # each step emits its two edge sets from ONE pass (inline of a
+        # 2-struct array), never a union of two reads of its input:
+        # round 1's input is the whole Jaccard pair plan, and a union
+        # ran it twice (sf0.1 on 2 local cores: 5.3 s against 3.3 s)
+        bidir = edges.selectExpr("inline(array(struct(u, v), struct(v AS u, u AS v)))")
+        large = (
+            bidir.selectExpr("u", "v", f"least(u, {min_v}) AS m")
+            .where("v > u")
+            .selectExpr("v AS u", "m AS v")
         )
-        .distinct()
-        .localCheckpoint()
+        # large-star's edges are hi -> lo: the window min is the min neighbor
+        small = large.selectExpr("u", "v", f"{min_v} AS m")
+        out = small.selectExpr("inline(array(struct(v AS u, m AS v), struct(u, m AS v)))")
+        obs = Observation()
+        done = out.distinct().observe(
+            obs, *map(F.expr, ("count(1) AS n", "sum(u) AS su", "sum(v) AS sv"))
+        ).localCheckpoint()
+        return done, tuple(obs.get.values())
+
+    e, sig = star_round(
+        pairs.selectExpr("greatest(doc_a, doc_b) AS u", "least(doc_a, doc_b) AS v")
     )
-
-    def edge_sig(df: DataFrame):
-        return tuple(
-            df.agg(
-                F.count(F.lit(1)), F.sum("u"), F.sum("v")
-            ).collect()[0]
-        )
-
-    def large_star(edges: DataFrame) -> DataFrame:
-        bidir = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = bidir.groupBy("u").agg(F.min("v").alias("mv"))
-        m = F.least(F.col("u"), F.col("mv"))
-        return (
-            bidir.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), m.alias("v"))
-            .distinct()
-        )
-
-    def small_star(edges: DataFrame) -> DataFrame:
-        # edges already hi -> lo; min of smaller neighborhood
-        mins = edges.groupBy("u").agg(F.min("v").alias("m"))
-        relink = edges.join(mins, "u").select(F.col("v").alias("u"), F.col("m").alias("v"))
-        selfe = mins.select("u", F.col("m").alias("v"))
-        return relink.union(selfe).filter(F.col("u") != F.col("v")).distinct()
-
-    sig = edge_sig(e)
-    rounds = 0
-    for _ in range(max_rounds):  # O(log n) bound; near-dup graphs close in 2-3
-        e = small_star(large_star(e)).localCheckpoint()
-        rounds += 1
-        new_sig = edge_sig(e)
+    for rounds in range(2, max_rounds + 1):  # O(log n); near-dup graphs close in 2-3
+        e, new_sig = star_round(e)
         if new_sig == sig:
             break
         sig = new_sig
-    # fixpoint edges form stars: u -> component root (the min).  Roots
-    # label themselves.
-    labels = e.select(F.col("u").alias("node"), F.col("v").alias("label")).union(
-        e.select(F.col("v").alias("node"), F.col("v").alias("label"))
-    ).groupBy("node").agg(F.min("label").alias("label"))
-    return labels, rounds
+    else:
+        raise RuntimeError(
+            f"connected components did not converge in {max_rounds} rounds"
+        )
+    return e.selectExpr("u AS node", "v AS label"), rounds
 
 
 @query(

@@ -53,11 +53,13 @@ class QuerySpec:
     #: cert-oracle == primary-oracle result at a small SF.
     cert_oracle: Callable | None = None
     #: r15: True routes repeat invocations through the session memo
-    #: (``session.memo``, family ``frame``): the BUILT logical plan
-    #: (an immutable, unexecuted DataFrame) is shared per (session,
-    #: sf_dir), the same object class the ``table`` family already
-    #: shares.  Nothing executed is cached; every run still computes
-    #: from the parquet inputs.  Set only on queries
+    #: (``session.memo``, family ``frame``): every call gets the same
+    #: DataFrame object per (session, sf_dir).  Spark keeps the
+    #: shuffle output an action on that object left behind, so later
+    #: actions on it replay only AQE's final stage rather than
+    #: recompute from the parquet inputs (q1 and TPC-H q3 through
+    #: ``toPandas``: 5 and 6 jobs on the first call, 1 on each later
+    #: one).  Set only on queries
     #: whose MEASURED per-invocation Python build cost is >= ~0.1 s
     #: (py4j round-trips re-assembling the identical expression trees;
     #: table in OPTIMIZATION_r15.md), and never on operators whose

@@ -385,8 +385,12 @@ def hyperplane_buckets(
     """
     # probe the embedding width from the data — literal planes of the
     # wrong length would zip_with-pad with nulls and silently zero
-    # every signature bit
-    n_dims = t.embeddings.select(F.size("embedding").alias("d")).first()["d"]
+    # every signature bit.  One probe job per session per corpus, like
+    # stats.table_rows.
+    n_dims = memo(
+        t.spark, "emb_width", (t.sf_dir,),
+        lambda: t.embeddings.select(F.size("embedding").alias("d")).first()["d"],
+    )
     planes = hyperplane_literals(n_planes, n_dims, seed)
 
     def plane_bit(p: int) -> Column:
@@ -1781,9 +1785,9 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     assembling the PQ expression trees (:func:`_pq_exprs`: the eight
     literal sub-codebooks and their argmax and LUT folds) costs about
     0.5 s of py4j round trips, so only a session's first call pays
-    it; later calls reuse the immutable logical plan.  Nothing
-    executed is cached: every run still computes from the parquet
-    inputs."""
+    it.  Later calls get the same DataFrame object back, so their
+    actions reuse the shuffle output the first action left behind:
+    AQE replays only the final stage, not the parquet scans."""
     t = Tables(spark, sf_dir)
     emb = _emb_double(t).select("vec_id", "emb_n")
     # corpus-scaled re-rank pool, sized from the memoized raw-table

@@ -81,24 +81,6 @@ def configure_session(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.ansi.enabled", "true")
     # AQE is on by default in Spark 3.2+; assert rather than assume.
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    # Let AQE re-plan the output partitioning of CACHED plans (off by
-    # default): without it a persisted frame materializes at the
-    # static spark.sql.shuffle.partitions (200 on a vanilla session),
-    # and its consumers run hundreds of near-empty tasks.  Memoized
-    # frames are checkpoints now (memoized_persist) and keep their
-    # AQE-sized partitions either way; what still needs the conf is
-    # the persisted edge frame of dedup.propagate_components, read by
-    # every hop of the label loop: dedup_cluster_components warm at
-    # sf0.01 measured 1.1-1.6 s with it and 2.0-3.0 s without (1.8-2.2
-    # against 5.0-6.5 s at 200 shuffle partitions), while
-    # agg_market_basket no longer moves.  Explicit repartition(n)
-    # calls (ensure_parallelism) keep their user-specified counts —
-    # AQE only coalesces ENSURE_REQUIREMENTS exchanges — so
-    # CPU-parallelism floors for cheap-bytes/expensive-row stages are
-    # unaffected.
-    spark.conf.set(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
-    )
     return spark
 
 

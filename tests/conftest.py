@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -32,6 +33,21 @@ def drop_memo(*families: str) -> None:
 
     for key in [k for k in session._MEMO if k[0] in families]:
         del session._MEMO[key]
+
+
+def jobs_of(spark, action):
+    """``(action(), number of Spark jobs it started)``, counted by job
+    group through the status tracker."""
+    sc = spark.sparkContext
+    group = f"jobs-of-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = action()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def on_memo_build(monkeypatch, inspect) -> None:

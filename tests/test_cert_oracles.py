@@ -94,7 +94,7 @@ def test_semdedup_cert_oracle_hierarchical_regime(spark, sf_dir, monkeypatch):
     a NotImplementedError boundary in the cert oracle; now it is a
     full independent SQL replay (_hier_replay_ctes).  With the flat
     ceiling forced below the fixture's K, the Spark side routes
-    through train_kmeans_hierarchical + _assign_two_level_join and
+    through train_kmeans_hierarchical + _assign_two_level and
     the cert oracle must hash-match it end to end — the same triangle
     contract the flat regime holds (no primary-oracle leg here: the
     static primary replays the flat schedule by construction)."""

@@ -6,11 +6,12 @@ Python evaluation."""
 from __future__ import annotations
 
 import re
-import uuid
 
 import pyspark.sql.functions as F
+import pytest
 
 from pandas_redshift_spark.operators import all_queries
+from tests.conftest import jobs_of
 
 
 def _plan(spark, name, sf_dir):
@@ -128,21 +129,6 @@ def test_shingle_transform_never_reaches_a_scan(spark, sf_dir, monkeypatch):
         assert scanned_documents, name
 
 
-def _jobs_of(spark, action):
-    """``(action(), number of Spark jobs it started)``, counted by job
-    group through the status tracker."""
-    sc = spark.sparkContext
-    group = f"jobs-of-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job count")
-    try:
-        out = action()
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_warm_minhash_call_plans_over_the_checkpoint(spark, sf_dir):
     """A warm ``dedup_minhash_lsh`` call starts no job while building
     its plan, plans over the checkpointed bucket frame (one
@@ -150,14 +136,46 @@ def test_warm_minhash_call_plans_over_the_checkpoint(spark, sf_dir):
     lineage) and collects in 3 jobs."""
     fn = all_queries()["dedup_minhash_lsh"].fn
     fn(spark, sf_dir).collect()  # builds the memoized buckets
-    df, build_jobs = _jobs_of(spark, lambda: fn(spark, sf_dir))
+    df, build_jobs = jobs_of(spark, lambda: fn(spark, sf_dir))
     assert build_jobs == 0
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("extended")
     plan = df._jdf.queryExecution().explainString(mode)
     assert "LogicalRDD" in plan, plan
     assert "zip_with" not in plan and "md5" not in plan, plan
-    _, collect_jobs = _jobs_of(spark, df.collect)
+    _, collect_jobs = jobs_of(spark, df.collect)
     assert collect_jobs == 3
+
+
+def test_warm_lsh_call_starts_no_job(spark, sf_dir):
+    """A warm ``sim_lsh_topk`` call builds its plan without starting a
+    job: ``hyperplane_buckets`` probes the embedding width once per
+    session and corpus, not on every call."""
+    fn = all_queries()["sim_lsh_topk"].fn
+    fn(spark, sf_dir).collect()
+    _, build_jobs = jobs_of(spark, lambda: fn(spark, sf_dir))
+    assert build_jobs == 0
+
+
+@pytest.mark.parametrize(
+    ("name", "two_loop_jobs"),
+    [
+        ("dedup_cluster_components", 19),
+        ("dedup_cluster_components_lsstar", 31),
+        ("pipe_dedup_cascade", 32),
+    ],
+)
+def test_components_warm_jobs_below_two_loop_counts(spark, sf_dir, name, two_loop_jobs):
+    """Warm ``fn()`` + ``collect`` of each connected-components
+    operator starts fewer jobs than when min-label propagation and
+    large-star/small-star were separate loops, each paying a driver
+    collect per round for its convergence test.  The pins are the
+    two-loop counts at sf0.001 and sf0.01 (``pipe_dedup_cascade`` ran
+    32 or 33; the lower one is pinned); at sf0.01 the one loop runs
+    14, 14 and 28."""
+    fn = all_queries()[name].fn
+    fn(spark, sf_dir).collect()
+    _, jobs = jobs_of(spark, lambda: fn(spark, sf_dir).collect())
+    assert jobs < two_loop_jobs
 
 
 def test_runtime_bloom_filter_injects_on_selective_shuffle_join(spark, sf_dir):
