@@ -97,8 +97,8 @@ def query(
             from pandas_redshift_spark.session import memo
 
             def run(spark: SparkSession, sf_dir: str) -> DataFrame:  # noqa: F811
-                # e.g. sim_pq_adc_topk spends about 0.5 s in py4j
-                # round trips assembling its argmax and LUT fold trees
+                # e.g. sim_pq_adc_topk spends about 0.7 s, mostly py4j
+                # round trips, assembling its argmax and LUT fold trees
                 return memo(
                     spark, "frame", ("plan", name, sf_dir), lambda: fn(spark, sf_dir)
                 )

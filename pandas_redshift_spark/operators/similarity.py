@@ -36,12 +36,12 @@ EMBEDDING_DIMS = 64
 
 def _double_array(values: list) -> Column:
     """``array<double>`` literal of ``values`` (``array<array<double>>``
-    for a list of lists), built as ONE ``F.expr`` of SQL text.
-    ``F.lit(list)`` is ``array(*[lit(x) for x in list])`` in PySpark
-    4.1: one py4j round trip per element, ~0.5 s for a 16 x 64
-    codebook.  Each value is written as ``repr(float(x)) + "D"``, which
-    parses back to the same double bit for bit (subnormals and -0.0
-    included); values must be finite."""
+    for a list of lists), built as ONE ``F.expr`` of SQL text: the LSH
+    hyperplanes of :func:`hyperplane_buckets`.  ``F.lit(list)`` is
+    ``array(*[lit(x) for x in list])`` in PySpark 4.1: one py4j round
+    trip per element.  Each value is written as ``repr(float(x)) +
+    "D"``, which parses back to the same double bit for bit (subnormals
+    and -0.0 included); values must be finite."""
 
     def sql(v) -> str:
         if isinstance(v, (list, tuple)):
@@ -649,21 +649,6 @@ def dedup_embedding_cosine_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 KMEANS_ITERS = 2
 KMEANS_SAMPLE_MOD = 4
 
-#: Above this K, dedup_semantic_ivf's two-level assignment stops
-#: embedding the codebook as plan LITERALS (O(K*d) expression tree —
-#: fine at bench K, a driver/plan-serialization bottleneck when the
-#: K = N/125 schedule tracks a 100 TB corpus) and switches to the
-#: broadcast-codebook-frame path (:func:`_assign_two_level`, VERDICT r7
-#: item 2): same floats, same strict-greater/smallest-id argmax, O(1)
-#: plan size.  128: the r8 sf1 A/B measured the crossover below K=160
-#: (literal 4.00 s vs broadcast 2.11 s at sf1, BENCH_scale_r08.md) —
-#: codegen/plan cost of the literal tree overtakes the two broadcast
-#: exchanges well before the 1024 guess.  Those literal timings
-#: included building every centroid element as its own py4j ``lit``
-#: call, which :func:`_double_array` no longer pays, so the crossover
-#: is due a re-measurement at the sf1 scale sample.
-CODEBOOK_LITERAL_MAX_K = 128
-
 #: Hard ceiling for the DRIVER-side super-centroid trainer
 #: (:func:`super_centroids` is O(iters * K * sqrt(K) * dims) pure
 #: Python — ~1e8 float ops at this bound, seconds; past it the
@@ -786,20 +771,23 @@ def train_pq_books(
       sliced per subspace on the driver; ``cell`` keeps the seed's
       vec_id;
     - per iteration: assign each sample slice to its max-dot centroid
-      (``row_number`` over dot desc, cell asc: ties -> smaller cell
-      id), re-average per (m, cell, dim) with :func:`_pinned_means`,
-      then renormalize on the driver with a left-to-right
-      sum-of-squares fold;
+      with :func:`argmax_dot` over subspace ``m``'s codebook in the
+      broadcast :func:`_codebook_row` (ties -> smaller cell id),
+      re-average per (m, cell, dim) with :func:`_pinned_means`, then
+      renormalize on the driver with a left-to-right sum-of-squares
+      fold;
     - a cell that captured no vectors, or whose mean is all zeros
       (reachable for a sub-slice of nonzero vectors, ADVICE r8), keeps
       its previous centroid — the oracle's CASE guard.
 
-    Jobs: 1 seed collect + ``iters`` mean collects whatever ``n_sub``
-    (sequential per-subspace training burned ~25 s of cold start at
-    sf0.1 on 24 tiny-job round trips).  Only ``n_sub x K x sub_dims``
-    doubles ever reach the driver — the ML-KMeans pattern; at 100 TB
-    the sample predicate becomes a fixed-size draw and the schedule
-    and replay stay identical.
+    Jobs: one seed collect and ``iters`` mean collects whatever
+    ``n_sub``; with their shuffle stages and codebook broadcasts that
+    is 10 Spark jobs for the PQ 8 x 32 and the flat K=16 trainings at
+    sf0.01 and sf0.1 (sequential per-subspace training burned ~25 s
+    of cold start at sf0.1 on 24 tiny-job round trips).  Only
+    ``n_sub x K x sub_dims`` doubles ever reach the driver — the
+    ML-KMeans pattern; at 100 TB the sample predicate becomes a
+    fixed-size draw and the schedule and replay stay identical.
 
     Returns ``books``: for each ``m``, the ``[(cell, [floats])]`` list
     in cell-id order.  Memoized in the ``kmeans`` family; the slice
@@ -827,22 +815,20 @@ def train_pq_books(
                 "sub_en"
             ),
         )
+
+        def books() -> list[list]:
+            return [
+                sorted((c, v) for (m, c), v in cents.items() if m == mm)
+                for mm in range(n_sub)
+            ]
+
+        book = F.element_at(F.col("books"), F.col("m") + 1)
         for _ in range(iters):
-            cents_df = broadcast(
-                spark.createDataFrame(
-                    [(m, c, v) for (m, c), v in sorted(cents.items())],
-                    schema="m int, cell long, c_en array<double>",
-                )
-            )
-            w_asg = Window.partitionBy("vec_id", "m").orderBy(
-                F.col("c_sim").desc(), F.col("cell")
-            )
-            assigned = (
-                exploded.join(cents_df, "m")
-                .withColumn("c_sim", dot(F.col("sub_en"), F.col("c_en")))
-                .withColumn("c_rn", F.row_number().over(w_asg))
-                .filter(F.col("c_rn") == 1)
-                .select("vec_id", "m", "cell", "sub_en")
+            assigned = exploded.crossJoin(_codebook_row(spark, books=books())).select(
+                "vec_id",
+                "m",
+                argmax_dot(F.col("sub_en"), book).alias("cell"),
+                "sub_en",
             )
             by_cell: dict[tuple, dict[int, float]] = {}
             for r in _pinned_means(assigned, "sub_en", ("m", "cell")).collect():
@@ -860,10 +846,7 @@ def train_pq_books(
                 nrm = math.sqrt(acc)
                 nxt[mc] = prev if nrm == 0.0 else [v / nrm for v in raw]
             cents = nxt
-        return [
-            sorted((c, v) for (m, c), v in cents.items() if m == mm)
-            for mm in range(n_sub)
-        ]
+        return books()
 
     key = (*cache_key, n_sub, sub_dims, k_codes, iters, sample_mod)
     return memo(spark, "kmeans", key, build)
@@ -1095,26 +1078,19 @@ def super_centroids(
     return sups, c2s
 
 
-def _cand_struct(cand_id: int, vec: list) -> Column:
-    """``struct<id: long, cen: array<double>>`` literal candidate; the
-    centroid is one :func:`_double_array`."""
-    return F.struct(
-        F.lit(int(cand_id)).cast("long").alias("id"),
-        _double_array(vec).alias("cen"),
-    )
-
-
 def argmax_dot(vec: Column, cands: Column) -> Column:
     """Id of the candidate (array<struct<id, cen>>, id-ascending) with
     the max dot product against ``vec`` — ties keep the smallest id,
     exactly ``row_number() OVER (ORDER BY dot DESC, id)`` = 1.
 
-    A pure per-row fold over broadcast literals: nearest-centroid
-    assignment becomes a NARROW projection — no join, no shuffle, no
-    window — the plan you want when the corpus is 100 TB and the
-    codebook is kilobytes.  (At extreme K the same argmax runs as a
-    join + max(struct) partial agg, :func:`_argmax_join`; the fold
-    form keeps the bench plans one stage.)"""
+    A pure per-row fold over a codebook column of the one-row
+    :func:`_codebook_row`: nearest-centroid assignment is a cross join
+    with that single broadcast row and a NARROW projection — no
+    shuffle, no window — the plan you want when the corpus is 100 TB
+    and the codebook is kilobytes.  (Past the flat trainer's ceiling
+    the same argmax runs as a join + max(struct) partial agg,
+    :func:`_argmax_join`, over a child codebook that never reaches the
+    driver.)"""
     init = F.struct(
         F.lit(float("-inf")).alias("sim"), F.lit(-1).cast("long").alias("id")
     )
@@ -1128,37 +1104,68 @@ def argmax_dot(vec: Column, cands: Column) -> Column:
     return F.aggregate(cands, init, step, lambda acc: acc["id"])
 
 
-def _assign_two_level_literal(
-    emb: DataFrame, sups: list, c2s: dict, cents: list, live: set
+#: One codebook as Spark data: its candidates in id order, the shape
+#: :func:`argmax_dot` folds over.
+_CANDS = "array<struct<id: bigint, cen: array<double>>>"
+
+
+def _codebook_row(spark: SparkSession, **books) -> DataFrame:
+    """Driver-side codebooks as ONE broadcast row, a column per
+    keyword.  A value is a codebook ``[(id, vec)]`` (column type
+    ``_CANDS``), a list of codebooks, one per PQ subspace
+    (``array<_CANDS>``), or a ``{sup: codebook}`` dict
+    (``map<bigint, _CANDS>``); each codebook is sorted into id order,
+    the order :func:`argmax_dot`'s smallest-id tie rule needs.
+
+    The centroids travel as relation data, like the reference's staged
+    ``COPY`` (pandas_redshift/core.py:220-304), not as plan literals:
+    the plan stays O(1) in K and building it costs one
+    ``createDataFrame`` call, whatever the codebook size.  Consumers
+    cross join the row — a BroadcastNestedLoopJoin whose build side is
+    this single row — and read the columns in a projection.  Doubles
+    cross as pickled Python floats, bit for bit."""
+
+    def cands(book) -> list:
+        return [(int(i), [float(x) for x in v]) for i, v in sorted(book)]
+
+    types, row = [], []
+    for name, v in books.items():
+        if isinstance(v, dict):
+            types.append(f"{name} map<bigint, {_CANDS}>")
+            row.append({int(k): cands(b) for k, b in v.items()})
+        elif isinstance(v[0], list):
+            types.append(f"{name} array<{_CANDS}>")
+            row.append([cands(b) for b in v])
+        else:
+            types.append(f"{name} {_CANDS}")
+            row.append(cands(v))
+    return broadcast(spark.createDataFrame([tuple(row)], schema=", ".join(types)))
+
+
+def _assign_two_level_row(
+    spark: SparkSession, emb: DataFrame, sups: list, c2s: dict, cents: list
 ) -> DataFrame:
-    """Two-level nearest-cell assignment with the codebook embedded as
-    PLAN LITERALS — a narrow projection (argmax folds over literal
-    arrays: no join, no shuffle, no window), the one-stage plan the
-    bench runs.  Plan size is O(K*d) literals, so this path is gated
-    at ``CODEBOOK_LITERAL_MAX_K``; past that :func:`_assign_two_level`
-    over a broadcast codebook frame computes the identical result with
-    an O(1) plan.  Returns ``(vec_id, cell, emb_n)``."""
-    sup_arr = F.array(
-        *[_cand_struct(sid, sen) for sid, sen in sorted(sups) if sid in live]
-    )
+    """Two-level nearest-cell assignment for the flat regime: the super
+    codebook ``sups`` and each super-cell's children (``c2s`` maps a
+    child cell of ``cents`` to its super) ride in one
+    :func:`_codebook_row`, and two :func:`argmax_dot` folds pick the
+    super, then the cell among that super's children.  Only supers
+    that won at least one child are candidates (a vector routed to a
+    childless super would have no cell).  Same dots and tie rule as
+    :func:`_assign_two_level`, the join form the hierarchical regime
+    runs.  Returns ``(vec_id, cell, emb_n)``."""
     kids: dict[int, list] = {}
-    for cell, vec in sorted(cents):
-        kids.setdefault(c2s[cell], []).append(_cand_struct(cell, vec))
-    child_map = F.create_map(
-        *[
-            x
-            for sup, arr in kids.items()
-            for x in (F.lit(int(sup)).cast("long"), F.array(*arr))
-        ]
+    for cell, vec in cents:
+        kids.setdefault(c2s[cell], []).append((cell, vec))
+    book = _codebook_row(
+        spark, sups=[(s, v) for s, v in sups if s in kids], kids=kids
     )
-    cell = argmax_dot(
-        F.col("emb_n"),
-        F.element_at(child_map, argmax_dot(F.col("emb_n"), sup_arr)),
-    )
+    emb_n = F.col("emb_n")
+    cell = argmax_dot(emb_n, F.element_at("kids", argmax_dot(emb_n, F.col("sups"))))
     # persist the PRENORMALIZED vector only: the pair stage downstream
     # then runs one dot fold per candidate pair — no per-pair
     # divisions, and a ~half-size persisted frame
-    return emb.select("vec_id", cell.alias("cell"), "emb_n")
+    return emb.crossJoin(book).select("vec_id", cell.alias("cell"), "emb_n")
 
 
 def _sup_frame(spark: SparkSession, sups: list) -> DataFrame:
@@ -1180,18 +1187,15 @@ def _assign_two_level(
     childless super would vanish); level 2 joins each vector to its
     super's rows of the child codebook ``child_df`` ``(sup, cell,
     c_en)``.  Both levels are :func:`_argmax_join`, so the math is the
-    literal fold's (:func:`_assign_two_level_literal`): the same dot
+    flat regime's fold (:func:`_assign_two_level_row`): the same dot
     per candidate, the same smallest-id tie rule.
 
-    The codebook travels as relation DATA, not expression literals, so
-    plan size is O(1) in K.  The caller picks the level-2 shape by the
-    frame it passes: ``dedup_semantic_ivf``'s flat path a broadcast
-    K-row frame (VERDICT r7 item 2 — kilobytes to low MB), the
-    hierarchical path :func:`train_kmeans_hierarchical`'s
-    checkpointed frame, shuffle-joined on ``sup`` so each vector meets
-    only its super-cell's ~sqrt(K) children and nothing O(K) crosses
-    the driver or a broadcast.  Each level's partial-agg max shrinks
-    N*S / N*(K/S) candidate rows to N before its exchange on vec_id.
+    The hierarchical regime's child codebook is
+    :func:`train_kmeans_hierarchical`'s checkpointed frame,
+    shuffle-joined on ``sup`` so each vector meets only its
+    super-cell's ~sqrt(K) children and nothing O(K) crosses the driver
+    or a broadcast.  Each level's partial-agg max shrinks N*S /
+    N*(K/S) candidate rows to N before its exchange on vec_id.
     Returns ``(vec_id, cell, emb_n)``."""
     v2s = _argmax_join(emb, _sup_frame(spark, sups), "sup", "s_en")
     return _argmax_join(v2s, child_df, "cell", "c_en", on="sup").select(
@@ -1681,40 +1685,24 @@ def _pq_adc_oracle() -> str:
     """
 
 
-def _pq_lut(cen_lits: list, sub, m: int) -> Column:
+def _pq_lut(sub, m: int) -> Column:
     """Positional LUT for subspace ``m``: one dot per code, in
     position order.  A named closure, NOT an inline two-arg lambda —
     ``F.transform`` passes the ELEMENT INDEX as a second lambda
-    parameter, so a ``lambda cen, m=m`` capture silently receives the
+    parameter, so a ``lambda c, m=m`` capture silently receives the
     code index instead of the subspace (r8: every LUT sliced the
     wrong dims and the shortlist went near-random)."""
-    return F.transform(cen_lits[m], lambda cen: dot(sub(F.col("emb_n"), m), cen))
+    book = F.element_at(F.col("books"), m + 1)
+    return F.transform(book, lambda c: dot(sub(F.col("emb_n"), m), c["cen"]))
 
 
-def _pq_exprs(books: list) -> tuple:
+def _pq_exprs() -> tuple:
     """The corpus ``__subs__`` and ``codes`` array columns and the
-    per-query ``luts`` array column for the given trained books."""
+    per-query ``luts`` array column, over the ``books`` column of the
+    trained books' :func:`_codebook_row`."""
 
     def sub(col: Column, m: int) -> Column:
         return F.slice(col, m * PQ_SUB + 1, PQ_SUB)
-
-    # RANK-COMPRESS cell ids to 1-based POSITIONS (id-ascending, so
-    # position order == cell-id order and every tie-break stays
-    # aligned with the oracle's ORDER BY ..., cell).  Positions let
-    # each sub-codebook ship as one nested-array literal with no id
-    # field (:func:`_double_array`).
-    cen_lits = [
-        _double_array([cen for _, cen in sorted(books[m])]) for m in range(PQ_M)
-    ]
-
-    def cands(m: int) -> Column:
-        # arrays_zip names struct fields from the input aliases, so
-        # the argmax_dot fold sees the same (id, cen) shape as the
-        # per-struct literal form
-        return F.arrays_zip(
-            F.sequence(F.lit(1), F.lit(PQ_CODES)).cast("array<bigint>").alias("id"),
-            cen_lits[m].alias("cen"),
-        )
 
     # corpus encode reads PRE-SLICED subvectors (``subs_col`` below,
     # materialized in its own projection by the caller): with
@@ -1729,13 +1717,14 @@ def _pq_exprs(books: list) -> tuple:
     )
     codes_col = F.array(
         *[
-            argmax_dot(F.element_at(F.col("__subs__"), m + 1), cands(m))
+            argmax_dot(
+                F.element_at(F.col("__subs__"), m + 1),
+                F.element_at(F.col("books"), m + 1),
+            )
             for m in range(PQ_M)
         ]
     ).alias("codes")
-    luts_col = F.array(*[_pq_lut(cen_lits, sub, m) for m in range(PQ_M)]).alias(
-        "luts"
-    )
+    luts_col = F.array(*[_pq_lut(sub, m) for m in range(PQ_M)]).alias("luts")
     return subs_col, codes_col, luts_col
 
 
@@ -1759,11 +1748,11 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
       run — memoized per session under a key that carries the slice
       width);
     - encode: each corpus vector becomes 8 code ids (argmax dot vs the
-      32 sub-centroids, ties -> smaller id) — a NARROW literal-fold
-      projection (codebook is 8x32x8 = 2k doubles, far under
-      CODEBOOK_LITERAL_MAX_K concerns), after which the scoring scan
-      reads ~8 longs per vector instead of 64 doubles: that 8x scan
-      shrink is the entire point at 100 TB;
+      32 sub-centroids, ties -> smaller id) — a NARROW fold projection
+      over the 8x32x8 = 2k-double codebook, shipped as one broadcast
+      row (:func:`_codebook_row`), after which the scoring scan reads
+      ~8 longs per vector instead of 64 doubles: that 8x scan shrink
+      is the entire point at 100 TB;
     - ADC: each query precomputes a 32-entry lookup table per subspace
       (dot of its sub-vector against every sub-centroid — 256 tiny
       folds once per QUERY, not per pair); per (query, vector) the
@@ -1782,10 +1771,11 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vs sim_bruteforce_topk; the oracle pins every float.
 
     The BUILT plan is session-memoized (``memo_plan=True``):
-    assembling the PQ expression trees (:func:`_pq_exprs`: the eight
-    literal sub-codebooks and their argmax and LUT folds) costs about
-    0.5 s of py4j round trips, so only a session's first call pays
-    it.  Later calls get the same DataFrame object back, so their
+    assembling it (the codebook row and the argmax and LUT fold trees
+    of :func:`_pq_exprs`) took a median 0.68 s at sf0.01 with the
+    codebooks already trained (local[4]), mostly py4j round trips, so
+    only a session's first call pays it.  Later calls get the same
+    DataFrame object back, so their
     actions reuse the shuffle output the first action left behind:
     AQE replays only the final stage, not the parquet scans."""
     t = Tables(spark, sf_dir)
@@ -1796,7 +1786,7 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # launch no sizing job at all
     short_n = pq_shortlist(table_rows(t, "embeddings"))
 
-    # batched trainer: all 8 sub-codebooks in one 3-job pipeline,
+    # batched trainer: all 8 sub-codebooks in one 10-job run,
     # bit-identical per subspace to sequential
     # train_kmeans_centroid_values calls on the sliced frames (the
     # equality is test-pinned; the slice WIDTH rides in the memo key —
@@ -1806,19 +1796,29 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     books = train_pq_books(
         spark, emb, PQ_M, PQ_SUB, PQ_CODES, cache_key=(sf_dir,)
     )
-    subs_col, codes_col, luts_col = _pq_exprs(books)
+    # RANK-COMPRESS cell ids to 1-based POSITIONS (id-ascending, so
+    # position order == cell-id order and every tie-break stays
+    # aligned with the oracle's ORDER BY ..., cell): a code is then
+    # its LUT index
+    book = _codebook_row(
+        spark,
+        books=[list(enumerate((cen for _, cen in b), 1)) for b in books],
+    )
+    subs_col, codes_col, luts_col = _pq_exprs()
 
     # corpus -> 8 code positions: pre-slice the subvectors in their
     # own projection (multi-referenced, so they materialize once per
     # row), then one narrow projection of argmax folds over the
-    # literal sub-codebooks reading the slices by reference
-    codes = emb.select("vec_id", subs_col).select("vec_id", codes_col)
+    # codebook row's sub-codebooks reading the slices by reference
+    codes = emb.select("vec_id", subs_col).crossJoin(book).select("vec_id", codes_col)
 
     # queries -> per-subspace POSITIONAL LUTs (one dot per code, in
     # position order), computed once per query row; m-ascending array
     # order mirrors the codes array
     qlut = broadcast(
-        emb.filter(F.col("vec_id") < 10).select(
+        emb.filter(F.col("vec_id") < 10)
+        .crossJoin(book)
+        .select(
             F.col("vec_id").alias("query_id"),
             F.col("emb_n").alias("q_en"),
             luts_col,
@@ -2397,25 +2397,20 @@ def dedup_semantic_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     folds, bit-exact with no rounding at all).
 
     Scale design: this IS the SemDeDup cost model, now linear
-    end-to-end — at bench K the assignment is a NARROW projection
-    (argmax folds over plan-literal codebooks: no join, no shuffle,
-    no window, :func:`_assign_two_level_literal`); above
-    ``CODEBOOK_LITERAL_MAX_K`` the identical math runs as two
-    broadcast-join argmaxes (:func:`_assign_two_level` over a broadcast
-    child-codebook frame) so plan size stays O(1) while the K = N/125
-    schedule grows — the r7-verdict plan-serialization ceiling is gone
-    (the two paths are pinned hash-identical by
-    tests/test_extensions.py's forced-threshold equivalence test).
-    Past ``KMEANS_FLAT_TRAIN_MAX_K`` the codebook comes from
+    end-to-end — the assignment crosses the corpus with ONE broadcast
+    codebook row and projects two argmax folds over it
+    (:func:`_assign_two_level_row`: no shuffle, no window), so plan
+    size stays O(1) while the K = N/125 schedule grows.  Past
+    ``KMEANS_FLAT_TRAIN_MAX_K`` the codebook comes from
     :func:`train_kmeans_hierarchical` and :func:`_assign_two_level`
-    shuffle-joins its child frame instead.  Measured on the 10x sf0.1->sf1 step
-    (BENCH_scale_r08.md, same-session A/B): literal path 1.12->4.00 s
-    (3.6x — codegen/plan cost growing with K=16->160), broadcast path
-    1.79->2.11 s (1.2x); as shipped (threshold 128) the operator runs
-    literal below the crossover and broadcast above it, 1.12->2.11 s
-    = 1.9x per 10x data.  The pairwise stage is
-    confined within cells, so the candidate space is sum(|cell|^2)
-    not |corpus|^2.  **K scales with the
+    shuffle-joins its child frame instead.  Measured (eager
+    checkpoint of the assignment, codebook warm, local[4], medians of
+    11 alternating pairs): 0.48 s at sf0.01 K=16 and 0.41 s at sf0.1
+    K=16, where the former plan-literal path took 0.44 s and 0.45 s;
+    0.55 s at sf0.1 K=160 and 0.79 s at K=480, where the former
+    broadcast child-frame path took 0.96 s and 1.30 s.  The pairwise
+    stage is confined within cells, so the candidate space is
+    sum(|cell|^2) not |corpus|^2.  **K scales with the
     corpus**: K = max(16, ceil(N/125)) holds the target cell size at
     ~125, so the within-cell pairwise work stays LINEAR in N (the r5
     sf1 scale sample measured the fixed-16 version at 19x on a 10x
@@ -2447,33 +2442,14 @@ def dedup_semantic_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, emb, k_cells, cache_key=("kmeans", sf_dir)
         )
         sups, c2s = super_centroids(cents, math.ceil(math.sqrt(k_cells)))
-        # only super-cells that won at least one child are scoreable
-        # (a vector routed to a childless super would have no cell)
-        live = set(c2s.values())
-        if k_cells <= CODEBOOK_LITERAL_MAX_K:
-            return _assign_two_level_literal(emb, sups, c2s, cents, live)
-        child_df = broadcast(
-            spark.createDataFrame(
-                [(c2s[c], c, v) for c, v in cents],
-                schema="sup long, cell long, c_en array<double>",
-            )
-        )
-        live_sups = [(s, v) for s, v in sups if s in live]
-        return _assign_two_level(spark, emb, live_sups, child_df)
+        return _assign_two_level_row(spark, emb, sups, c2s, cents)
 
     # the threshold is part of the memo key: the assignment PATH
-    # (literal vs broadcast) is a function of it, and the equivalence
-    # test flips it mid-session — a keyless memo would replay the
+    # (flat vs hierarchical) is a function of it, and the
+    # hierarchical-regime tests flip it mid-session — a keyless memo would replay the
     # other path's checkpointed frame
     assigned = memoized_persist(
-        spark,
-        (
-            "semdedup_assigned",
-            sf_dir,
-            CODEBOOK_LITERAL_MAX_K,
-            KMEANS_FLAT_TRAIN_MAX_K,
-        ),
-        build,
+        spark, ("semdedup_assigned", sf_dir, KMEANS_FLAT_TRAIN_MAX_K), build
     )
     a, b = assigned.alias("a"), assigned.alias("b")
     dup = (

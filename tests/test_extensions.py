@@ -5,9 +5,12 @@ and the multimodal UDF's byte_mean (excluded from the SQL oracle)."""
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
+import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
@@ -211,6 +214,37 @@ def test_pq_batched_trainer_matches_sequential(spark, sf_dir):
             cache_key=("pq_seq_twin", sf_dir, m, PQ_SUB),
         )
         assert batched[m] == seq, f"subspace {m} codebook drifted"
+
+
+def test_trainers_start_fewer_jobs_than_window_argmax(spark, sf_dir):
+    """A fresh Lloyd training assigns with argmax_dot over one broadcast
+    codebook row: no per-iteration shuffle for a row_number window and
+    no K x m-row codebook frame.  The window form started 12 jobs for
+    each of these two trainings at sf0.001 and sf0.01 (counted by job
+    group); each must now start fewer."""
+    import uuid
+
+    from pandas_redshift_spark.operators.similarity import (
+        PQ_CODES,
+        PQ_M,
+        PQ_SUB,
+        _emb_double,
+        train_kmeans_centroid_values,
+        train_pq_books,
+    )
+    from tests.conftest import jobs_of
+
+    window_form_jobs = 12
+    emb = _emb_double(Tables(spark, sf_dir)).select("vec_id", "emb_n")
+    key = ("trainer_jobs", uuid.uuid4().hex)
+    _, pq_jobs = jobs_of(
+        spark, lambda: train_pq_books(spark, emb, PQ_M, PQ_SUB, PQ_CODES, key)
+    )
+    _, flat_jobs = jobs_of(
+        spark, lambda: train_kmeans_centroid_values(spark, emb, 16, key)
+    )
+    assert pq_jobs < window_form_jobs, pq_jobs
+    assert flat_jobs < window_form_jobs, flat_jobs
 
 
 def test_trained_centroids_tighten_cells_vs_id_codebook(spark, sf_dir):
@@ -1557,73 +1591,67 @@ def test_psi_drift_invariants(spark, sf_dir):
     assert total == Tables(spark, sf_dir).events.count()
 
 
-def test_semdedup_broadcast_assignment_matches_literal(spark, sf_dir, monkeypatch):
-    """The big-K broadcast-codebook assignment path (VERDICT r7 item 2)
-    must be HASH-IDENTICAL to the plan-literal path it replaces above
-    CODEBOOK_LITERAL_MAX_K: same floats, same strict-greater/smallest-
-    id argmax, so flipping the threshold may not move a single row.
-    Exercised end-to-end through dedup_semantic_ivf (the memo key
-    carries the threshold, so both paths really build)."""
+def _semdedup_codebook(spark, sf_dir, k):
+    """``(emb, sups, c2s, cents)``: the flat-regime two-level codebook
+    dedup_semantic_ivf assigns with, trained at ``k`` cells."""
     import pandas_redshift_spark.operators.similarity as sim
 
-    lit = sorted(map(tuple, sim.dedup_semantic_ivf(spark, sf_dir).collect()))
-    monkeypatch.setattr(sim, "CODEBOOK_LITERAL_MAX_K", 0)
-    bc = sorted(map(tuple, sim.dedup_semantic_ivf(spark, sf_dir).collect()))
-    assert lit == bc
-    assert len(lit) > 0
+    emb = sim._emb_double(Tables(spark, sf_dir)).select("vec_id", "emb_n")
+    cents = sim.train_kmeans_centroid_values(
+        spark, emb, k, cache_key=("kmeans", sf_dir)
+    )
+    sups, c2s = sim.super_centroids(cents, math.ceil(math.sqrt(k)))
+    return emb, sups, c2s, cents
 
 
-def test_semdedup_broadcast_plan_carries_no_codebook_literals(spark, sf_dir):
-    """The whole point of the broadcast path: plan SIZE is O(1) in K.
-    The literal path embeds every centroid as a named_struct literal
-    (O(K) occurrences); the broadcast path's plan must stay free of
-    that expansion — the codebook travels as broadcast relation data,
-    and the only struct constructors left are the two argmax
-    max(struct(sim, nid)) aggregates.  Audited on the assignment
-    dedup_semantic_ivf runs past the threshold: _assign_two_level over
-    a broadcast child-codebook frame."""
+@pytest.mark.parametrize("k", [16, 100])
+def test_semdedup_row_assignment_matches_join_form(spark, sf_dir, k):
+    """The flat regime's codebook-row assignment (two argmax_dot folds
+    over one broadcast row) must be ROW-IDENTICAL to _assign_two_level,
+    the join + max(struct) form the hierarchical regime keeps, on the
+    same trained codebook: same floats, same strict-greater/smallest-id
+    argmax, so not a single vector may change cell."""
     from pyspark.sql.functions import broadcast
 
     import pandas_redshift_spark.operators.similarity as sim
-    from pandas_redshift_spark.session import Tables
 
-    t = Tables(spark, sf_dir)
-    emb = sim._emb_double(t).select("vec_id", "emb_n")
-    cents = sim.train_kmeans_centroid_values(
-        spark, emb, 16, cache_key=("kmeans", sf_dir)
-    )
-    sups, c2s = sim.super_centroids(cents, 4)
-    live = set(c2s.values())
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
-
-    lit_plan = (
-        sim._assign_two_level_literal(emb, sups, c2s, cents, live)
-        ._jdf.queryExecution()
-        .explainString(mode)
-    )
+    emb, sups, c2s, cents = _semdedup_codebook(spark, sf_dir, k)
+    row_form = sim._assign_two_level_row(spark, emb, sups, c2s, cents)
     child_df = broadcast(
         spark.createDataFrame(
             [(c2s[c], c, v) for c, v in cents],
             schema="sup long, cell long, c_en array<double>",
         )
     )
+    live = set(c2s.values())
     live_sups = [(s, v) for s, v in sups if s in live]
-    bc_plan = (
-        sim._assign_two_level(spark, emb, live_sups, child_df)
+    join_form = sim._assign_two_level(spark, emb, live_sups, child_df)
+    got = sorted((r.vec_id, r.cell) for r in row_form.collect())
+    want = sorted((r.vec_id, r.cell) for r in join_form.collect())
+    assert got == want
+    assert len({c for _, c in got}) > 1
+
+
+def test_semdedup_row_plan_carries_no_codebook_literals(spark, sf_dir):
+    """The codebook row keeps the assignment plan O(1) in K: the
+    centroids travel as broadcast relation data, so no centroid double
+    is printed in the plan (the deleted literal path printed every dim
+    of every centroid verbatim).  The one join is the nested-loop join
+    with the single codebook row."""
+    import pandas_redshift_spark.operators.similarity as sim
+
+    emb, sups, c2s, cents = _semdedup_codebook(spark, sf_dir, 16)
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
+    plan = (
+        sim._assign_two_level_row(spark, emb, sups, c2s, cents)
         ._jdf.queryExecution()
         .explainString(mode)
     )
-    # the literal path's struct constructors constant-fold into plain
-    # literal arrays, so the tell is the centroid DOUBLES themselves:
-    # every dim of the first child centroid is printed verbatim in the
-    # literal plan and absent from the broadcast plan (measured at
-    # K=16/d=64: ~29.6k chars literal vs ~3.6k broadcast)
-    sentinel = str(cents[0][1][0])
-    assert sentinel in lit_plan, lit_plan[:2000]
-    assert sentinel not in bc_plan, bc_plan
-    assert "BroadcastHashJoin" in bc_plan or "BroadcastNestedLoopJoin" in bc_plan
-    # and the broadcast plan must not be the one paying O(K*d) text
-    assert len(bc_plan) < len(lit_plan) / 4
+    jdouble = spark._jvm.java.lang.Double
+    for _, vec in cents:
+        for x in vec:  # as the plan would print it
+            assert jdouble.toString(x) not in plan, (x, plan[:2000])
+    assert plan.count("BroadcastNestedLoopJoin") == 1, plan
 
 
 def test_super_trainer_rejects_extreme_k(spark):

@@ -1,7 +1,8 @@
-"""Constant arrays in similarity plans: codebooks and hyperplanes reach
-Spark as one SQL array literal each (``similarity._double_array``),
-never as ``F.lit(list)``, which PySpark expands into one py4j ``lit``
-call per element."""
+"""Constant arrays in similarity plans: the LSH hyperplanes reach Spark
+as one SQL array literal each (``similarity._double_array``), trained
+codebooks as one broadcast row of relation data
+(``similarity._codebook_row``), and neither as ``F.lit(list)``, which
+PySpark expands into one py4j ``lit`` call per element."""
 
 from __future__ import annotations
 
@@ -42,16 +43,17 @@ def test_double_array_round_trips_bit_for_bit(spark, values):
     assert _bits(row.first()["a"]) == _bits(values)
 
 
-@pytest.mark.parametrize(
-    "name",
-    ["sim_lsh_topk", "sim_pairs_threshold", "dedup_semantic_ivf", "sim_pq_adc_topk"],
-)
+_HYPERPLANE_OPS = ("sim_lsh_topk", "sim_pairs_threshold")
+
+
+@pytest.mark.parametrize("name", [*_HYPERPLANE_OPS, "dedup_semantic_ivf", "sim_pq_adc_topk"])
 def test_constant_arrays_never_pass_a_list_to_lit(spark, sf_dir, monkeypatch, name):
-    """Building each operator that embeds codebooks or hyperplanes
-    makes no ``F.lit`` call on a list or tuple, and does reach
-    ``_double_array`` (``dedup_semantic_ivf`` on its literal path, the
-    default at this scale).  The memoized plan and checkpointed
-    frames are dropped first so the constant sites really run."""
+    """Building each operator that uses hyperplanes or codebooks makes
+    no ``F.lit`` call on a list or tuple.  Only the hyperplane
+    operators reach ``_double_array``; the codebook operators ship
+    their codebooks as a row and build no constant array.  The
+    memoized plan and checkpointed frames are dropped first so the
+    constant sites really run."""
     drop_memo("frame", "persist")
     real_lit, real_array = F.lit, sim._double_array
     lists, arrays = [], []
@@ -69,4 +71,4 @@ def test_constant_arrays_never_pass_a_list_to_lit(spark, sf_dir, monkeypatch, na
     monkeypatch.setattr(sim, "_double_array", double_array)
     getattr(sim, name)(spark, sf_dir)
     assert lists == [], f"{name}: F.lit called on {len(lists)} lists"
-    assert arrays, f"{name}: built no constant array"
+    assert bool(arrays) == (name in _HYPERPLANE_OPS), f"{name}: constant arrays {arrays}"

@@ -359,10 +359,8 @@ _AUDIT_WAIVERS = {
     "sim_bruteforce_topk": {"bnlj": "10 broadcast query vectors; corpus streams one pass (exact baseline by design)"},
     "sim_knn_classify": {"bnlj": "10 broadcast query vectors"},
     "sim_ivf_topk": {"bnlj": "10 broadcast query vectors vs centroid table"},
-    "sim_pq_adc_topk": {"bnlj": "10 broadcast query LUTs vs the 8x-smaller codes frame; 64xQ-row shortlist broadcast back for exact re-rank"},
-    # dedup_semantic_ivf lost its bnlj waiver in r7: the two-level
-    # assignment is a narrow literal-fold projection (no join at all),
-    # and the pair stage self-joins on the equi cell key.
+    "sim_pq_adc_topk": {"bnlj": "10 broadcast query LUTs vs the 8x-smaller codes frame; encode and LUTs each cross the single codebook row; 64xQ-row shortlist broadcast back for exact re-rank"},
+    "dedup_semantic_ivf": {"bnlj": "assignment build: the broadcast side is the single codebook row (two argmax_dot folds read it); the pair stage self-joins on the equi cell key"},
     "pipe_decontaminate_semantic": {"bnlj": "tiny benchmark vector set broadcast against the streamed corpus — the decontamination shape, corpus never shuffles"},
     # -- deliberately-quadratic oracle baselines (LSH twins are the defaults) --
     "dedup_embedding_cosine_exact": {"bnlj": "O(n^2) ORACLE BASELINE; registered default is the LSH-bucketed twin"},
