@@ -3,22 +3,21 @@ streaming extension, promoted from pytest-only to oracle-checked in
 round 4).
 
 Each query here runs a REAL streaming job — ``readStream`` over the
-events parquet, Trigger.AvailableNow, parquet file sink (distributed
-executor-side writes; the driver-heap memory sink wedged at sf30 —
-see streaming/windows.drain), block until the stream drains — and
-returns the sink directory read back, so the external driver
-hash-compares an actual Structured Streaming execution against batch
-ANSI SQL in DuckDB.  AvailableNow processes exactly the data present
-at start and then stops (the batch-parity trigger); ``complete``
-output mode emits every window at the final micro-batch, so watermark
-eviction cannot drop rows from the comparison (late-data semantics are
-covered separately by the differential tests in
-tests/test_streaming.py, which drive multi-batch timelines through the
-same plans).
+events parquet, Trigger.AvailableNow, block until the stream drains —
+through streaming/windows.drain, which keeps the micro-batches as
+local checkpoints on the executors and returns them as a frame, so
+the external driver hash-compares an actual Structured Streaming
+execution against batch ANSI SQL in DuckDB.  AvailableNow processes
+exactly the data present at start and then stops (the batch-parity
+trigger); ``complete`` output mode emits every window at the final
+micro-batch, so watermark eviction cannot drop rows from the
+comparison (late-data semantics are covered separately by the
+differential tests in tests/test_streaming.py, which drive multi-batch
+timelines through the same plans).
 
 Scale note: these plans are the production streaming shapes — the
-file sink and AvailableNow trigger are the test harness, swapped for
-Kafka + a real sink in production without touching the aggregation
+checkpoint sink and AvailableNow trigger are the test harness, swapped
+for Kafka + a real sink in production without touching the aggregation
 plan.  Reference has no streaming surface at all (psycopg2 batch SQL
 only, core.py:82-87).
 """
@@ -30,8 +29,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pandas_redshift_spark.operators.registry import query
 from pandas_redshift_spark.streaming.windows import (
+    adaptive_state_width,
+    attribution_join,
     drain,
     read_events_stream,
+    run_foreachbatch_upsert,
+    session_aggregate,
     sliding_counts,
     stream_dedup,
     tumbling_counts,
@@ -52,11 +55,14 @@ from pandas_redshift_spark.streaming.windows import (
 def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour tumbling-window counts computed by an actual streaming
     job (streaming/windows.tumbling_counts plan: watermark + window
-    aggregate), drained with AvailableNow into a parquet sink — the
-    driver's hash check therefore certifies the STREAMING execution
-    path, not a batch twin."""
+    aggregate), drained with AvailableNow into the checkpoint sink —
+    the driver's hash check therefore certifies the STREAMING
+    execution path, not a batch twin.  State width: 256 KB of source
+    per store, as streaming_session_value, capped at drain's default."""
     ev = read_events_stream(spark, sf_dir)
-    return drain(tumbling_counts(ev), "complete")
+    cap = min(spark.sparkContext.defaultParallelism, 64)
+    parts = adaptive_state_width(spark, sf_dir, 256 << 10, cap)
+    return drain(tumbling_counts(ev), "complete", state_partitions=parts)
 
 
 @query(
@@ -147,11 +153,6 @@ def streaming_session_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     than the batch twin's lag formulation (``>``); with nanosecond
     event times the corpus never lands on the boundary, and the sim
     check at three SFs pins the agreement."""
-    from pandas_redshift_spark.streaming.windows import (
-        adaptive_state_width,
-        session_aggregate,
-    )
-
     ev = read_events_stream(spark, sf_dir)
     # Session-window state grows with data (~1 store key per session),
     # but each RocksDB store instance pays a fixed per-batch
@@ -184,8 +185,8 @@ def streaming_user_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame
     streaming/stateful.py) run for real and drained with AvailableNow
     — this is the one driver-verified query that exercises the
     Arrow-batched executor-side Python path end to end (function
-    pickled by value to workers, update-mode state store, parquet
-    sink).  The update-mode sink appends one row per user per
+    pickled by value to workers, update-mode state store, checkpoint
+    sink).  The update-mode sink keeps one row per user per
     micro-batch, so the sink is reduced to the FINAL row per user —
     ``max_by(…, n_events)`` works because the running count is
     strictly monotone per key — making the comparison correct even if
@@ -232,11 +233,6 @@ def streaming_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     equivalence to the batch join is exact.  In production the same
     plan runs against Kafka with the drain sink swapped out;
     reference has no streaming surface at all (core.py:82-87)."""
-    from pandas_redshift_spark.streaming.windows import (
-        adaptive_state_width,
-        attribution_join,
-    )
-
     ev = read_events_stream(spark, sf_dir)
     # a stream-stream join runs FOUR state stores per partition (two
     # per side), so the per-partition store cost is 4x an aggregation's
@@ -348,8 +344,6 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     so the batch-split invariance test can drive the SAME code through
     a forced multi-batch timeline (maxFilesPerTrigger=1 over a split
     events dir)."""
-    from pandas_redshift_spark.streaming.windows import run_foreachbatch_upsert
-
     ev = read_events_stream(spark, sf_dir)
     final = run_foreachbatch_upsert(ev)
     return final.select(

@@ -16,6 +16,7 @@ dropped deterministically rather than growing state forever.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
 import uuid
@@ -46,10 +47,11 @@ def event_time_ltz(df: DataFrame) -> DataFrame:
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events table (one-file-at-a-time
-    micro-batches; in production this would be Kafka/Kinesis with the
-    same downstream plan).  ts arrives as TIMESTAMP(NANOS) parquet ->
-    long (nanosAsLong, Spark 3.x) or TIMESTAMP_NTZ (Spark 4.x) ->
+    """File-source stream over the events table.  No
+    ``maxFilesPerTrigger`` is set, so an AvailableNow drain reads every
+    file in one micro-batch (in production this would be Kafka/Kinesis
+    with the same downstream plan).  ts arrives as TIMESTAMP(NANOS)
+    parquet -> long (nanosAsLong, Spark 3.x) or TIMESTAMP_NTZ (Spark 4.x) ->
     event-time TIMESTAMP (LTZ, UTC session) because watermarks operate
     on TimestampType."""
     configure_session(spark)
@@ -341,22 +343,21 @@ def drain(
     stream_df: DataFrame, output_mode: str, state_partitions: int | None = None
 ) -> DataFrame:
     """Run a streaming plan over all input available now
-    (Trigger.AvailableNow) into a fresh parquet directory under the
-    application's :func:`scratch_root`, stop the query, and return
-    the directory read back with the stream's own schema (so a
-    zero-row drain reads as an empty frame).
+    (Trigger.AvailableNow), stop the query, and return its output.
 
-    Every mode writes on the executors, so result size never reaches
+    One ``foreachBatch`` sink keeps each micro-batch, by batch id, as
+    an eager local checkpoint: no file is written and no row reaches
     the driver (the memory sink collected every row there and wedged
-    the stateful drains at 30M events, BENCH_scale_r12.md):
-
-    - ``append``: the native file sink.  Its ``_spark_metadata`` commit
-      log hides an uncommitted task's files from the read-back.
-    - ``complete``: ``foreachBatch`` with ``mode("overwrite")``; each
-      batch rewrites the whole result so far.
-    - ``update``: ``foreachBatch`` with ``mode("append")``: one row per
-      updated key per batch, which callers reduce to the last row per
-      key.  A batch replayed after a sink failure would append twice.
+    the stateful drains at 30M events, BENCH_scale_r12.md).
+    ``complete`` keeps only the last batch and releases the blocks of
+    the one it replaces; ``append`` and ``update`` return the union in
+    batch order (``update`` has one row per updated key per batch,
+    which callers reduce to the last row per key).  A replayed batch
+    replaces its first run instead of appending twice; a drain that
+    ran no batch returns an empty frame with the stream's schema.  The
+    blocks stay on the executors, in ``MEMORY_AND_DISK``, with no
+    lineage: losing an executor fails later reads of the returned
+    frame, the trade :func:`session.memoized_persist` makes too.
 
     ``state_partitions`` is the state width.  A streaming query fixes
     ``spark.sql.shuffle.partitions`` into its state layout at start,
@@ -365,11 +366,11 @@ def drain(
     31.6 s at sf0.01, and about 7 s sized to the cores.  The default,
     the core count capped at 64, measured as good as a small fixed
     width at every scale tried.  This width and :data:`_DRAIN_CONFS`
-    hold only while the query runs (:func:`scoped_confs`), so batch
-    plans in the same session keep their own."""
+    hold only while the query runs (:func:`scoped_confs`).  The
+    batches run in Structured Streaming's clone of the session (AQE
+    off), so the result is returned as a frame of the caller's."""
     spark = stream_df.sparkSession
-    out_dir = os.path.join(scratch_root(spark), f"stream_{uuid.uuid4().hex[:12]}")
-    os.makedirs(out_dir)
+    ckpt = os.path.join(scratch_root(spark), f"stream_{uuid.uuid4().hex[:12]}_ckpt")
     if state_partitions is None:
         state_partitions = min(spark.sparkContext.defaultParallelism, 64)
     no_data = output_mode == "append" and _append_needs_no_data_batches(stream_df)
@@ -378,26 +379,36 @@ def drain(
         "spark.sql.shuffle.partitions": str(state_partitions),
         _NO_DATA_KEY: "true" if no_data else "false",
     }
+    batches: dict[int, DataFrame] = {}
+
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        if output_mode == "complete":
+            # DataFrame.unpersist only drops cache-manager entries; a
+            # checkpoint's blocks belong to its RDD
+            for old in batches.values():
+                old._jdf.queryExecution().analyzed().rdd().unpersist(False)
+            batches.clear()
+        batches[batch_id] = batch_df.localCheckpoint(eager=True)
+
     with scoped_confs(spark, confs):
-        if output_mode == "append":
-            writer = stream_df.writeStream.format("parquet").option("path", out_dir)
-        else:
-            batch_mode = "overwrite" if output_mode == "complete" else "append"
-
-            def _sink(batch_df: DataFrame, batch_id: int) -> None:
-                batch_df.write.mode(batch_mode).parquet(out_dir)
-
-            writer = stream_df.writeStream.foreachBatch(_sink)
         q = (
-            writer.outputMode(output_mode)
-            .option("checkpointLocation", out_dir + "_ckpt")
+            stream_df.writeStream.foreachBatch(_sink)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
     # the query has terminated; stop() releases its listener bookkeeping
     q.stop()
-    return spark.read.schema(stream_df.schema).parquet(out_dir)
+    if not batches:
+        return spark.createDataFrame([], stream_df.schema)
+    out = functools.reduce(DataFrame.union, (batches[i] for i in sorted(batches)))
+    plan = out._jdf.queryExecution().analyzed()
+    return DataFrame(
+        spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(spark._jsparkSession, plan),
+        spark,
+    )
 
 
 def run_foreachbatch_upsert(events: DataFrame) -> DataFrame:
@@ -409,7 +420,7 @@ def run_foreachbatch_upsert(events: DataFrame) -> DataFrame:
     ``rmtree(current)`` then ``rename(next, current)``, not atomic: a
     crash between the two steps leaves no ``current/``.  Returns the
     final merged snapshot read LAZILY from the sink directory — the
-    directory IS the table, exactly like :func:`drain` (r14: the old
+    directory IS the table (r14: the old
     eager ``localCheckpoint`` re-materialized the entire final
     dimension into the block manager just so the staging dir could be
     reclaimed immediately — wasted work at bench shape and a

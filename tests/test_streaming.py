@@ -113,6 +113,26 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir, events_stream)
     assert got == want
 
 
+def _one_file_per_batch(tmp_path, frames):
+    """A source directory holding each of ``frames`` as one parquet
+    file, with increasing mtimes, so that a file stream with
+    ``maxFilesPerTrigger=1`` reads them in list order, one per
+    micro-batch."""
+    import glob
+    import os
+    import shutil
+
+    src = tmp_path / "batches"
+    src.mkdir()
+    for i, frame in enumerate(frames):
+        part = tmp_path / f"part{i}"
+        frame.coalesce(1).write.parquet(str(part))
+        dst = str(src / f"b{i}.parquet")
+        shutil.copy(glob.glob(str(part / "part-*.parquet"))[0], dst)
+        os.utime(dst, (1_700_000_000 + 10 * i,) * 2)
+    return str(src)
+
+
 def test_watermark_evicts_state_and_drops_late_data(spark, tmp_path):
     """Watermark semantics end-to-end over 3 micro-batches: batch 1
     advances the event-time high mark; batch 2's late rows still merge
@@ -124,40 +144,22 @@ def test_watermark_evicts_state_and_drops_late_data(spark, tmp_path):
     final row per window, and stragglers past the lag never resurrect
     evicted state."""
     import datetime as dt
-    import glob as _glob
-    import os
-    import shutil as _shutil
-    import time as _time
 
     from pandas_redshift_spark.streaming.windows import tumbling_counts
 
-    src = str(tmp_path / "stream_src")
-    os.makedirs(src)
-
-    def write_batch(name, rows):
-        df = spark.createDataFrame(rows, "ts timestamp, event_type string, value double")
-        df.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / name))
-        part = _glob.glob(str(tmp_path / name / "part-*.parquet"))[0]
-        _shutil.copy(part, f"{src}/{name}.parquet")
-        _time.sleep(1.2)  # distinct mtimes -> deterministic batch order
-
+    schema = "ts timestamp, event_type string, value double"
     t = lambda h, m: dt.datetime(2024, 1, 1, h, m)  # noqa: E731
-    # batch 1: 3 on-time events in the 08:00 window + the 11:00 event
-    # that pushes the watermark to 10:30 (30-minute delay)
-    write_batch(
-        "b1",
+    batches = [
+        # batch 1: 3 on-time events in the 08:00 window + the 11:00
+        # event that pushes the watermark to 10:30 (30-minute delay)
         [(t(8, 5), "view", 1.0), (t(8, 10), "view", 1.0), (t(8, 20), "view", 1.0), (t(11, 0), "view", 1.0)],
-    )
-    # batch 2: late for 08:00, but inside the one-batch watermark lag
-    write_batch("b2", [(t(8, 30), "view", 1.0), (t(8, 45), "view", 1.0)])
-    # batch 3: late for 08:00 AFTER the watermark took effect -> dropped
-    write_batch("b3", [(t(8, 50), "view", 1.0), (t(8, 55), "view", 1.0)])
-
-    stream = (
-        spark.readStream.schema("ts timestamp, event_type string, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+        # batch 2: late for 08:00, but inside the one-batch watermark lag
+        [(t(8, 30), "view", 1.0), (t(8, 45), "view", 1.0)],
+        # batch 3: late for 08:00 AFTER the watermark took effect -> dropped
+        [(t(8, 50), "view", 1.0), (t(8, 55), "view", 1.0)],
+    ]
+    src = _one_file_per_batch(tmp_path, [spark.createDataFrame(b, schema) for b in batches])
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
     q = (
         tumbling_counts(stream, watermark="30 minutes")
         .writeStream.format("memory")
@@ -188,6 +190,17 @@ def test_watermark_evicts_state_and_drops_late_data(spark, tmp_path):
     assert dropped >= 1, dropped
 
 
+def _split_events_stream(spark, tmp_path, n=3):
+    """The sf0.001 events as an ``n``-file source read one file per
+    micro-batch, rows split by ``event_id % n``."""
+    from pandas_redshift_spark.session import Tables
+
+    ev = Tables(spark, "/root/testdata/sf0.001").events
+    src = _one_file_per_batch(tmp_path, [ev.filter(F.col("event_id") % n == i) for i in range(n)])
+    schema = spark.read.parquet(src).schema
+    return event_time_ltz(spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src))
+
+
 def test_foreachbatch_upsert_invariant_under_batch_split(spark, tmp_path):
     """The foreachBatch upsert must land on the SAME final table no
     matter how the input splits into micro-batches (the associativity
@@ -198,28 +211,12 @@ def test_foreachbatch_upsert_invariant_under_batch_split(spark, tmp_path):
     from pyspark.sql import Window
 
     from pandas_redshift_spark.session import Tables
-    from pandas_redshift_spark.streaming.windows import (
-        event_time_ltz,
-        run_foreachbatch_upsert,
-    )
+    from pandas_redshift_spark.streaming.windows import run_foreachbatch_upsert
 
-    sf_dir = "/root/testdata/sf0.001"
-    ev = Tables(spark, sf_dir).events
-    # split by event_id mod 3 into three files, one per micro-batch
-    src = tmp_path / "events_split"
-    for i in range(3):
-        ev.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(src))
-    schema = spark.read.parquet(str(src)).schema
-    stream = event_time_ltz(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
+    ev = Tables(spark, "/root/testdata/sf0.001").events
     got = {
         (r.user_id, r.event_id)
-        for r in run_foreachbatch_upsert(stream).collect()
+        for r in run_foreachbatch_upsert(_split_events_stream(spark, tmp_path)).collect()
     }
     w = Window.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
     want = {
@@ -259,13 +256,30 @@ def test_attribution_join_accepts_compound_horizon(spark, sf_dir, events_stream)
     assert df.schema["purchase_value"].dataType.typeName() in ("double", "decimal")
 
 
-def test_run_to_files_modes_match_memory_sink(spark, sf_dir, events_stream):
-    """``drain`` (the scale-safe parquet drain, VERDICT r12 item 2) must
-    produce exactly Spark's memory sink's multiset in every output
-    mode: append (native file sink), complete (foreachBatch
-    overwrite), and update (foreachBatch append).  The memory sink is
-    the oracle here, so it is started inline, not through the
-    package."""
+def _memory_sink_rows(spark, plan, mode, name):
+    """The columns and rows Spark's memory sink holds after an
+    AvailableNow run of ``plan`` in ``mode`` (complete: the last batch;
+    append and update: every batch's rows), and the number of batches
+    that read input."""
+    q = (
+        plan.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    mem = spark.sql(f"SELECT * FROM {name}")
+    cols, rows = mem.columns, mem.collect()
+    spark.catalog.dropTempView(name)
+    return cols, rows, sum(1 for p in q.recentProgress if p["numInputRows"])
+
+
+def test_drain_modes_match_memory_sink(spark, sf_dir, events_stream):
+    """``drain`` (the checkpoint sink, VERDICT r12 item 2) must produce
+    exactly Spark's memory sink's multiset in every output mode:
+    append, complete and update.  The memory sink is the oracle here,
+    so it is started inline, not through the package."""
     from pandas_redshift_spark.streaming.stateful import user_running_totals
 
     cases = [
@@ -274,31 +288,82 @@ def test_run_to_files_modes_match_memory_sink(spark, sf_dir, events_stream):
         ("update", user_running_totals(events_stream), "f_update"),
     ]
     for mode, plan, name in cases:
-        filed = drain(plan, mode)
-        q = (
-            plan.writeStream.format("memory")
-            .queryName(name + "_mem")
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        mem = spark.sql(f"SELECT * FROM {name}_mem")
-        assert sorted(filed.columns) == sorted(mem.columns), mode
-        a = sorted(map(str, filed.collect()))
-        b = sorted(map(str, mem.collect()))
-        assert a == b, f"{mode}: file drain != memory sink ({len(a)} vs {len(b)} rows)"
-        spark.catalog.dropTempView(name + "_mem")
+        drained = drain(plan, mode)
+        cols, mem, _ = _memory_sink_rows(spark, plan, mode, name + "_mem")
+        assert sorted(drained.columns) == sorted(cols), mode
+        a = sorted(map(str, drained.collect()))
+        b = sorted(map(str, mem))
+        assert a == b, f"{mode}: drain != memory sink ({len(a)} vs {len(b)} rows)"
 
 
-def test_run_to_files_zero_row_drain_readable(spark, events_stream):
-    """A drain that emits nothing must still read back as an empty
-    frame with the right schema (the read uses the stream's schema
-    explicitly — an empty directory has nothing to infer from)."""
+def test_multi_batch_drain_matches_memory_sink(spark, tmp_path):
+    """Over three micro-batches, a complete-mode drain keeps only the
+    last batch (the memory sink's final result) and releases the
+    checkpoints it replaced; an update-mode drain keeps every batch's
+    rows, in the memory sink's multiset."""
+    from pandas_redshift_spark.streaming.stateful import user_running_totals
+
+    stream = _split_events_stream(spark, tmp_path)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    cases = [
+        ("complete", tumbling_counts(stream), "mb_complete"),
+        ("update", user_running_totals(stream), "mb_update"),
+    ]
+    for mode, plan, name in cases:
+        before = persisted().size()
+        drained = drain(plan, mode)
+        kept = persisted().size() - before
+        _, mem, n_batches = _memory_sink_rows(spark, plan, mode, name)
+        assert n_batches == 3, n_batches
+        assert kept == (1 if mode == "complete" else 3), (mode, kept)
+        a = sorted(map(str, drained.collect()))
+        assert a == sorted(map(str, mem)), mode
+    # the update drain kept more than one batch: users recur across them
+    assert drained.count() > drained.select("user_id").distinct().count()
+
+
+def test_drain_writes_no_output_directory(spark, events_stream):
+    """A drain leaves nothing in the scratch root but its streaming
+    checkpoint, and returns a frame of the caller's session whose plan
+    reads checkpoint blocks (``LogicalRDD``), not a parquet scan."""
+    import os
+
+    from pandas_redshift_spark.session import scratch_root
+
+    root = scratch_root(spark)
+
+    def sink_dirs():
+        return {
+            d
+            for d in os.listdir(root)
+            if d.startswith("stream_") and not d.startswith("stream_src_")
+        }
+
+    before = sink_dirs()
+    got = drain(tumbling_counts(events_stream), "complete")
+    new = sink_dirs() - before
+    assert len(new) == 1 and new.pop().endswith("_ckpt")
+    qe = got._jdf.queryExecution()
+    assert qe.analyzed().getClass().getSimpleName() == "LogicalRDD"
+    assert "FileScan" not in qe.executedPlan().toString()
+    assert got._jdf.sparkSession().equals(spark._jsparkSession)
+    assert got.count() > 0
+
+
+def test_zero_row_drain_is_an_empty_frame(spark, events_stream, tmp_path):
+    """A drain that emits nothing returns an empty frame with the
+    stream's schema: both when its batch kept no row and when no batch
+    ran at all (an empty source, so the schema comes from the stream
+    itself)."""
     none = stream_dedup(events_stream).filter(F.lit(False))
     got = drain(none, "append")
     assert got.count() == 0
     assert got.schema == none.schema
+    (tmp_path / "empty_src").mkdir()
+    idle = spark.readStream.schema(events_stream.schema).parquet(str(tmp_path / "empty_src"))
+    got = drain(idle, "append")
+    assert got.count() == 0
+    assert got.schema == idle.schema
 
 
 def test_append_windowed_aggregate_emits_final_windows(spark, tmp_path):
