@@ -268,7 +268,8 @@ def pandas_to_redshift(
     DROP/CREATE -> COPY.  Not atomic: like the reference, whose failed
     COPY leaves an empty table, an overwrite drops the old table
     first (v1 ``saveAsTable(mode="overwrite")``), so a load that fails
-    mid-job leaves no table (ROADMAP.md item 1)."""
+    mid-job leaves no table (ROADMAP.md, "One save path that stages
+    and then swaps")."""
     _require_bridge().write_table(
         data_frame,
         redshift_table_name,

@@ -64,8 +64,9 @@ class QuerySpec:
     #: (py4j round-trips re-assembling the identical expression trees;
     #: table in OPTIMIZATION_r15.md), and never on operators whose
     #: fn() performs per-invocation side effects (streaming drains,
-    #: sinks, DML) — those must re-execute their build.  Visible per
-    #: query in ``session.MEMO_HITS["frame"]``.
+    #: sinks, DML) — those must re-execute their build.  Hits are
+    #: counted per memo family, not per query: every memo_plan hit
+    #: adds to ``session.MEMO_HITS["frame"]``.
     memo_plan: bool = False
 
 

@@ -1523,10 +1523,11 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Build: K=16 coarse centroids TRAINED by deterministic sampled
     spherical k-means (:func:`train_kmeans_centroids` — seeded from
     the sample, two Lloyd iterations, oracle-replayed step for step).
-    Every vector is assigned to its nearest centroid (one broadcast
-    pass, no shuffle).  Probe: each query searches only its nprobe=4
-    nearest cells, so the scored candidate set is ~nprobe/K of the
-    corpus instead of all of it."""
+    Every vector is assigned to its nearest centroid by a cross join
+    with the 16 centroids and a ``row_number`` window partitioned by
+    ``vec_id``, so each call shuffles the corpus once.  Probe: each
+    query searches only its nprobe=4 nearest cells, so the scored
+    candidate set is ~nprobe/K of the corpus instead of all of it."""
     t = Tables(spark, sf_dir)
     emb = _emb_double(t).select("vec_id", "emb_n")
     k_cells, nprobe = 16, 4

@@ -102,7 +102,8 @@ def sink_overwrite_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     copies per key.  The overwrite is not atomic: a path
     ``mode("overwrite")`` deletes the old files before its job runs, so
     a job that fails leaves an empty dir, like the reference's
-    drop+commit-then-COPY (ROADMAP.md item 1)."""
+    drop+commit-then-COPY (ROADMAP.md, "One save path that stages and
+    then swaps")."""
     n = Tables(spark, sf_dir).nation
     path = _stage_dir(spark, "sink_overwrite_append")
     n.write.mode("overwrite").parquet(path)
@@ -287,7 +288,8 @@ def dml_update_delete_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's reserved list; both reach Redshift via exec_commit,
     core.py:307-309) expressed as partition rewrites — filter-out for
     DELETE, conditional recompute for UPDATE, one overwrite (not
-    atomic: the old files are deleted first, ROADMAP.md item 1).
+    atomic: the old files are deleted first, ROADMAP.md, "One save
+    path that stages and then swaps").
     This is the parquet-lake pattern under Delta/Iceberg's MERGE; at
     100 TB you'd partition first and rewrite only affected partitions
     (see sink_partitioned_prune)."""
@@ -331,9 +333,10 @@ def dml_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE/upsert on an immutable lake (matched -> update, not
     matched -> insert): changes win over base via anti-join + union,
     one overwrite that deletes the old files first (not atomic,
-    ROADMAP.md item 1) — the parquet equivalent of Delta/Iceberg
-    MERGE INTO and of a Redshift staging-table merge (the reference's
-    append-vs-overwrite flag, core.py:297-300, cannot express this).
+    ROADMAP.md, "One save path that stages and then swaps") — the
+    parquet equivalent of Delta/Iceberg MERGE INTO and of a Redshift
+    staging-table merge (the reference's append-vs-overwrite flag,
+    core.py:297-300, cannot express this).
     At 100 TB: partition both sides on the key and rewrite only
     partitions containing changed keys (see sink_partitioned_prune)."""
     n = Tables(spark, sf_dir).nation
@@ -387,7 +390,8 @@ def dml_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     version), then derive valid_from/valid_to/is_current with
     lead() over the change rows, and land the dimension with one
     overwrite like the other dml_ ops (it deletes the old files first,
-    so it is not atomic, ROADMAP.md item 1).
+    so it is not atomic, ROADMAP.md, "One save path that stages and
+    then swaps").
 
     Scale design: both windows (the dedupe lag and the interval
     lead) share the user_id partitioning, so the whole build is ONE
@@ -646,11 +650,11 @@ def source_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     every database it has opened until JVM shutdown, so one database
     per application is the cap.  Repeat calls overwrite the same table
     (write_table's default overwrite drops the old table first, so it
-    is not atomic, ROADMAP.md item 1).  ``derby.stream.error.file`` is
-    pointed into the staging dir so ``derby.log`` never lands in
-    whatever cwd the driver happens to run from (the property is read
-    at Derby engine boot; setting it later in the same JVM is a
-    harmless no-op).
+    is not atomic, ROADMAP.md, "One save path that stages and then
+    swaps").  ``derby.stream.error.file`` is pointed into the staging
+    dir so ``derby.log`` never lands in whatever cwd the driver
+    happens to run from (the property is read at Derby engine boot;
+    setting it later in the same JVM is a harmless no-op).
 
     Single-JVM boundary of the STAND-IN (not the plan): Spark's JDBC
     writer/reader run as executor tasks, and embedded Derby admits

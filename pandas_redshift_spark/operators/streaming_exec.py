@@ -32,8 +32,8 @@ from pandas_redshift_spark.streaming.windows import (
     adaptive_state_width,
     attribution_join,
     drain,
+    latest_per_user,
     read_events_stream,
-    run_foreachbatch_upsert,
     session_aggregate,
     sliding_counts,
     stream_dedup,
@@ -324,28 +324,19 @@ def streaming_enrich_static(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming UPSERT sink via ``foreachBatch`` — the canonical
-    production stream-to-lake pattern (the bare-parquet equivalent of
-    Delta/Iceberg ``MERGE INTO`` from a stream): each micro-batch
-    reduces to its latest row per user, merges against the current
-    dimension snapshot (union + keep-latest), and lands via a
-    staging-dir swap (``rmtree(current)`` then ``rename(next,
-    current)``: not atomic, a crash between the two steps leaves no
-    ``current/``).  The final table is one row per user with
-    their latest event — correct for ANY micro-batch split of the
-    input (the merge is associative keep-latest), which is exactly
-    why foreachBatch upserts are multi-batch-safe where blind appends
-    are not.  In production the swap becomes a transactional-table
-    MERGE and the trigger a continuous one; the per-batch plan is
-    unchanged.  Reference can only drop+reload whole tables
-    (core.py:215-216) and has no streaming surface at all.
-
-    The merge core lives in streaming/windows.run_foreachbatch_upsert
-    so the batch-split invariance test can drive the SAME code through
-    a forced multi-batch timeline (maxFilesPerTrigger=1 over a split
-    events dir)."""
-    ev = read_events_stream(spark, sf_dir)
-    final = run_foreachbatch_upsert(ev)
+    """Streaming UPSERT: one row per user with their latest event, the
+    streaming counterpart of Delta/Iceberg ``MERGE INTO`` from a
+    stream.  The plan is streaming/windows.latest_per_user, a
+    keep-latest ``max(struct(ts, event_id, ...))`` per user: the state
+    store holds the dimension and merges each micro-batch into it, and
+    the final ``complete``-mode batch of :func:`drain` is the upserted
+    table.  Because ``max`` merges associatively, the result is the
+    same for ANY micro-batch split of the input (pinned by the
+    batch-split test in tests/test_streaming.py), which is what makes
+    an upsert multi-batch-safe where a blind append is not.  Reference
+    can only drop+reload whole tables (core.py:215-216) and has no
+    streaming surface at all."""
+    final = drain(latest_per_user(read_events_stream(spark, sf_dir)), "complete")
     return final.select(
         "user_id",
         F.col("event_id").alias("last_event_id"),

@@ -291,7 +291,7 @@ class SparkRedshiftBridge:
         ``saveAsTable(mode="overwrite")``, which drops the existing
         table before the job writes: a load that fails mid-job leaves
         no table at all, like the reference's DROP-then-COPY (see
-        ROADMAP.md, "Make failed loads safe").
+        ROADMAP.md, "One save path that stages and then swaps").
 
         An interleaved ``sortkey`` over two or more integer/float
         columns of a pandas frame gets its Morton key from

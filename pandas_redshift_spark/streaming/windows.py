@@ -19,10 +19,11 @@ from __future__ import annotations
 import functools
 import hashlib
 import os
+import shutil
 import uuid
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 from pandas_redshift_spark.session import (
     configure_session,
@@ -96,6 +97,21 @@ def tumbling_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
             "n_events",
             "total_value",
         )
+    )
+
+
+def latest_per_user(events: DataFrame) -> DataFrame:
+    """Keep-latest dimension: each user's last event, by ``ts`` and
+    then ``event_id``.  ``max`` of a struct compares its fields in
+    order, so this is the batch ``row_number() OVER (PARTITION BY
+    user_id ORDER BY ts DESC, event_id DESC) = 1``; the state store
+    merges it across micro-batches, and since ``max`` is associative
+    any split of the input lands on the same rows.  No watermark: the
+    state is one row per user, drained in ``complete`` mode."""
+    return (
+        events.groupBy("user_id")
+        .agg(F.max(F.struct("ts", "event_id", "event_type", "value")).alias("last"))
+        .select("user_id", "last.*")
     )
 
 
@@ -357,7 +373,10 @@ def drain(
     ran no batch returns an empty frame with the stream's schema.  The
     blocks stay on the executors, in ``MEMORY_AND_DISK``, with no
     lineage: losing an executor fails later reads of the returned
-    frame, the trade :func:`session.memoized_persist` makes too.
+    frame, the trade :func:`session.memoized_persist` makes too.  The
+    query's checkpoint directory (offsets, commits, state changelog)
+    is deleted once the query has stopped, also when it failed: the
+    returned frame reads the checkpointed blocks, not that directory.
 
     ``state_partitions`` is the state width.  A streaming query fixes
     ``spark.sql.shuffle.partitions`` into its state layout at start,
@@ -390,17 +409,23 @@ def drain(
             batches.clear()
         batches[batch_id] = batch_df.localCheckpoint(eager=True)
 
-    with scoped_confs(spark, confs):
-        q = (
-            stream_df.writeStream.foreachBatch(_sink)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    # the query has terminated; stop() releases its listener bookkeeping
-    q.stop()
+    q = None
+    try:
+        with scoped_confs(spark, confs):
+            q = (
+                stream_df.writeStream.foreachBatch(_sink)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+    finally:
+        # the query has terminated; stop() releases its listener
+        # bookkeeping, and nothing reads the checkpoint after it
+        if q is not None:
+            q.stop()
+        shutil.rmtree(ckpt, ignore_errors=True)
     if not batches:
         return spark.createDataFrame([], stream_df.schema)
     out = functools.reduce(DataFrame.union, (batches[i] for i in sorted(batches)))
@@ -409,82 +434,3 @@ def drain(
         spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(spark._jsparkSession, plan),
         spark,
     )
-
-
-def run_foreachbatch_upsert(events: DataFrame) -> DataFrame:
-    """foreachBatch UPSERT sink: reduce each micro-batch to its latest
-    row per user, merge against the current snapshot (union +
-    keep-latest — associative, so ANY micro-batch split of the input
-    lands on the same final table), write the merge to ``next/`` and
-    swap it in (never overwrite the dir being read).  The swap is
-    ``rmtree(current)`` then ``rename(next, current)``, not atomic: a
-    crash between the two steps leaves no ``current/``.  Returns the
-    final merged snapshot read LAZILY from the sink directory — the
-    directory IS the table (r14: the old
-    eager ``localCheckpoint`` re-materialized the entire final
-    dimension into the block manager just so the staging dir could be
-    reclaimed immediately — wasted work at bench shape and a
-    memory-pressure source at scale).  Each invocation gets a fresh
-    uuid dir under ``fb_upsert/`` in the application's
-    :func:`scratch_root`, so earlier invocations' returned frames
-    stay readable.  The bare-parquet equivalent of a
-    streaming MERGE INTO; at a real deployment the swap is a
-    transactional-table commit and the trigger continuous — the
-    per-batch plan is unchanged."""
-    import shutil
-
-    spark = events.sparkSession
-    upsert_root = os.path.join(scratch_root(spark), "fb_upsert")
-    os.makedirs(upsert_root, exist_ok=True)
-    # bound the per-session accumulation (ADVICE r14): keep only the
-    # most recent invocations' snapshots — a long session re-invoking
-    # the upsert otherwise piles one dimension copy per call onto disk
-    # until the application stops.  K=8 leaves plenty of slack for
-    # callers that hold a returned (lazily-read) frame across a few
-    # later invocations; holding one longer than that needs its own
-    # copy.
-    keep = 8
-    old = sorted(
-        (os.path.join(upsert_root, d) for d in os.listdir(upsert_root)),
-        key=os.path.getmtime,
-    )
-    for stale in old[: max(0, len(old) - (keep - 1))]:
-        shutil.rmtree(stale, ignore_errors=True)
-    stage_root = os.path.join(upsert_root, uuid.uuid4().hex[:12])
-    os.makedirs(stage_root, exist_ok=True)
-    cur_dir = os.path.join(stage_root, "current")
-    next_dir = os.path.join(stage_root, "next")
-
-    def latest_per_user(df: DataFrame) -> DataFrame:
-        w = Window.partitionBy("user_id").orderBy(
-            F.col("ts").desc(), F.col("event_id").desc()
-        )
-        return (
-            df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("user_id", "event_id", "ts", "event_type", "value")
-        )
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        merged = latest_per_user(batch_df)
-        if os.path.isdir(cur_dir):
-            prev = batch_df.sparkSession.read.parquet(cur_dir)
-            merged = latest_per_user(prev.unionByName(merged))
-        merged.write.mode("overwrite").parquet(next_dir)
-        shutil.rmtree(cur_dir, ignore_errors=True)
-        os.rename(next_dir, cur_dir)
-
-    width = str(min(spark.sparkContext.defaultParallelism, 64))
-    with scoped_confs(spark, {"spark.sql.shuffle.partitions": width}):
-        q = (
-            events.writeStream.foreachBatch(upsert)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(stage_root, "ckpt"))
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
-    # lazy read of the committed snapshot; checkpoint + next are gone,
-    # only the final current/ parquet stays until the application stops
-    shutil.rmtree(os.path.join(stage_root, "ckpt"), ignore_errors=True)
-    return spark.read.parquet(cur_dir)

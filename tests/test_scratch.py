@@ -23,16 +23,16 @@ def test_staged_files_stay_under_scratch_root(spark, sf_dir, tmp_path, monkeypat
     from pandas_redshift_spark.operators.registry import all_queries
     from pandas_redshift_spark.session import scratch_root
     from pandas_redshift_spark.sources.bridge import connect
-    from pandas_redshift_spark.streaming.windows import (
-        read_events_stream,
-        run_foreachbatch_upsert,
-    )
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     queries = all_queries()
-    for name in ("streaming_tumbling_counts", "source_csv_roundtrip", "source_jdbc_roundtrip"):
+    for name in (
+        "streaming_tumbling_counts",
+        "streaming_foreachbatch_upsert",
+        "source_csv_roundtrip",
+        "source_jdbc_roundtrip",
+    ):
         assert queries[name].fn(spark, sf_dir).count() > 0, name
-    assert run_foreachbatch_upsert(read_events_stream(spark, sf_dir)).count() > 0
     staged = connect(spark).stage_csv(pd.DataFrame({"k": [1, 2]}), "scratch_probe")
 
     assert os.listdir(tmp_path) == []
@@ -45,6 +45,14 @@ def test_staged_files_stay_under_scratch_root(spark, sf_dir, tmp_path, monkeypat
         if os.path.islink(p) and os.readlink(p) == target
     ]
     assert len(links) == 1, links
+    # the drains deleted their checkpoints, and the upsert stages no
+    # snapshot directory of its own
+    left = [
+        d
+        for d in os.listdir(root)
+        if d == "fb_upsert" or (d.startswith("stream_") and d.endswith("_ckpt"))
+    ]
+    assert left == [], left
 
 
 _CHILD = """

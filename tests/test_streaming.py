@@ -202,22 +202,20 @@ def _split_events_stream(spark, tmp_path, n=3):
 
 
 def test_foreachbatch_upsert_invariant_under_batch_split(spark, tmp_path):
-    """The foreachBatch upsert must land on the SAME final table no
+    """The streaming upsert must land on the SAME final table no
     matter how the input splits into micro-batches (the associativity
-    claim in its docstring): drive the SAME merge core through a
+    claim in its docstring): drain the SAME keep-latest plan over a
     3-file source with maxFilesPerTrigger=1 (3 micro-batches) and
     compare against the batch argmax."""
     import pyspark.sql.functions as F
     from pyspark.sql import Window
 
     from pandas_redshift_spark.session import Tables
-    from pandas_redshift_spark.streaming.windows import run_foreachbatch_upsert
+    from pandas_redshift_spark.streaming.windows import latest_per_user
 
     ev = Tables(spark, "/root/testdata/sf0.001").events
-    got = {
-        (r.user_id, r.event_id)
-        for r in run_foreachbatch_upsert(_split_events_stream(spark, tmp_path)).collect()
-    }
+    plan = latest_per_user(_split_events_stream(spark, tmp_path))
+    got = {(r.user_id, r.event_id) for r in drain(plan, "complete").collect()}
     w = Window.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
     want = {
         (r.user_id, r.event_id)
@@ -322,32 +320,43 @@ def test_multi_batch_drain_matches_memory_sink(spark, tmp_path):
     assert drained.count() > drained.select("user_id").distinct().count()
 
 
-def test_drain_writes_no_output_directory(spark, events_stream):
-    """A drain leaves nothing in the scratch root but its streaming
-    checkpoint, and returns a frame of the caller's session whose plan
-    reads checkpoint blocks (``LogicalRDD``), not a parquet scan."""
+def _drain_dirs(spark):
+    """The per-drain entries in the scratch root (the shared
+    ``stream_src_*`` source links excluded)."""
     import os
 
     from pandas_redshift_spark.session import scratch_root
 
-    root = scratch_root(spark)
+    return {
+        d
+        for d in os.listdir(scratch_root(spark))
+        if d.startswith("stream_") and not d.startswith("stream_src_")
+    }
 
-    def sink_dirs():
-        return {
-            d
-            for d in os.listdir(root)
-            if d.startswith("stream_") and not d.startswith("stream_src_")
-        }
 
-    before = sink_dirs()
+def test_drain_writes_no_output_directory(spark, events_stream):
+    """A drain leaves nothing in the scratch root, neither an output
+    directory nor, once its query has stopped, its streaming
+    checkpoint; it returns a frame of the caller's session whose plan
+    reads checkpoint blocks (``LogicalRDD``), not a parquet scan, and
+    still counts its rows with the checkpoint directory gone."""
+    before = _drain_dirs(spark)
     got = drain(tumbling_counts(events_stream), "complete")
-    new = sink_dirs() - before
-    assert len(new) == 1 and new.pop().endswith("_ckpt")
+    assert _drain_dirs(spark) - before == set()
     qe = got._jdf.queryExecution()
     assert qe.analyzed().getClass().getSimpleName() == "LogicalRDD"
     assert "FileScan" not in qe.executedPlan().toString()
     assert got._jdf.sparkSession().equals(spark._jsparkSession)
     assert got.count() > 0
+
+
+def test_failed_drain_deletes_its_checkpoint(spark, events_stream):
+    """A drain whose query fails raises, and still deletes the
+    checkpoint directory its query had started to write."""
+    before = _drain_dirs(spark)
+    with pytest.raises(Exception, match="drain probe failure"):
+        drain(events_stream.select(F.raise_error(F.lit("drain probe failure"))), "append")
+    assert _drain_dirs(spark) - before == set()
 
 
 def test_zero_row_drain_is_an_empty_frame(spark, events_stream, tmp_path):
